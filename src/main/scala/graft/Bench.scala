@@ -143,13 +143,15 @@ object Bench {
     * discoverable from the other main's output too. */
   private[graft] val SidecarPath = "/tmp/graft_bench_last.json"
 
-  /** Writes the roll's one-line JSON artifacts: the sidecar ALWAYS (see
-    * [[SidecarPath]]), and the committed round record `BENCH_full.json`
-    * only for full runs — a selective iteration run must not clobber the
-    * round record (the r6 convention, unchanged). Factored out of main
-    * so BenchGuardSpec can pin the sidecar contract. */
-  private[graft] def persistArtifacts(line: String, fullRun: Boolean): Unit = {
-    try java.nio.file.Files.write(java.nio.file.Paths.get(SidecarPath),
+  /** Writes the roll's one-line JSON artifacts: the sidecar at `sidecar`
+    * ALWAYS (main passes [[SidecarPath]]), and the committed round record
+    * `BENCH_full.json` only for full runs — a selective iteration run must
+    * not clobber the round record (the r6 convention, unchanged). Factored
+    * out of main so BenchGuardSpec can pin the sidecar contract against a
+    * temp file, never the real sidecar. */
+  private[graft] def persistArtifacts(line: String, fullRun: Boolean,
+      sidecar: String): Unit = {
+    try java.nio.file.Files.write(java.nio.file.Paths.get(sidecar),
       (line + "\n").getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"BENCH SIDECAR: $e") }
     if (fullRun)
@@ -993,7 +995,7 @@ object Bench {
       s""""spread":${fmtMap(_._2._2)},"cold":${fmtMap(_._2._4)},""" +
       s""""queries":${fmtMap(_._2._1)},"tail":$tail}"""
     println(line)
-    persistArtifacts(line, fullRun = args.isEmpty)
+    persistArtifacts(line, fullRun = args.isEmpty, SidecarPath)
     spark.stop()
   }
 }

@@ -5,10 +5,13 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd+ args: dump only the named queries (iteration aid;
-    // oracle_sql.json still carries every oracle so check.py stays usable)
+    // optional 3rd+ args: dump only the named queries, by full name or
+    // key prefix (`d20` selects `d20_pq_ann`) — an iteration aid;
+    // oracle_sql.json still carries every oracle so check.py stays usable
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
+    def selected(name: String) =
+      only.isEmpty || only.exists(k => name == k || name.startsWith(k + "_"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -26,7 +29,7 @@ object Verify {
       "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -252,9 +252,8 @@ object Dedup {
     // (d11 3.36 -> 2.5 s warm; AQE-off at the session's static 32
     // partitions measured 9.4 s — the adaptation needs both halves):
     //  - the edge base materializes FIRST, under the caller's conf (its
-    //    upstream is the caller's scale-proportional pair pipeline), via a
-    //    lazy checkpoint whose materializing count is also the size probe
-    //    (the t37 r19 fusion pattern — no extra job);
+    //    upstream is the caller's scale-proportional pair pipeline),
+    //    behind a LoopConf.barrier (checkpoint + size probe, one job);
     //  - the loop's shuffles then run at ~64k edge rows per partition,
     //    clamped to the session default, mirroring statically what AQE's
     //    coalescing would decide per-stage — but decided ONCE instead of
@@ -264,11 +263,8 @@ object Dedup {
     //    per-round planning latency), so the adaptation can only kick in
     //    when the label table is provably small.
     val spark = pairs.sparkSession
-    val edges = pairs.select(col("a"), col("b"))
-      .union(pairs.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint(eager = false)
-    // materializes the checkpoint AND probes the loop size in one job
-    val nEdges = edges.queryExecution.toRdd.count()
+    val (edges, nEdges) = LoopConf.barrier(pairs.select(col("a"), col("b"))
+      .union(pairs.select(col("b").as("a"), col("a").as("b"))))
 
     def loop(): DataFrame = {
       var labels = edges.select(col("a").as("id")).distinct()

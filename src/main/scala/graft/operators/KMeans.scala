@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Deterministic Lloyd k-means codebook trainer for the IVF coarse
-  * quantizer (SURVEY.md §2.F).
+/** Deterministic integer-exact Lloyd k-means trainers for the IVF coarse
+  * quantizer and the PQ subspace codebooks (SURVEY.md §2.F).
   *
   * Design for scale: each iteration is one broadcast of the K×dims
   * codebook (tiny by definition), one map-side argmin assignment pass over
@@ -16,33 +16,9 @@ import org.apache.spark.sql.functions._
   *
   * Input: (vec_id: long, q: array<bigint>) quantized vectors (same
   * representation the search operators use). Output codebook:
-  * (cent_id: long, cq: array<double>).
+  * (cent_id: long, cq: array<bigint>).
   */
 object KMeans {
-
-  def fit(spark: SparkSession, vectors: DataFrame, k: Int, iters: Int): DataFrame = {
-    require(k > 0 && iters >= 0, "k and iters must be positive")
-    val wId = Window.orderBy(col("vec_id").asc)
-    var codebook = vectors.orderBy("vec_id").limit(k)
-      .withColumn("cent_id", row_number().over(wId).cast("long") - 1)
-      .select(col("cent_id"), expr("transform(q, x -> CAST(x AS DOUBLE))").as("cq"))
-
-    (0 until iters).foreach { _ =>
-      val assigned = assign(vectors, codebook)
-      // element-wise mean per centroid: explode dims, average, re-assemble
-      // in dim order (struct sort keeps determinism; collect_list alone
-      // would not be ordered)
-      codebook = assigned
-        .select(col("cent_id"), posexplode(col("q")).as(Seq("dim", "x")))
-        .groupBy("cent_id", "dim")
-        .agg(avg(col("x")).as("m"))
-        .groupBy("cent_id")
-        .agg(collect_list(struct(col("dim"), col("m"))).as("dm"))
-        .select(col("cent_id"),
-          expr("transform(array_sort(dm), s -> s.m)").as("cq"))
-    }
-    codebook
-  }
 
   /** Integer-exact Lloyd trainer: centroids stay BIGINT (element-wise
     * `floor(sum/count)` means), distances are exact integer ||x−c||², and
@@ -50,9 +26,8 @@ object KMeans {
     * verbatim in another SQL engine, so a query built on this codebook can
     * be oracle-checked END TO END including its training (see
     * d10_embed_ivf_trained, whose DuckDB oracle re-runs this loop as
-    * generated CTEs). Same scale shape as [[fit]]: per iteration one
-    * codebook broadcast, one map-side argmin pass, one groupBy mean.
-    * Output codebook: (cent_id: long, cq: array<bigint>).
+    * generated CTEs). Per iteration: one codebook broadcast, one map-side
+    * argmin pass, one groupBy mean.
     */
   def fitQuantized(vectors: DataFrame, k: Int, iters: Int): DataFrame = {
     require(k > 0 && iters >= 0, "k and iters must be positive")
@@ -62,12 +37,15 @@ object KMeans {
       .select(col("cent_id"), col("q").as("cq"))
       .localCheckpoint()
     (0 until iters).foreach { _ =>
-      codebook = lloydStep(vectors, codebook).localCheckpoint()
+      codebook = centroidMeans(assignQuantized(vectors, codebook)
+        .select(col("cent_id"), posexplode(col("q")).as(Seq("dim", "x"))))
+        .localCheckpoint()
     }
     codebook
   }
 
-  /** One exact-integer Lloyd iteration: assign, then re-center with
+  /** The Lloyd re-centering step shared by every trainer here: rows
+    * (keys…, cent_id, dim, x) → codebook (keys…, cent_id, cq) with
     * element-wise `floor(sum/count)` means. floor over DOUBLE division,
     * not integer `div`: Spark's div truncates toward zero while floor is
     * engine-portable for the negative means quantized embeddings produce.
@@ -79,14 +57,14 @@ object KMeans {
    * The codebook is k×dims — localCheckpoint materializes it executor-side
    * per iteration (the d11 connected-components pattern), so training runs
    * once and consumers read a tiny materialized table. */
-  private def lloydStep(vectors: DataFrame, codebook: DataFrame): DataFrame =
-    assignQuantized(vectors, codebook)
-      .select(col("cent_id"), posexplode(col("q")).as(Seq("dim", "x")))
-      .groupBy("cent_id", "dim")
-      .agg(expr("CAST(floor(CAST(sum(x) AS DOUBLE) / count(*)) AS BIGINT)").as("m"))
-      .groupBy("cent_id")
-      .agg(collect_list(struct(col("dim"), col("m"))).as("dm"))
-      .select(col("cent_id"), expr("transform(array_sort(dm), s -> s.m)").as("cq"))
+  private def centroidMeans(rows: DataFrame, keys: String*): DataFrame = {
+    val cell = (keys :+ "cent_id").map(col)
+    rows.groupBy(cell :+ col("dim"): _*)
+      .agg(expr("CAST(floor(CAST(sum(x) AS DOUBLE) / count(*)) AS BIGINT)").as("mm"))
+      .groupBy(cell: _*)
+      .agg(collect_list(struct(col("dim"), col("mm"))).as("dm"))
+      .select(cell :+ expr("transform(array_sort(dm), s -> s.mm)").as("cq"): _*)
+  }
 
   /** Deterministic hash-sample predicate (the t05 hash-mod pattern —
     * engine-portable, oracle-replayable): keeps ~`pct`% of vectors.
@@ -116,80 +94,123 @@ object KMeans {
     // materializing at this size; at 100 TB persist it explicitly before
     // calling this if the input scan is expensive
     val sample = vectors.filter(expr(sampleSql(samplePct)))
-    // k from a 1-row count aggregate (an O(1) driver scalar — the same
-    // class as cost's spec helper, not data movement), then init rows via
-    // orderBy+limit = TakeOrderedAndProject (per-partition heaps). The r6
-    // verdict fix: the old single global window sorted the ENTIRE sample
-    // (~1% of the corpus — ~1 TB at 100 TB) through one task per codebook
-    // build. The rank window below sits on the already-limit(kk) input,
-    // exactly the fitQuantized shape. Values are unchanged — first kk
-    // rows by vec_id, cent_id = rank-1 — so every trained query stays
-    // oracle-hash-identical.
+    // k from a 1-row count aggregate (an O(1) driver scalar, not data
+    // movement); fitQuantized's init then takes the first kk rows via
+    // orderBy+limit = TakeOrderedAndProject (per-partition heaps), so no
+    // window ever sorts the whole sample (the r6 verdict fix)
     val n = sample.agg(count(lit(1))).head().getLong(0)
     val kk = math.max(2L, n / targetClusterSize)
     require(kk <= Int.MaxValue, s"k=$kk exceeds supported codebook size")
     // the init and every Lloyd iteration are sample-sized — run them at a
-    // partition count derived from the measured sample (LoopConf r20:
-    // AQE's per-stage re-planning and the session's static partition
-    // count are the dominant cost of these tiny iterative plans at
-    // bench scale; big samples keep the caller's conf)
-    LoopConf.withSized(sample.sparkSession, n) {
-      val wId = Window.orderBy(col("vec_id").asc)
-      var codebook = sample.orderBy("vec_id").limit(kk.toInt)
-        .withColumn("cent_id", row_number().over(wId).cast("long") - 1)
-        .select(col("cent_id"), col("q").as("cq"))
+    // partition count derived from the measured sample (see LoopConf)
+    LoopConf.withSized(sample.sparkSession, n)(fitQuantized(sample, kk.toInt, iters))
+  }
+
+  /** Product-quantization codebooks: one [[fitQuantized]] codebook per
+    * subspace, all `subspaces` of them trained in ONE Lloyd loop with the
+    * subspace id as part of every key. Subspaces are independent, so the
+    * math is identical to `subspaces` separate runs (the d20/d36 oracles
+    * replay them per subspace) at 2 jobs per iteration instead of
+    * 2 × subspaces. Init is fitQuantized's, per subspace: the first `k`
+    * rows by vec_id get ids 0..k-1.
+    *
+    * Input: the training sample's subvector rows (vec_id, m, sq), m in
+    * `0 until subspaces`. It is materialized once behind a
+    * [[LoopConf.barrier]] whose count also sizes the loop conf. Output:
+    * (cm, cent_id, cq), k cells per subspace, cm the subspace id.
+    *
+    * Throws unless every (cm, cent_id) cell survives training: a flattened
+    * ADC lookup `pd[m * k + code]` over this codebook would read the WRONG
+    * cell after a centroid empties (or NULL past the end — which Spark
+    * nulls and DuckDB's list_sum skips: an engine divergence). The check
+    * counts the checkpointed codebook — no extra distributed work.
+    */
+  def fitQuantizedSubspaces(subs: DataFrame, subspaces: Int, k: Int,
+      iters: Int): DataFrame = {
+    require(subspaces > 0 && k > 0 && iters >= 0,
+      "subspaces, k and iters must be positive")
+    graft.plans.GraftFunctions.register(subs.sparkSession)
+    val (rows, n) = LoopConf.barrier(subs)
+    val cb = LoopConf.withSized(subs.sparkSession, n) {
+      var codebook = rows
+        .withColumn("rn", row_number().over(Window.partitionBy("m").orderBy("vec_id")))
+        .filter(col("rn") <= k)
+        .select(col("m").as("cm"), (col("rn") - 1).cast("long").as("cent_id"),
+          col("sq").as("cq"))
         .localCheckpoint()
       (0 until iters).foreach { _ =>
-        codebook = lloydStep(sample, codebook).localCheckpoint()
+        codebook = centroidMeans(
+          nearest(rows, "sq", codebook, "m" -> "cm")
+            .select(col("m").as("cm"), col("near_id").as("cent_id"),
+              posexplode(col("sq")).as(Seq("dim", "x"))),
+          "cm").localCheckpoint()
       }
       codebook
     }
+    val nCb = cb.count()
+    require(nCb == subspaces.toLong * k,
+      s"fitQuantizedSubspaces: codebook has $nCb cells, expected " +
+        s"${subspaces.toLong * k} — a centroid emptied during Lloyd")
+    cb
   }
 
-  /* Argmin shape: the broadcast crossJoin emits each vector's k scored
-   * rows CONSECUTIVELY IN ONE PARTITION, so a groupBy(vec_id) min_by
-   * collapses n×k → n rows map-side before any exchange — the shuffle
-   * moves n assignment rows, not n×k scored rows (a window
-   * row_number/filter would shuffle all n×k). The min_by ordering key
-   * struct(dist, cent_id) is unique per group, so ties on distance still
-   * break deterministically on centroid id. */
+  /* Argmin shape (r20): graft_argmin_sqdist evaluates the whole argmin
+   * inside one codegen scan projection over the codebook collapsed to a
+   * single broadcast row — no n×k row explosion, no sort, no aggregation,
+   * no exchange (a crossJoin + min_by(struct) argmin plans a
+   * SortAggregate over the n×k rows: min_by's struct buffer is not
+   * hash-aggregable). The codebook arrays sort ascending by cent_id, so
+   * the expression's lowest-index tie-break is the struct(dist, cent_id)
+   * ordering; cent_id is restored by indexing the aligned id array (never
+   * assumed dense — a Lloyd iteration can empty a centroid). */
+
+  /** ArgMinSqDist's packing: `dist * Shift + index`. */
+  private val Shift = 1L << 21
+
+  /** Each row's nearest centroid — the one argmin every codebook
+    * consumer shares. `vec` is the row's BIGINT vector column; the
+    * (keys…, cent_id, cq) codebook is [[collapsed]] and broadcast as one
+    * row, or as one row per key group when `on` pairs row columns with
+    * (differently named) codebook key columns. Returns the row's own
+    * columns plus `near_id` (the winning cent_id), `near_dist` (exact
+    * ||vec − cq||²) and `near_cq` (the winning centroid).
+    */
+  def nearest(rows: DataFrame, vec: String, codebook: DataFrame,
+      on: (String, String)*): DataFrame = {
+    graft.plans.GraftFunctions.register(rows.sparkSession)
+    val cb = broadcast(collapsed(codebook, on.map(_._2): _*))
+    val joined =
+      if (on.isEmpty) rows.crossJoin(cb)
+      else rows.join(cb, on.map { case (r, c) => col(r) === col(c) }.reduce(_ && _))
+    joined.withColumn("__p", expr(s"graft_argmin_sqdist($vec, cbs)"))
+      .withColumn("__i", expr(s"CAST(__p % $Shift AS INT) + 1"))
+      .select(rows.columns.map(col) ++ Seq(
+        expr("element_at(cbids, __i)").as("near_id"),
+        expr(s"__p div $Shift").as("near_dist"),
+        expr("element_at(cbs, __i)").as("near_cq")): _*)
+  }
 
   /** Integer nearest-centroid assignment for [[fitQuantized]] codebooks:
     * exact BIGINT ||x − c||², centroid id as tie-break.
     */
-  def assignQuantized(vectors: DataFrame, codebook: DataFrame): DataFrame = {
-    // r20 argmin-in-projection (guide §4 + the plan audit): the old
-    // crossJoin → n×k scored rows → min_by(struct, struct(dist, cent_id))
-    // shape planned a SortAggregate — min_by's struct buffer is not
-    // hash-aggregable, so every assignment pass SORTED its n×k expanded
-    // rows. graft_argmin_sqdist evaluates the whole argmin inside one
-    // codegen scan projection over the codebook collapsed to a single
-    // broadcast row: no row explosion, no sort, no aggregation, no
-    // exchange. The codebook arrays are sorted ascending by cent_id, so
-    // the expression's lowest-index tie-break equals the old
-    // struct(dist, cent_id) ordering exactly; cent_id is restored by
-    // indexing the aligned id array (never assumed dense — a Lloyd
-    // iteration can empty a centroid).
-    graft.plans.GraftFunctions.register(vectors.sparkSession)
-    vectors.crossJoin(broadcast(collapsed(codebook)))
-      .withColumn("__p", expr("graft_argmin_sqdist(q, cbs)"))
-      .select(col("vec_id"), col("q"),
-        expr(s"element_at(cbids, CAST(__p % ${1L << 21} AS INT) + 1)").as("cent_id"),
-        expr(s"__p div ${1L << 21}").as("dist"))
-  }
+  def assignQuantized(vectors: DataFrame, codebook: DataFrame): DataFrame =
+    nearest(vectors, "q", codebook).select(col("vec_id"), col("q"),
+      col("near_id").as("cent_id"), col("near_dist").as("dist"))
 
-  /** The collapsed-codebook aggregate shared by [[assignQuantized]],
-    * [[assignIdx]] and [[centroidIdx]]: one row of cent_id-ascending
-    * aligned (id, vector) arrays. All three MUST use this same ordering —
-    * the argmin's lowest-index tie-break and the cidx mapping are only
-    * equivalent to the struct(dist, cent_id) ordering because the arrays
-    * sort ascending by cent_id.
+  /** The collapsed-codebook aggregate every argmin consumer shares: per
+    * group of `keys` (one row when none), cent_id-ascending aligned
+    * arrays `cbids` (ids) and `cbs` (vectors) of a (keys…, cent_id, cq)
+    * codebook. All consumers MUST use this same ordering — the argmin's
+    * lowest-index tie-break and the cidx mapping are only equivalent to
+    * the struct(dist, cent_id) ordering because the arrays sort ascending
+    * by cent_id.
     */
-  private def collapsed(codebook: DataFrame): DataFrame = codebook.agg(
-    expr("transform(array_sort(collect_list(struct(cent_id, cq))), s -> s.cent_id)")
-      .as("cbids"),
-    expr("transform(array_sort(collect_list(struct(cent_id, cq))), s -> s.cq)")
-      .as("cbs"))
+  private def collapsed(codebook: DataFrame, keys: String*): DataFrame =
+    codebook.groupBy(keys.map(col): _*).agg(
+      expr("transform(array_sort(collect_list(struct(cent_id, cq))), s -> s.cent_id)")
+        .as("cbids"),
+      expr("transform(array_sort(collect_list(struct(cent_id, cq))), s -> s.cq)")
+        .as("cbs"))
 
   /** Nearest-centroid INDEX assignment (r21) for join-shaped consumers:
     * (vec_id, q, cidx) where cidx is the centroid's position in the
@@ -220,7 +241,7 @@ object KMeans {
     // cidx nullable and the IsNotNull re-appears
     vectors.crossJoin(broadcast(collapsed(codebook).select(col("cbs"))))
       .select(col("vec_id"), col("q"),
-        expr(s"CAST(coalesce(graft_argmin_sqdist(q, cbs) % ${1L << 21}, -1L) AS INT)")
+        expr(s"CAST(coalesce(graft_argmin_sqdist(q, cbs) % $Shift, -1L) AS INT)")
           .as("cidx"))
   }
 
@@ -230,23 +251,4 @@ object KMeans {
   def centroidIdx(codebook: DataFrame): DataFrame =
     collapsed(codebook)
       .select(posexplode(col("cbids")).as(Seq("cidx", "cent_id")))
-
-  /** Nearest-centroid assignment: broadcast codebook, map-side argmin of
-    * ||x - c||² (double math here — training only; search stays integer).
-    */
-  def assign(vectors: DataFrame, codebook: DataFrame): DataFrame = {
-    val scored = vectors.crossJoin(broadcast(codebook))
-      .withColumn("dist", expr(
-        "aggregate(zip_with(q, cq, (x, c) -> (CAST(x AS DOUBLE) - c) * (CAST(x AS DOUBLE) - c)), " +
-          "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"))
-    scored.groupBy("vec_id")
-      .agg(min_by(struct(col("cent_id"), col("q"), col("dist")),
-        struct(col("dist"), col("cent_id"))).as("best"))
-      .select(col("vec_id"), col("best.q").as("q"),
-        col("best.cent_id").as("cent_id"), col("best.dist").as("dist"))
-  }
-
-  /** Total within-cluster cost (Lloyd's objective; non-increasing). */
-  def cost(vectors: DataFrame, codebook: DataFrame): Double =
-    assign(vectors, codebook).agg(sum(col("dist"))).head().getDouble(0)
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Scoped shuffle configuration for small iterative loops (r20, guide §2:
   * make partitioning scale-adaptive — derive from input size — rather
@@ -17,8 +17,9 @@ import org.apache.spark.sql.SparkSession
   * adaptation needs both halves).
   *
   * `withSized` runs `body` at a partition count derived from a MEASURED
-  * row count (~64k rows/partition), AQE off — but only when that count
-  * stays below the session default. Big inputs keep the caller's conf
+  * row count — a fixed `RowsPerPart` (64k) rows per partition, not a
+  * parameter — AQE off, but only when that count stays below the
+  * session default. Big inputs keep the caller's conf
   * untouched: at scale the same loops want AQE's skew handling more than
   * they want to shave per-stage planning latency, so the fast path can
   * only engage when the loop data is provably small. Scan parallelism is
@@ -28,8 +29,26 @@ import org.apache.spark.sql.SparkSession
   * Verify, and the drivers run queries single-threaded, and the wrapped
   * regions are the eager loop bodies (every action inside runs before the
   * conf restores).
+  *
+  * `barrier` is the loops' shared materialization point: it checkpoints
+  * a loop's input and measures its row count for `withSized` in one job.
   */
 object LoopConf {
+
+  /** Shuffle partition size inside a sized loop, in rows. */
+  private val RowsPerPart = 65536L
+
+  /** Materialize `df` and probe its size in ONE job: a lazy
+    * `localCheckpoint` marks the RDD, and the RDD count that measures it
+    * is the action that materializes it (an eager checkpoint runs exactly
+    * this count internally and discards the value). Returns the
+    * checkpointed frame — read it instead of `df` — and its row count,
+    * the `nRows` for [[withSized]].
+    */
+  def barrier(df: DataFrame): (DataFrame, Long) = {
+    val cp = df.localCheckpoint(eager = false)
+    (cp, cp.queryExecution.toRdd.count())
+  }
 
   /** Run `body` under the sized loop conf described above.
     *
@@ -45,10 +64,9 @@ object LoopConf {
     * single-threaded, and nesting keeps the innermost size (each level
     * restores its own previous value).
     */
-  def withSized[T](spark: SparkSession, nRows: Long,
-      rowsPerPart: Long = 65536L)(body: => T): T = {
+  def withSized[T](spark: SparkSession, nRows: Long)(body: => T): T = {
     val sess = spark.sessionState.conf.numShufflePartitions
-    val parts = math.max(1L, math.min(sess.toLong, nRows / rowsPerPart)).toInt
+    val parts = math.max(1L, math.min(sess.toLong, nRows / RowsPerPart)).toInt
     if (parts >= sess) body
     else
       withConf(spark, "spark.sql.adaptive.enabled", "false")(

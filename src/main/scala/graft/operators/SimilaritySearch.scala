@@ -110,20 +110,6 @@ object SimilaritySearch {
   def ivfTopK(queries: DataFrame, candidates: DataFrame, centroids: DataFrame,
       nprobe: Int, k: Int): DataFrame = {
     graft.plans.GraftFunctions.register(queries.sparkSession)
-    val cents = broadcast(centroids.select(
-      col("vec_id").as("cent_id"), col("q").as("cq"),
-      expr(dotSql("q", "q")).as("cn")))
-
-    def nearestLists(df: DataFrame, idOut: String, keep: Int): DataFrame = {
-      val scored = df.crossJoin(cents)
-        .withColumn("dist",
-          expr(dotSql("q", "q")) + col("cn") - lit(2L) * expr(dotSql("q", "cq")))
-      val w = Window.partitionBy("vec_id").orderBy(col("dist").asc, col("cent_id").asc)
-      scored.withColumn("pr", row_number().over(w))
-        .filter(col("pr") <= keep)
-        .select(col("vec_id").as(idOut), col("q"), col("cent_id"))
-    }
-
     // Corpus-side list assignment via the argmin-in-projection shape
     // (the r20 assignQuantized technique — r21, the r20 verdict's top
     // item): the old crossJoin → n×k scored rows →
@@ -140,14 +126,13 @@ object SimilaritySearch {
     // constraint (d09's `vec_id < 8` slice) infer through the equi-join
     // and push the argmin into the join condition — 2 extra evals per
     // corpus row (the d02 inferred-predicate trap, live in the first r21
-    // d09 dump). The probes side (keep = nprobe ranks) stays the window —
-    // queries are broadcast-tiny by definition.
+    // d09 dump). The probes side stays the window (see probeLists).
     val cb = centroids.select(col("vec_id").as("cent_id"), col("q").as("cq"))
     val lists = KMeans.assignIdx(candidates, cb)
       .select(col("vec_id").as("cand_id"), col("q"), col("cidx"))
-    val probes = nearestLists(queries, "query_id", nprobe)
+    val probes = probeLists(queries, centroids, nprobe)
       .join(broadcast(KMeans.centroidIdx(cb)), "cent_id")
-      .select(col("query_id"), col("q").as("qq"), col("cidx"))
+      .select(col("query_id"), col("qq"), col("cidx"))
     val scored = lists.join(broadcast(probes), "cidx")
       .withColumn("dot", expr(dotSql("qq", "q")))
       .select(col("query_id"), col("cand_id"), col("dot"))
@@ -164,22 +149,33 @@ object SimilaritySearch {
   def ivfTopKAssigned(queries: DataFrame, postings: DataFrame,
       centroids: DataFrame, nprobe: Int, k: Int): DataFrame = {
     graft.plans.GraftFunctions.register(queries.sparkSession)
-    val cents = broadcast(centroids.select(
-      col("vec_id").as("cent_id"), col("q").as("cq"),
-      expr(dotSql("q", "q")).as("cn")))
-    val w = Window.partitionBy("vec_id")
-      .orderBy(col("dist").asc, col("cent_id").asc)
-    val probes = queries.crossJoin(cents)
-      .withColumn("dist",
-        expr(dotSql("q", "q")) + col("cn") - lit(2L) * expr(dotSql("q", "cq")))
-      .withColumn("pr", row_number().over(w))
-      .filter(col("pr") <= nprobe)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"), col("cent_id"))
+    val probes = probeLists(queries, centroids, nprobe)
     val scored = postings.join(broadcast(probes), "cent_id")
       .withColumn("dot", expr(dotSql("qq", "q")))
       .select(col("query_id"), col("cand_id"), col("dot"))
     TopK.perKey(scored, Seq("query_id"), "dot", "cand_id", k)
       .select(col("query_id"), col("cand_id"), col("dot"), col("rn"))
+  }
+
+  /** Probe selection shared by the IVF searches: each query's `nprobe`
+    * nearest centroids by exact integer distance |q|² + |c|² − 2·q·c, ties
+    * on cent_id, as (query_id, qq, cent_id). A rank window over the
+    * queries × centroids cross product — queries are broadcast-tiny by
+    * definition.
+    */
+  private def probeLists(queries: DataFrame, centroids: DataFrame,
+      nprobe: Int): DataFrame = {
+    val cents = broadcast(centroids.select(
+      col("vec_id").as("cent_id"), col("q").as("cq"),
+      expr(dotSql("q", "q")).as("cn")))
+    val w = Window.partitionBy("vec_id")
+      .orderBy(col("dist").asc, col("cent_id").asc)
+    queries.crossJoin(cents)
+      .withColumn("dist",
+        expr(dotSql("q", "q")) + col("cn") - lit(2L) * expr(dotSql("q", "cq")))
+      .withColumn("pr", row_number().over(w))
+      .filter(col("pr") <= nprobe)
+      .select(col("vec_id").as("query_id"), col("q").as("qq"), col("cent_id"))
   }
 
   /** Brute-force exact top-k: every query row scored against every

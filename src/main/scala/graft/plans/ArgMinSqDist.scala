@@ -24,21 +24,24 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * struct(dist, cent_id) ordering).
   *
   * Packing contract (callers: quantized milli-unit embeddings): index
-  * < 2^21 and dist < 2^42 — a 64-dim milli-unit diff bound of ±2·10^5
-  * per dim stays under 2^42 with 100x margin; eval throws (never wraps)
-  * if the bound is ever exceeded. SELF-ENFORCING (r21, the r20 ADVICE —
-  * the r20 guard checked only `bestD >= 2^42`, so an accumulator that
-  * WRAPPED NEGATIVE on out-of-contract input would win the argmin, pass
-  * the guard, and pack a silently-wrong cent_id): the final guard now
-  * also rejects `bestD < 0`, which catches every wrapped-negative s at
-  * zero inner-loop cost — a negative s is ALWAYS the minimum, so
-  * `any s < 0  ⟺  bestD < 0` (the in-loop per-centroid check this
-  * replaces measured as a real hit on the PQ family's short subspace
-  * loops); and each centroid's length must equal the vector's — checked
-  * BRANCH-FREE (a boolean accumulator, throw after the loop, so no
-  * exception block bloats the hot loop body) — a ragged codebook throws
-  * instead of silently scoring a min-length prefix. Null if either
-  * input is null; null on an empty codebook.
+  * < 2^21 and every ||x − c||² < 2^42 — a 64-dim milli-unit diff bound
+  * of ±2·10^5 per dim stays under 2^42 with 100x margin. The bound is
+  * the CALLER's contract, and every Lloyd/PQ step goes through this
+  * expression (KMeans.assignQuantized / fitQuantizedSubspaces and the
+  * d20/d36 encoders), so it binds their inputs. The final guard is a
+  * partial check, not an enforcement: it throws when the winning
+  * distance is `>= 2^42` or negative. A negative s always wins the
+  * argmin, so an accumulator that wraps ONCE to a negative value (true
+  * sum in [2^63, 2^64)) is caught at zero inner-loop cost (r21: the
+  * in-loop per-centroid check this replaced measured as a real hit on
+  * the PQ family's short subspace loops). A sum that wraps
+  * twice or more, back into `[0, 2^42)`, is NOT caught: it looks like a
+  * valid distance and packs a silently wrong index. Each centroid's
+  * length must equal the vector's — checked BRANCH-FREE (a boolean
+  * accumulator, throw after the loop, so no exception block bloats the
+  * hot loop body) — a ragged codebook throws instead of silently scoring
+  * a min-length prefix. Null if either input is null; null on an empty
+  * codebook.
   */
 case class ArgMinSqDist(left: Expression, right: Expression)
     extends BinaryExpression {

@@ -197,13 +197,10 @@ object DedupQueries {
       // combined sum (the Pregel shape), lineage-cut via localCheckpoint.
       val pairs = Dedup.minHashLshPairs(Tables.documents(s, d), K, Bands)
         .select(col("a"), col("b"))
-      val edges = pairs.unionByName(
-        pairs.select(col("b").as("a"), col("a").as("b")))
-        .localCheckpoint(eager = false)
-      // checkpoint materialization doubling as the loop size probe
-      // (the r20 LoopConf pattern): the degree table and all PrIters
-      // power iterations are edge-table-sized tiny plans at bench scale
-      val nEdges = edges.queryExecution.toRdd.count()
+      // the degree table and all PrIters power iterations are
+      // edge-table-sized tiny plans at bench scale: size the loop conf
+      val (edges, nEdges) = graft.operators.LoopConf.barrier(pairs.unionByName(
+        pairs.select(col("b").as("a"), col("a").as("b"))))
       graft.operators.LoopConf.withSized(s, nEdges) {
         // deg is read by every iteration — materialize once instead of
         // re-aggregating the edge table per iteration

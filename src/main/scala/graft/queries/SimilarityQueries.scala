@@ -631,78 +631,20 @@ object SimilarityQueries {
       val sample = corpus.filter(expr(graft.operators.KMeans.sampleSql(SamplePct)))
       val subCols = (t: String) =>
         s"transform(sequence(0, ${PqM - 1}), m -> slice($t, CAST(m * $PqSub + 1 AS INT), $PqSub))"
-      // all PqM codebooks train in ONE Lloyd loop with the subspace id as
-      // part of every key (subspaces are independent, so the math is
-      // identical to PqM separate runs — the oracle replays them
-      // per-subspace): 2 jobs per iteration instead of 2*PqM. Init is
-      // fitQuantized's: the sample's first PqK vectors by vec_id, ids
-      // 0..PqK-1, per subspace. Shapes per iteration: one broadcast of
-      // all codebooks + map-side-combined min_by argmin (shuffles
-      // |sample|*PqM assignment rows), one (m, cent_id, dim) mean.
-      // sample-sized and read by init + every Lloyd iteration: materialize
-      val sampleSubs = sample
-        .select(col("vec_id"), posexplode(expr(subCols("q"))).as(Seq("m", "sq")))
-        .localCheckpoint(eager = false)
-      // materializes the checkpoint AND probes the trainer size in one
-      // job (the r20 LoopConf pattern: the init window + every Lloyd
-      // iteration below are sample-sized tiny plans)
-      val nSubs = sampleSubs.queryExecution.toRdd.count()
-      // per-subspace codebook collapsed to one broadcast row of aligned
-      // (id, vector) arrays, sorted ascending by cent_id — feeds the
-      // projection argmin (see KMeans.assignQuantized's r20 note: the old
-      // min_by(struct) shape planned a SortAggregate over the expanded
-      // rows; graft_argmin_sqdist removes the explosion, the sort, and
-      // the per-(vec, m) aggregation)
-      val cbm = (c: DataFrame) => c.groupBy(col("cm"))
-        .agg(expr("transform(array_sort(collect_list(struct(cent_id, cq))), s -> s.cent_id)")
-          .as("cbids"),
-          expr("transform(array_sort(collect_list(struct(cent_id, cq))), s -> s.cq)")
-            .as("cbs"))
-      val pickId = s"element_at(cbids, CAST(__p % ${1L << 21} AS INT) + 1)"
-      var cb: DataFrame = null
-      graft.operators.LoopConf.withSized(s, nSubs) {
-      cb = sampleSubs
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("m").orderBy("vec_id")))
-        .filter(col("rn") <= PqK)
-        .select(col("m").as("cm"), (col("rn") - 1).cast("long").as("cent_id"),
-          col("sq").as("cq"))
-        .localCheckpoint()
-      (0 until PqIters).foreach { _ =>
-        cb = sampleSubs.join(broadcast(cbm(cb)), col("m") === col("cm"))
-          .withColumn("__p", expr("graft_argmin_sqdist(sq, cbs)"))
-          .select(col("m"), expr(pickId).as("cent_id"),
-            posexplode(col("sq")).as(Seq("dim", "x")))
-          .groupBy("m", "cent_id", "dim")
-          .agg(expr("CAST(floor(CAST(sum(x) AS DOUBLE) / count(*)) AS BIGINT)").as("mm"))
-          .groupBy("m", "cent_id")
-          .agg(collect_list(struct(col("dim"), col("mm"))).as("dm"))
-          .select(col("m").as("cm"), col("cent_id"),
-            expr("transform(array_sort(dm), s -> s.mm)").as("cq"))
-          .localCheckpoint()
-      }
-      } // LoopConf
-      // The flattened ADC lookup pd[m*PqK + code] assumes every (m,
-      // cent_id) cell survived training. A centroid that empties during
-      // Lloyd would shrink pd and make the arithmetic index read the
-      // WRONG cell (or NULL past the end — which Spark nulls and DuckDB's
-      // list_sum skips: an engine divergence). Enforce the invariant
-      // rather than assume it: cb is localCheckpoint'ed (already
-      // materialized), so this counts ≤ PqM*PqK local rows — no extra
-      // distributed work.
-      val nCb = cb.count()
-      require(nCb == PqM.toLong * PqK,
-        s"d20: codebook has $nCb cells, expected ${PqM * PqK} — a centroid " +
-          "emptied during Lloyd; the flattened ADC index would misread")
-      val cents = cb
+      // all PqM codebooks train in ONE Lloyd loop (KMeans.
+      // fitQuantizedSubspaces — the oracle replays them per subspace),
+      // which also guarantees every (m, cent_id) cell the flattened ADC
+      // lookup pd[m*PqK + code] below indexes
+      val cents = graft.operators.KMeans.fitQuantizedSubspaces(
+        sample.select(col("vec_id"), posexplode(expr(subCols("q"))).as(Seq("m", "sq"))),
+        PqM, PqK, PqIters)
       // encode: one corpus scan exploding the PqM subvectors, ONE broadcast
       // of all collapsed codebooks at once, argmin-in-projection (r20) —
       // the shuffled row is (vec_id, m, code)
-      val coded = corpus
-        .select(col("vec_id"), posexplode(expr(subCols("q"))).as(Seq("m", "sq")))
-        .join(broadcast(cbm(cents)), col("m") === col("cm"))
-        .withColumn("__p", expr("graft_argmin_sqdist(sq, cbs)"))
-        .select(col("vec_id"), col("m"), expr(pickId).as("code"))
+      val coded = graft.operators.KMeans.nearest(
+          corpus.select(col("vec_id"), posexplode(expr(subCols("q"))).as(Seq("m", "sq"))),
+          "sq", cents, "m" -> "cm")
+        .select(col("vec_id"), col("m"), col("near_id").as("code"))
       val codes = coded.groupBy("vec_id")
         .agg(expr("transform(array_sort(collect_list(struct(m, code))), s -> s.code)")
           .as("codes"))
@@ -1022,73 +964,23 @@ object SimilarityQueries {
       // Projection argmin over the coarse codebook collapsed to one
       // broadcast row (the assignQuantized r20 shape — no min_by
       // SortAggregate carrying (cq, q) payloads, no aggregation at all)
-      val coarse1 = coarse.agg(
-        expr("transform(array_sort(collect_list(struct(cent_id, cq))), s -> s.cent_id)")
-          .as("coids"),
-        expr("transform(array_sort(collect_list(struct(cent_id, cq))), s -> s.cq)")
-          .as("cos"))
-      val asg = cand.crossJoin(broadcast(coarse1))
-        .withColumn("__p", expr("graft_argmin_sqdist(q, cos)"))
-        .withColumn("__i", expr(s"CAST(__p % ${1L << 21} AS INT) + 1"))
-        .select(col("vec_id"), expr("element_at(coids, __i)").as("cent_id"),
-          col("q"),
-          expr("zip_with(q, element_at(cos, __i), (x, c) -> x - c)").as("r"))
+      val asg = graft.operators.KMeans.nearest(cand, "q", coarse)
+        .select(col("vec_id"), col("near_id").as("cent_id"), col("q"),
+          expr("zip_with(q, near_cq, (x, c) -> x - c)").as("r"))
         .localCheckpoint() // feeds PQ sample, encode, and the exact refine
-      // PQ codebooks: d20's one-Lloyd-loop-for-all-subspaces, trained on
+      // PQ codebooks: d20's one-Lloyd-loop-for-all-subspaces trainer, on
       // the hash-sample's RESIDUALS
-      val sampleSubs = asg
-        .filter(expr(graft.operators.KMeans.sampleSql(SamplePct)))
-        .select(col("vec_id"), posexplode(expr(subCols("r"))).as(Seq("m", "sq")))
-        .localCheckpoint(eager = false)
-      // checkpoint materialization doubling as the trainer size probe
-      // (the r20 LoopConf pattern, see d20)
-      val nSubs = sampleSubs.queryExecution.toRdd.count()
-      // per-subspace codebook collapsed to aligned (id, vector) arrays —
-      // projection argmin, the d20/assignQuantized r20 shape (no min_by
-      // SortAggregate, no per-(vec, m) aggregation)
-      val cbm = (c: DataFrame) => c.groupBy(col("cm"))
-        .agg(expr("transform(array_sort(collect_list(struct(cent_id, cq))), s -> s.cent_id)")
-          .as("cbids"),
-          expr("transform(array_sort(collect_list(struct(cent_id, cq))), s -> s.cq)")
-            .as("cbs"))
-      val pickId = s"element_at(cbids, CAST(__p % ${1L << 21} AS INT) + 1)"
-      var cb: DataFrame = null
-      graft.operators.LoopConf.withSized(s, nSubs) {
-      cb = sampleSubs
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("m").orderBy("vec_id")))
-        .filter(col("rn") <= PqK)
-        .select(col("m").as("cm"), (col("rn") - 1).cast("long").as("cent_id"),
-          col("sq").as("cq"))
-        .localCheckpoint()
-      (0 until PqIters).foreach { _ =>
-        cb = sampleSubs.join(broadcast(cbm(cb)), col("m") === col("cm"))
-          .withColumn("__p", expr("graft_argmin_sqdist(sq, cbs)"))
-          .select(col("m"), expr(pickId).as("cent_id"),
-            posexplode(col("sq")).as(Seq("dim", "x")))
-          .groupBy("m", "cent_id", "dim")
-          .agg(expr("CAST(floor(CAST(sum(x) AS DOUBLE) / count(*)) AS BIGINT)").as("mm"))
-          .groupBy("m", "cent_id")
-          .agg(collect_list(struct(col("dim"), col("mm"))).as("dm"))
-          .select(col("m").as("cm"), col("cent_id"),
-            expr("transform(array_sort(dm), s -> s.mm)").as("cq"))
-          .localCheckpoint()
-      }
-      } // LoopConf
-      // d20's flattened-ADC invariant: every (m, cent_id) cell must exist
-      val nCb = cb.count()
-      require(nCb == PqM.toLong * PqK,
-        s"d36: codebook has $nCb cells, expected ${PqM * PqK} — a centroid " +
-          "emptied during Lloyd; the flattened ADC index would misread")
+      val cb = graft.operators.KMeans.fitQuantizedSubspaces(
+        asg.filter(expr(graft.operators.KMeans.sampleSql(SamplePct)))
+          .select(col("vec_id"), posexplode(expr(subCols("r"))).as(Seq("m", "sq"))),
+        PqM, PqK, PqIters)
       // encode every candidate's residual: broadcast argmin, the shuffled
       // row is (vec_id, m, code); list id rides along for the serving join
-      val codes = asg
-        .select(col("vec_id"), col("cent_id"),
-          posexplode(expr(subCols("r"))).as(Seq("m", "sq")))
-        .join(broadcast(cbm(cb)), col("m") === col("cm"))
-        .withColumn("__p", expr("graft_argmin_sqdist(sq, cbs)"))
-        .select(col("vec_id"), col("cent_id"), col("m"),
-          expr(pickId).as("code"))
+      val codes = graft.operators.KMeans.nearest(
+          asg.select(col("vec_id"), col("cent_id"),
+            posexplode(expr(subCols("r"))).as(Seq("m", "sq"))),
+          "sq", cb, "m" -> "cm")
+        .select(col("vec_id"), col("cent_id"), col("m"), col("near_id").as("code"))
         .groupBy("vec_id", "cent_id")
         .agg(expr("transform(array_sort(collect_list(struct(m, code))), s -> s.code)")
           .as("codes"))
@@ -1308,7 +1200,7 @@ object SimilarityQueries {
   }
 
   // one Lloyd iteration over the training sample CTE `samp`: argmin
-  // assignment + floored element-wise mean (KMeans.lloydStep replayed
+  // assignment + floored element-wise mean (KMeans.centroidMeans replayed
   // verbatim)
   private def lloydIterCtes(i: Int): String =
     s"""a$i AS (SELECT vec_id, q, cent_id FROM (

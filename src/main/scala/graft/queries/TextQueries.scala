@@ -539,13 +539,11 @@ object TextQueries {
       maxPasses: Int = SpanPasses, probe: StepProbe = NoProbe): DataFrame = {
     graft.plans.GraftFunctions.register(docs0.sparkSession)
     // r19 job fusion (the r18 weak-flip exit): the corpus checkpoint and
-    // the capN count share ONE job — localCheckpoint(eager = false)
-    // marks the RDD and the count is the materializing action (eager
-    // checkpointing runs exactly this count internally and discards the
-    // value). Was 3 jobs (ckpt + 2-stage Dataset.count), now 1.
+    // the capN count share ONE job (LoopConf.barrier). Was 3 jobs (ckpt +
+    // 2-stage Dataset.count), now 1.
     val (docs, capN) = probe("docs ckpt+capN") {
-      val d = docs0.select(col("doc_id"), col("text"))
-        .localCheckpoint(eager = false)
+      val (d, n) = graft.operators.LoopConf.barrier(
+        docs0.select(col("doc_id"), col("text")))
       // the df cap as a driver-side literal (corpus size is fixed for
       // the whole loop): drops the ndocs checkpoint + a broadcast
       // crossJoin from every cap filter — same driver-scalar class as
@@ -554,7 +552,6 @@ object TextQueries {
       // corpus size can never hit cache for the cap-filter classes
       // (ProfileT37k/l, r13) — one of the reasons Bench's pre-warm runs
       // the FULL corpus.
-      val n = d.queryExecution.toRdd.count()
       (d, math.max(20L, n / 100L))
     }
     // slice-borne fps (r10): each occurrence carries its 27-char confirm
@@ -1076,15 +1073,14 @@ object TextQueries {
     */
   private def bpeTrain(s: SparkSession, d: String)
       : (Seq[DataFrame], DataFrame) = {
-    // lazy checkpoint + materializing RDD count (the r20 LoopConf probe
-    // pattern): one job both persists the word histogram and measures it
+    // one barrier job both persists the word histogram and measures it
     // for the sized loop conf — ProfileR21 (the r20 verdict item 6)
     // measured t29/t32's wall at ≈ jobs × ~60 ms scheduler fixed cost
     // (30-31 jobs for ~0.3 s of task compute); AQE off inside the
     // vocab-sized loop collapses each iteration's per-stage re-plan
     // jobs into its two eager checkpoints' own.
-    var seq = bpeWords(s, d).localCheckpoint(eager = false)
-    val n0 = seq.queryExecution.toRdd.count()
+    val (words, n0) = graft.operators.LoopConf.barrier(bpeWords(s, d))
+    var seq = words
     graft.operators.LoopConf.withSized(s, n0) {
     val merges = (1 to BpeIters).map { i =>
       val best = seq

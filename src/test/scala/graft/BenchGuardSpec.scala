@@ -320,26 +320,28 @@ class BenchGuardSpec extends AnyFunSuite {
     // r21, the r20 verdict item 3: the driver's stdout capture has
     // tail-truncated the 202-key JSON line into `parsed: null` for four
     // straight rounds — the sidecar is the capture-proof copy. Pin that
-    // (a) EVERY invocation writes the exact line + newline to
-    // Bench.SidecarPath, and (b) a selective run (fullRun=false) leaves
-    // the committed round record untouched.
+    // (a) EVERY invocation writes the exact line + newline to the sidecar
+    // path it is given, and (b) a selective run (fullRun=false) leaves
+    // the committed round record untouched. The spec writes a temp
+    // sidecar and asserts the real Bench.SidecarPath is untouched too.
     val sentinel = s"""{"metric":"total","sentinel":${System.nanoTime()}}"""
+    def snapshot(p: java.nio.file.Path) =
+      if (java.nio.file.Files.exists(p))
+        Some(java.nio.file.Files.readAllBytes(p).toSeq)
+      else None
     val full = java.nio.file.Paths.get("BENCH_full.json")
-    val before =
-      if (java.nio.file.Files.exists(full))
-        Some(java.nio.file.Files.readAllBytes(full).toSeq)
-      else None
-    Bench.persistArtifacts(sentinel, fullRun = false)
-    val side = java.nio.file.Paths.get(Bench.SidecarPath)
-    assert(java.nio.file.Files.exists(side), "sidecar not written")
-    assert(new String(java.nio.file.Files.readAllBytes(side), "UTF-8")
-      == sentinel + "\n", "sidecar must carry the exact line")
-    val after =
-      if (java.nio.file.Files.exists(full))
-        Some(java.nio.file.Files.readAllBytes(full).toSeq)
-      else None
-    assert(before == after,
+    val real = java.nio.file.Paths.get(Bench.SidecarPath)
+    val (fullBefore, realBefore) = (snapshot(full), snapshot(real))
+    val side = java.nio.file.Files.createTempFile("graft_bench_sidecar", ".json")
+    try {
+      Bench.persistArtifacts(sentinel, fullRun = false, side.toString)
+      assert(new String(java.nio.file.Files.readAllBytes(side), "UTF-8")
+        == sentinel + "\n", "sidecar must carry the exact line")
+    } finally java.nio.file.Files.deleteIfExists(side)
+    assert(snapshot(full) == fullBefore,
       "a selective run must not clobber the committed round record")
+    assert(snapshot(real) == realBefore,
+      "the spec must not touch the real bench sidecar")
   }
 
   test("PassWall buckets t37 step labels by pass and aggregates wall time") {

@@ -101,16 +101,8 @@ class CodegenOnlySpec extends SparkSpec {
         .agg(min_by(struct(col("cent_id"), col("dist")),
           struct(col("dist"), col("cent_id"))).as("b"))
         .select(col("vec_id"), col("b.cent_id").as("rc"), col("b.dist").as("rd"))
-      val cb1 = cb.agg(
-        expr("transform(array_sort(collect_list(struct(cent_id, cq))), s -> s.cent_id)")
-          .as("cbids"),
-        expr("transform(array_sort(collect_list(struct(cent_id, cq))), s -> s.cq)")
-          .as("cbs"))
-      val got = e.crossJoin(broadcast(cb1))
-        .withColumn("__p", expr("graft_argmin_sqdist(q, cbs)"))
-        .select(col("vec_id"),
-          expr(s"element_at(cbids, CAST(__p % ${1L << 21} AS INT) + 1)").as("gc"),
-          expr(s"__p div ${1L << 21}").as("gd"))
+      val got = graft.operators.KMeans.nearest(e, "q", cb)
+        .select(col("vec_id"), col("near_id").as("gc"), col("near_dist").as("gd"))
       val bad = ref.join(got, "vec_id")
         .filter(col("rc") =!= col("gc") || col("rd") =!= col("gd")).count()
       assert(bad == 0)

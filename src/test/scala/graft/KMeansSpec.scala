@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{KMeans, SimilaritySearch}
@@ -11,25 +12,20 @@ class KMeansSpec extends SparkSpec {
     .select(col("vec_id"), col("q"))
     .limit(200).cache()
 
-  test("Lloyd iterations never increase the clustering cost") {
-    val c0 = KMeans.fit(spark, vecs, k = 4, iters = 0)
-    val c1 = KMeans.fit(spark, vecs, k = 4, iters = 1)
-    val c3 = KMeans.fit(spark, vecs, k = 4, iters = 3)
-    val costs = Seq(c0, c1, c3).map(KMeans.cost(vecs, _))
-    assert(costs(1) <= costs(0) + 1e-6, s"iter1 worse: $costs")
-    assert(costs(2) <= costs(1) + 1e-6, s"iter3 worse: $costs")
-  }
+  private def rows(cb: DataFrame): Seq[(Long, Seq[Long])] =
+    cb.collect().map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1).toSeq
 
-  test("training is deterministic across runs") {
-    def snapshot() = KMeans.fit(spark, vecs, k = 4, iters = 2)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
-    assert(snapshot() == snapshot())
+  test("Lloyd iterations never increase the clustering cost") {
+    // the exact integer objective: sum of ||x - c||^2 over the assignment
+    def cost(iters: Int): Long = KMeans.assignQuantized(vecs,
+      KMeans.fitQuantized(vecs, k = 4, iters)).agg(sum("dist")).head.getLong(0)
+    val costs = Seq(0, 1, 2, 3).map(cost)
+    assert(costs.sliding(2).forall { case Seq(a, b) => b <= a }, s"a step got worse: $costs")
   }
 
   test("trained codebook plugs into ivfTopK end to end") {
-    val codebook = KMeans.fit(spark, vecs, k = 4, iters = 2)
-      .select(col("cent_id").as("vec_id"),
-        expr("transform(cq, x -> CAST(round(x) AS BIGINT))").as("q"))
+    val codebook = KMeans.fitQuantized(vecs, k = 4, iters = 2)
+      .select(col("cent_id").as("vec_id"), col("cq").as("q"))
     val out = SimilaritySearch.ivfTopK(
       queries = vecs.filter(col("vec_id") < 5),
       candidates = vecs.filter(col("vec_id") >= 5),
@@ -40,20 +36,50 @@ class KMeansSpec extends SparkSpec {
   }
 
   test("integer-exact trainer is deterministic and stays BIGINT throughout") {
-    def snapshot() = KMeans.fitQuantized(vecs, k = 4, iters = 2)
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1).toSeq
-    val a = snapshot()
-    assert(a == snapshot())
+    val codebook = KMeans.fitQuantized(vecs, k = 4, iters = 2)
+    val a = rows(codebook)
+    assert(a == rows(KMeans.fitQuantized(vecs, k = 4, iters = 2)))
     assert(a.nonEmpty && a.forall(_._2.nonEmpty)) // integer codebook rows
-    // integer Lloyd also never increases its own exact cost
-    def costQ(cb: Seq[(Long, Seq[Long])]): Long = {
-      import spark.implicits._
-      val cbDf = cb.toDF("cent_id", "cq")
-      KMeans.assignQuantized(vecs, cbDf).agg(sum("dist")).head.getLong(0)
+    // every vector is assigned to exactly one of the k centroids
+    val assigned = KMeans.assignQuantized(vecs, codebook)
+    assert(assigned.count() == vecs.count())
+    assert(assigned.select("vec_id").distinct().count() == vecs.count())
+    val cents = assigned.select("cent_id").distinct().count()
+    assert(cents <= 4 && cents > 1)
+  }
+
+  test("PQ subspace trainer equals one fitQuantized run per subspace") {
+    // the equivalence d20/d36's per-subspace oracle CTEs rely on: one
+    // Lloyd loop keyed by subspace == M independent single-codebook runs.
+    // Rows (vec_id, m, sq): the m-th 16-dim slice of every vector.
+    val subs = vecs.select(col("vec_id"), posexplode(expr(
+      "transform(sequence(0, 3), m -> slice(q, CAST(m * 16 + 1 AS INT), 16))"))
+      .as(Seq("m", "sq")))
+    val pq = KMeans.fitQuantizedSubspaces(subs, subspaces = 4, k = 4, iters = 2)
+    assert(pq.columns.toSeq == Seq("cm", "cent_id", "cq"))
+    assert(pq.count() == 16)
+    (0 until 4).foreach { m =>
+      val single = KMeans.fitQuantized(
+        subs.filter(col("m") === m).select(col("vec_id"), col("sq").as("q")),
+        k = 4, iters = 2)
+      assert(rows(pq.filter(col("cm") === m).drop("cm")) == rows(single),
+        s"subspace $m diverges from its single-codebook run")
     }
-    val c1 = KMeans.fitQuantized(vecs, k = 4, iters = 1)
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq
-    assert(costQ(a) <= costQ(c1))
+  }
+
+  test("PQ subspace trainer rejects a codebook whose centroid empties") {
+    import spark.implicits._
+    // the first k = 3 vectors hold a duplicate in both subspaces: the
+    // duplicate centroid (higher id) loses every tie, so one Lloyd step
+    // empties it and the cell count drops below subspaces * k
+    val subs = Seq(0L -> Seq(0L, 0L), 1L -> Seq(0L, 0L), 2L -> Seq(10L, 10L),
+        3L -> Seq(20L, 20L))
+      .flatMap { case (id, v) => Seq((id, 0, v), (id, 1, v.map(_ + 1))) }
+      .toDF("vec_id", "m", "sq")
+    assert(KMeans.fitQuantizedSubspaces(subs, 2, k = 3, iters = 0).count() == 6)
+    val e = intercept[IllegalArgumentException](
+      KMeans.fitQuantizedSubspaces(subs, 2, k = 3, iters = 1))
+    assert(e.getMessage.contains("4 cells, expected 6"), e.getMessage)
   }
 
   test("sampled trainer: k scales with corpus, pair volume stays cluster-bounded") {
@@ -155,13 +181,5 @@ class KMeansSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("query_id", "rn").collect().toSeq
     assert(rows(served) == rows(full))
-  }
-
-  test("every vector is assigned to exactly one of k centroids") {
-    val codebook = KMeans.fit(spark, vecs, k = 4, iters = 2)
-    val assigned = KMeans.assign(vecs, codebook)
-    assert(assigned.count() == vecs.count())
-    val cents = assigned.select("cent_id").distinct().count()
-    assert(cents <= 4 && cents > 1)
   }
 }

@@ -1,12 +1,15 @@
 #!/usr/bin/env python3
 """Dev-side correctness harness mirroring the driver's DuckDB oracle gate.
 
-Usage: python3 tools/check.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check.py <sfDir> <verifyOutDir> [key ...]
 
 Reads each <outDir>/<name> parquet (written by graft.Verify), runs the
 matching oracle SQL from <outDir>/oracle_sql.json in DuckDB over views of
 the sf tables, and compares values (columns sorted by name, rows sorted,
-exact equality).
+exact equality). Optional keys restrict the check to the named queries,
+by full name or key prefix (`d20` selects `d20_pq_ann`), as graft.Verify
+selects them; a key that matches neither an oracle nor a dumped output
+is a FAIL.
 """
 import sys, json, glob, os
 import duckdb
@@ -47,7 +50,10 @@ def norm(v):
         return tuple(norm(x) for x in v)
     return v
 
-def main(sf_dir, out_dir):
+def selected(name, keys):
+    return not keys or any(name == k or name.startswith(k + "_") for k in keys)
+
+def main(sf_dir, out_dir, keys=()):
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
@@ -55,7 +61,11 @@ def main(sf_dir, out_dir):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
-    for name in sorted(oracle):
+    dumped = [d.rstrip("/").split("/")[-1] for d in glob.glob(f"{out_dir}/*/")]
+    for k in keys:
+        if not any(selected(name, [k]) for name in list(oracle) + dumped):
+            print(f"FAIL {k}: no query matches this key"); n_fail += 1
+    for name in sorted(n for n in oracle if selected(n, keys)):
         res_dir = f"{out_dir}/{name}"
         files = glob.glob(f"{res_dir}/*.parquet")
         if not files:
@@ -102,13 +112,12 @@ def main(sf_dir, out_dir):
             n_fail += 1; continue
         print(f"PASS {name} ({len(sr)} rows)"); n_pass += 1
     # queries with no oracle: rows-only
-    for d in sorted(glob.glob(f"{out_dir}/*/")):
-        name = d.rstrip("/").split("/")[-1]
-        if name not in oracle:
-            n = con.execute(f"SELECT count(*) FROM read_parquet('{d}*.parquet')").fetchone()[0]
+    for name in sorted(dumped):
+        if name not in oracle and selected(name, keys):
+            n = con.execute(f"SELECT count(*) FROM read_parquet('{out_dir}/{name}/*.parquet')").fetchone()[0]
             print(f"ROWS {name}: {n}")
     print(f"== {n_pass} pass, {n_fail} fail ==")
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    sys.exit(main(sys.argv[1], sys.argv[2], sys.argv[3:]))
