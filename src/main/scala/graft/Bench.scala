@@ -146,18 +146,31 @@ object Bench {
   /** Writes the roll's one-line JSON artifacts: the sidecar at `sidecar`
     * ALWAYS (main passes [[SidecarPath]]), and the committed round record
     * `BENCH_full.json` only for full runs — a selective iteration run must
-    * not clobber the round record (the r6 convention, unchanged). Factored
+    * not clobber the round record (the r6 convention, unchanged). The
+    * sidecar line carries a fresh `run_id` (printed to stderr too), so a
+    * stale file cannot pass for the current roll, and is written through
+    * a sibling temp file moved into place with ATOMIC_MOVE — a symlink at
+    * `sidecar` is replaced, never followed. Returns the run id. Factored
     * out of main so BenchGuardSpec can pin the sidecar contract against a
     * temp file, never the real sidecar. */
   private[graft] def persistArtifacts(line: String, fullRun: Boolean,
-      sidecar: String): Unit = {
-    try java.nio.file.Files.write(java.nio.file.Paths.get(sidecar),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable => System.err.println(s"BENCH SIDECAR: $e") }
+      sidecar: String): String = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val runId = s"${System.currentTimeMillis()}-${java.util.UUID.randomUUID().toString.take(8)}"
+    try {
+      val target = Paths.get(sidecar).toAbsolutePath
+      val tmp = Files.createTempFile(target.getParent, s".${target.getFileName}", ".tmp")
+      try {
+        Files.write(tmp, (s"""{"run_id":"$runId",""" + line.drop(1) + "\n").getBytes("UTF-8"))
+        Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+          StandardCopyOption.REPLACE_EXISTING)
+      } finally Files.deleteIfExists(tmp)
+      System.err.println(s"BENCH SIDECAR $sidecar run_id=$runId")
+    } catch { case e: Throwable => System.err.println(s"BENCH SIDECAR: $e") }
     if (fullRun)
-      try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_full.json"),
-        (line + "\n").getBytes("UTF-8"))
+      try Files.write(Paths.get("BENCH_full.json"), (line + "\n").getBytes("UTF-8"))
       catch { case e: Throwable => System.err.println(s"BENCH WRITE: $e") }
+    runId
   }
 
   /** Cap-retry blow-up guard (r18 review, see [[capRetryJson]]): a

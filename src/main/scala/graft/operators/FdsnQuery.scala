@@ -33,10 +33,47 @@ object FdsnQuery {
   def matchesFdsn(c: Column, pattern: String): Column =
     c.like(fdsnWildcardToLike(pattern))
 
-  /** fdsnws-event query parameters (public FDSN spec surface).
-    * minradius/maxradius are great-circle DEGREES per the FDSN spec (not
+  /** The geographic + freshness surface both FDSN services share: box in
+    * degrees, point-radius in great-circle DEGREES per the FDSN spec (not
     * km), so real fdsnws clients can pass their values through unchanged.
     */
+  sealed trait GeoParams {
+    def minLatitude: Option[Double]
+    def maxLatitude: Option[Double]
+    def minLongitude: Option[Double]
+    def maxLongitude: Option[Double]
+    def latitude: Option[Double]
+    def longitude: Option[Double]
+    def minRadius: Option[Double]
+    def maxRadius: Option[Double]
+    def updatedAfter: Option[String]
+  }
+
+  /** Filter `index` by `lead` predicates, then the bbox, then `attrs`,
+    * then updatedafter and the point-radius — one order for both
+    * services, so each service's plan keeps its predicate sequence.
+    */
+  private def filterBy(index: DataFrame, p: GeoParams,
+      lead: Seq[Option[Column]], attrs: Seq[Option[Column]]): DataFrame = {
+    val bbox = Seq(
+      p.minLatitude.map(col("latitude") >= _),
+      p.maxLatitude.map(col("latitude") <= _),
+      p.minLongitude.map(col("longitude") >= _),
+      p.maxLongitude.map(col("longitude") <= _))
+    // updatedafter compares on integer epoch seconds (engine-portable)
+    val updated = p.updatedAfter.map(t =>
+      col("updated_s") >= unix_timestamp(lit(t).cast("timestamp")))
+    val radius = for {
+      lat <- p.latitude; lon <- p.longitude
+    } yield {
+      val deg = expr(GeoFunctions.centralAngleDegSql("latitude", "longitude", lat, lon))
+      deg >= p.minRadius.getOrElse(0.0) && deg <= p.maxRadius.getOrElse(180.0)
+    }
+    ((lead ++ bbox ++ attrs :+ updated :+ radius).flatten)
+      .foldLeft(index)(_ filter _)
+  }
+
+  /** fdsnws-event query parameters (public FDSN spec surface). */
   final case class EventParams(
       starttime: Option[String] = None,
       endtime: Option[String] = None,
@@ -58,38 +95,25 @@ object FdsnQuery {
       updatedAfter: Option[String] = None, // ISO timestamp
       orderBy: String = "time", // time | time-asc | magnitude | magnitude-asc
       limit: Option[Int] = None,
-      offset: Option[Int] = None)
+      offset: Option[Int] = None) extends GeoParams
 
   /** Compile event params over an event-index DataFrame with columns
     * `time: timestamp, latitude, longitude, depth, magnitude,
     * magnitude_type, agency, contributor, updated_s` (+ id cols).
     */
   def events(index: DataFrame, p: EventParams): DataFrame = {
-    val preds = Seq(
-      p.starttime.map(t => col("time") >= lit(t).cast("timestamp")),
-      p.endtime.map(t => col("time") <= lit(t).cast("timestamp")),
-      p.minLatitude.map(col("latitude") >= _),
-      p.maxLatitude.map(col("latitude") <= _),
-      p.minLongitude.map(col("longitude") >= _),
-      p.maxLongitude.map(col("longitude") <= _),
-      p.minDepth.map(col("depth") >= _),
-      p.maxDepth.map(col("depth") <= _),
-      p.minMagnitude.map(col("magnitude") >= _),
-      p.maxMagnitude.map(col("magnitude") <= _),
-      p.magnitudeType.map(col("magnitude_type") === _),
-      p.agency.map(col("agency") === _),
-      p.contributor.map(col("contributor") === _),
-      // updatedafter compares on integer epoch seconds (engine-portable)
-      p.updatedAfter.map(t =>
-        col("updated_s") >= unix_timestamp(lit(t).cast("timestamp")))
-    ).flatten ++ (for {
-      lat <- p.latitude; lon <- p.longitude
-    } yield {
-      val deg = expr(GeoFunctions.centralAngleDegSql("latitude", "longitude", lat, lon))
-      deg >= p.minRadius.getOrElse(0.0) && deg <= p.maxRadius.getOrElse(180.0)
-    })
-
-    val filtered = preds.foldLeft(index)(_ filter _)
+    val filtered = filterBy(index, p,
+      lead = Seq(
+        p.starttime.map(t => col("time") >= lit(t).cast("timestamp")),
+        p.endtime.map(t => col("time") <= lit(t).cast("timestamp"))),
+      attrs = Seq(
+        p.minDepth.map(col("depth") >= _),
+        p.maxDepth.map(col("depth") <= _),
+        p.minMagnitude.map(col("magnitude") >= _),
+        p.maxMagnitude.map(col("magnitude") <= _),
+        p.magnitudeType.map(col("magnitude_type") === _),
+        p.agency.map(col("agency") === _),
+        p.contributor.map(col("contributor") === _)))
     val sorted = p.orderBy match {
       // event id as deterministic tie-break, matching Jane's stable paging
       case "time"          => filtered.orderBy(col("time").desc, col("event_id").asc)
@@ -162,8 +186,7 @@ object FdsnQuery {
       // epoch must overlap [starttime, endtime]
       starttime: Option[String] = None,
       endtime: Option[String] = None,
-      // geographic constraints (same FDSN surface as the event service):
-      // box in degrees, point-radius in great-circle DEGREES per the spec
+      // geographic constraints (same FDSN surface as the event service)
       minLatitude: Option[Double] = None,
       maxLatitude: Option[Double] = None,
       minLongitude: Option[Double] = None,
@@ -173,7 +196,7 @@ object FdsnQuery {
       minRadius: Option[Double] = None, // degrees
       maxRadius: Option[Double] = None, // degrees
       updatedAfter: Option[String] = None, // ISO timestamp
-      level: String = "channel")
+      level: String = "channel") extends GeoParams
 
   /** Compile station params over a channel-epoch DataFrame with columns
     * `network, station, channel, epoch_start, epoch_end`.
@@ -187,31 +210,18 @@ object FdsnQuery {
     */
   def channels(index: DataFrame, p: StationParams): DataFrame = {
     def ts(s: String): Column = lit(s).cast("timestamp")
-    val preds = Seq(
-      p.network.map(matchesFdsn(col("network"), _)),
-      p.station.map(matchesFdsn(col("station"), _)),
-      p.channel.map(matchesFdsn(col("channel"), _)),
-      p.startBefore.map(col("epoch_start") < ts(_)),
-      p.startAfter.map(col("epoch_start") > ts(_)),
-      p.endBefore.map(col("epoch_end") < ts(_)),
-      p.endAfter.map(col("epoch_end") > ts(_)),
-      p.starttime.map(col("epoch_end") >= ts(_)),
-      p.endtime.map(col("epoch_start") <= ts(_)),
-      p.minLatitude.map(col("latitude") >= _),
-      p.maxLatitude.map(col("latitude") <= _),
-      p.minLongitude.map(col("longitude") >= _),
-      p.maxLongitude.map(col("longitude") <= _),
-      // updatedafter compares on integer epoch seconds (engine-portable)
-      p.updatedAfter.map(t =>
-        col("updated_s") >= unix_timestamp(lit(t).cast("timestamp")))
-    ).flatten ++ (for {
-      lat <- p.latitude; lon <- p.longitude
-    } yield {
-      val deg = expr(graft.functions.GeoFunctions
-        .centralAngleDegSql("latitude", "longitude", lat, lon))
-      deg >= p.minRadius.getOrElse(0.0) && deg <= p.maxRadius.getOrElse(180.0)
-    })
-    val filtered = preds.foldLeft(index)(_ filter _)
+    val filtered = filterBy(index, p,
+      lead = Seq(
+        p.network.map(matchesFdsn(col("network"), _)),
+        p.station.map(matchesFdsn(col("station"), _)),
+        p.channel.map(matchesFdsn(col("channel"), _)),
+        p.startBefore.map(col("epoch_start") < ts(_)),
+        p.startAfter.map(col("epoch_start") > ts(_)),
+        p.endBefore.map(col("epoch_end") < ts(_)),
+        p.endAfter.map(col("epoch_end") > ts(_)),
+        p.starttime.map(col("epoch_end") >= ts(_)),
+        p.endtime.map(col("epoch_start") <= ts(_))),
+      attrs = Nil)
     // station coords are constant per station (one instrument site), so
     // MIN is the identity pick — deterministic, unlike first()
     val geoAggs =

@@ -616,9 +616,9 @@ object JaneQueries {
       // group's final upload is a delete marker), and the survivor set
       // is installed DELIBERATELY FRAGMENTED (16 files) then compacted
       // to size-targeted files (ParquetStore.compact — pure layout,
-      // rename-aside swap). The card reports each stage's row/group
-      // counts and an integer content checksum; the '03_compacted' row
-      // is computed FROM THE POST-SWAP STORE READ, so compact's
+      // installed by ParquetStore.publish). The card reports each
+      // stage's row/group counts and an integer content checksum; the
+      // '03_compacted' row is computed FROM THE POST-SWAP STORE READ, so compact's
       // content-identity and the atomic install are what the oracle
       // hash actually checks (the oracle replays the logical pipeline
       // and expects vacuum's numbers for both final stages). Scale

@@ -726,7 +726,7 @@ object RelationalQueries {
     "q45_bucketed_join_serve" -> { (s, d) =>
       // The pay-once-at-write JOIN STRATEGY under the oracle (r12; the
       // j44 pattern applied to the last spec-only source operator —
-      // ParquetStoreSpec proves writeBucketed's zero-Exchange plan, this
+      // ParquetStoreSpec proves writeBucketedAt's zero-Exchange plan, this
       // query RUNS the lifecycle): lineitem and orders are written ONCE
       // as co-bucketed narrow projections (16 buckets on the order key,
       // guarded by buildIfStale with content stamps on BOTH source

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -9,15 +10,31 @@ import org.apache.spark.sql.functions._
   * params become directory-level partition pruning at 100 TB — the scan
   * never lists, let alone reads, out-of-window days. Bucketing on the key
   * columns (saveAsTable path) additionally co-locates the frequent joins.
+  *
+  * Publish protocol (Jane's rule: a re-upload supersedes the old version
+  * and no reader ever sees a half-written store). Every store write goes
+  * through [[publish]], which runs, in order:
+  *  1. heal — `path` missing and `path.old` present means a prior swap
+  *     was interrupted after the move-aside, so `.old` IS the store and
+  *     is renamed back ([[heal]]; a failed heal aborts);
+  *  1. write — the caller's writer fills a UNIQUE `path.install-<id>`
+  *     sibling (two concurrent publishers never share scratch);
+  *  1. move aside — `path` → `path.old`;
+  *  1. install — `path.install-<id>` → `path`, then `.old` is deleted;
+  *  1. sweep — stale `.install-` siblings are reclaimed
+  *     ([[sweepInstallScratch]]).
+  * At every instant `path` or `path.old` holds a complete store. A
+  * failure before the move-aside deletes the scratch dir. Kept-copy rule:
+  * a failure AFTER the move-aside (no `path`, a fully written scratch dir)
+  * keeps the scratch dir — it is the freshest complete copy — and records
+  * its name in the `path.install-kept` marker, so the next successful
+  * publish (or a valid-marker serve) reclaims exactly that copy.
   */
 object ParquetStore {
 
-  /** Write `df` partitioned by the calendar day of `tsCol`. */
+  /** Write `df` partitioned by the calendar day of `tsCol`, via [[publish]]. */
   def writeDayPartitioned(df: DataFrame, tsCol: String, path: String): Unit =
-    df.withColumn("p_day", to_date(col(tsCol)))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("p_day")
-      .parquet(path)
+    installOverwritePartitioned(df.withColumn("p_day", to_date(col(tsCol))), path, "p_day")
 
   /** Read back; time predicates on `p_day` prune partitions at planning. */
   def read(spark: SparkSession, path: String): DataFrame =
@@ -33,11 +50,10 @@ object ParquetStore {
     */
   def writeCellPartitioned(df: DataFrame, latCol: String, lonCol: String,
       path: String): Unit =
-    df.withColumn("p_cell_lat", expr(s"CAST(floor($latCol / 10) AS BIGINT)"))
-      .withColumn("p_cell_lon", expr(s"CAST(floor($lonCol / 10) AS BIGINT)"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("p_cell_lat", "p_cell_lon")
-      .parquet(path)
+    installOverwritePartitioned(
+      df.withColumn("p_cell_lat", expr(s"CAST(floor($latCol / 10) AS BIGINT)"))
+        .withColumn("p_cell_lon", expr(s"CAST(floor($lonCol / 10) AS BIGINT)")),
+      path, "p_cell_lat", "p_cell_lon")
 
   /** Cell predicates covering a bbox, for [[writeCellPartitioned]] stores:
     * AND these with the exact bbox filter to get pruning + exactness.
@@ -52,74 +68,53 @@ object ParquetStore {
     * per-task writers accumulate many tiny files, and at 100 TB scan
     * throughput dies on per-file open/footer overhead and undersized row
     * groups (plus a listing/metadata entry per file). Rewrites the store
-    * as ceil(bytes / targetBytes) files, installed with the same
-    * rename-aside swap as the streaming upsert sink so no reader ever
-    * sees a missing or half-written store, and an interrupted swap
-    * leaves `path` or `path.old` holding the complete pre-compaction
-    * data. Compaction is pure layout — content-identical by
-    * construction (spec-asserted). Returns the target file count.
+    * as ceil(bytes / targetBytes) files through [[publish]] (whose heal
+    * runs before the size read). Compaction is pure layout —
+    * content-identical by construction (spec-asserted). Returns the
+    * target file count.
     */
   def compact(spark: SparkSession, path: String,
-      targetBytes: Long = 128L << 20): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path.compact")
-    val old = new org.apache.hadoop.fs.Path(s"$path.old")
-    // heal an interrupted swap (the upsertSink rule): if the store is
-    // missing, the aside copy IS the store — a failed heal must abort,
-    // since proceeding would read nothing and then delete the only copy
-    if (!fs.exists(p) && fs.exists(old) && !fs.rename(old, p))
-      throw new java.io.IOException(s"compact: cannot heal $old -> $p")
-    val bytes = fs.getContentSummary(p).getLength
-    val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(path).repartition(n)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(p, old))
-      throw new java.io.IOException(s"compact: cannot move $path aside")
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"compact: cannot install $tmp at $path")
-    fs.delete(old, true)
-    n
-  }
+      targetBytes: Long = 128L << 20): Int =
+    publish(spark, path) { tmp =>
+      val p = new Path(path)
+      val bytes = p.getFileSystem(hadoopConf(spark)).getContentSummary(p).getLength
+      val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+      spark.read.parquet(path).repartition(n)
+        .write.mode(SaveMode.Overwrite).parquet(tmp)
+      n
+    }
 
-  /** Overwrite-install `df` at `path` without ever exposing a partial
-    * store: write to a UNIQUE sibling temp dir, then publish with the
-    * compact/upsertSink rename-aside swap. SaveMode.Overwrite deletes the
-    * target first and then writes file by file — a concurrent reader of
-    * the same fixed store path (the r6 ADVICE race: Verify and Bench on
-    * one SF) can plan against part files that vanish mid-write. Here the
-    * new store becomes visible in one rename, the unique temp name keeps
-    * two concurrent builders from trampling each other's scratch, and an
-    * interrupted swap leaves `path` or `path.old` holding a complete
-    * store (healed by [[compact]]'s rule).
+  /** Overwrite-install `df` at `path` through [[publish]].
+    * SaveMode.Overwrite onto the live path deletes the target first and
+    * then writes file by file — a concurrent reader of the same fixed
+    * store path (Verify and Bench on one SF) can plan against part files
+    * that vanish mid-write; here the new store becomes visible in one
+    * rename.
     */
   def installOverwrite(df: DataFrame, path: String): Unit =
-    installVia(df, path)(tmp =>
+    publish(df.sparkSession, path)(tmp =>
       df.write.mode(SaveMode.Overwrite).parquet(tmp))
 
   /** [[installOverwrite]] for a TEXT feed: CSV with a per-file header
     * (the reader's `header=true` skips one line per part file, so a
     * header written per file is the only layout that survives an
-    * arbitrary partition count). Same rename-aside swap.
+    * arbitrary partition count).
     */
   def installOverwriteCsv(df: DataFrame, path: String): Unit =
-    installVia(df, path)(tmp =>
+    publish(df.sparkSession, path)(tmp =>
       df.write.mode(SaveMode.Overwrite).option("header", "true").csv(tmp))
 
   /** [[installOverwrite]] for a raw LINE feed (one record per line —
     * the JSON-lines ingest shape): `df` must be a single STRING column.
-    * No per-file header concerns (text has no header row), same
-    * rename-aside swap. */
+    * No per-file header concerns (text has no header row). */
   def installOverwriteText(df: DataFrame, path: String): Unit =
-    installVia(df, path)(tmp =>
+    publish(df.sparkSession, path)(tmp =>
       df.write.mode(SaveMode.Overwrite).text(tmp))
 
   /** [[installOverwrite]] to ORC (the columnar interchange format
-    * [[Ingest.readOrcEvents]] reads back): same rename-aside swap. */
+    * [[Ingest.readOrcEvents]] reads back). */
   def installOverwriteOrc(df: DataFrame, path: String): Unit =
-    installVia(df, path)(tmp =>
+    publish(df.sparkSession, path)(tmp =>
       df.write.mode(SaveMode.Overwrite).orc(tmp))
 
   /** [[installOverwrite]] to XML via Spark 4.1's native XML writer (one
@@ -131,34 +126,52 @@ object ParquetStore {
     * text-lines install (the JSON-feed shape) cannot carry XML. The
     * writer is the only layout that keeps every file a well-formed
     * document under an arbitrary partition count — the same per-file
-    * concern [[installOverwriteCsv]] solves for headers. Same
-    * rename-aside swap. */
+    * concern [[installOverwriteCsv]] solves for headers. */
   def installOverwriteXml(df: DataFrame, path: String,
       rowTag: String, rootTag: String): Unit =
-    installVia(df, path)(tmp =>
+    publish(df.sparkSession, path)(tmp =>
       df.write.mode(SaveMode.Overwrite).format("xml")
         .option("rowTag", rowTag).option("rootTag", rootTag).save(tmp))
 
-  /** [[installOverwrite]] PARTITIONED by a column (hive-style
+  /** [[installOverwrite]] PARTITIONED by columns (hive-style
     * `col=value/` subdirectories): the layout that turns a time-travel
     * or day-scoped predicate into PARTITION PRUNING at the scan — the
     * pruned directories are never listed into the plan, so a query for
     * day <= T reads |T| partitions of a 100 TB store instead of
-    * filtering all of it. Same rename-aside swap (the partition dirs
-    * move with their parent). */
+    * filtering all of it. The partition dirs move with their parent. */
   def installOverwritePartitioned(df: DataFrame, path: String,
-      partitionCol: String): Unit =
-    installVia(df, path)(tmp =>
-      df.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(tmp))
+      partitionCols: String*): Unit =
+    publish(df.sparkSession, path)(tmp =>
+      df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(tmp))
 
-  private def installVia(df: DataFrame, path: String)(
-      writeTo: String => Unit): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$path.install-${java.util.UUID.randomUUID().toString.take(8)}")
-    val old = new org.apache.hadoop.fs.Path(s"$path.old")
+  private def hadoopConf(spark: SparkSession) = spark.sparkContext.hadoopConfiguration
+
+  /** Step 1 of the publish protocol: if the store at `path` is missing
+    * and `path.old` exists, an interrupted swap left the complete store
+    * aside — rename it back. A failed heal throws: proceeding would read
+    * "store absent" and then delete the only copy. Idempotent.
+    */
+  private[graft] def heal(spark: SparkSession, path: String): Unit = {
+    val p = new Path(path)
+    val old = new Path(s"$path.old")
+    val fs = p.getFileSystem(hadoopConf(spark))
+    if (!fs.exists(p) && fs.exists(old) && !fs.rename(old, p))
+      throw new java.io.IOException(s"publish: cannot heal $old -> $p")
+  }
+
+  /** The one store-publish path (protocol in the [[ParquetStore]] doc):
+    * heal, run `write` on a unique `path.install-<id>` scratch dir, move
+    * the live store aside, install the scratch dir, sweep. Returns what
+    * `write` returned. `write` may read the live store at `path` — it is
+    * only moved after `write` returns.
+    */
+  private[graft] def publish[T](spark: SparkSession, path: String)(
+      write: String => T): T = {
+    heal(spark, path)
+    val p = new Path(path)
+    val fs = p.getFileSystem(hadoopConf(spark))
+    val tmp = new Path(s"$path.install-${java.util.UUID.randomUUID().toString.take(8)}")
+    val old = new Path(s"$path.old")
     // tmp is deleted on ANY failure path (r13 ADVICE: a write that
     // throws before the swap must not leak .install-<uuid> scratch
     // dirs under /tmp/graft_stores); after a successful swap the
@@ -169,20 +182,21 @@ object ParquetStore {
     // live store was renamed aside — `path` absent, fully-written tmp
     // present — tmp is the freshest complete copy and deleting it would
     // leave only `.old`; keep it and log its path so recovery doesn't
-    // depend solely on compact's heal rule or a rebuild.
-    var written = false // tmp is COMPLETE only once writeTo returned
+    // depend solely on the heal rule or a rebuild.
+    var written = false // tmp is COMPLETE only once write returned
     try {
-      writeTo(tmp.toString)
+      val out = write(tmp.toString)
       written = true
       if (fs.exists(old)) fs.delete(old, true)
       if (fs.exists(p) && !fs.rename(p, old))
-        throw new java.io.IOException(s"install: cannot move $path aside")
+        throw new java.io.IOException(s"publish: cannot move $path aside")
       if (!fs.rename(tmp, p))
-        throw new java.io.IOException(s"install: cannot install $tmp at $path")
+        throw new java.io.IOException(s"publish: cannot install $tmp at $path")
       fs.delete(old, true)
       // the new generation is live: reclaim stale install scratch (a
       // prior failed swap's kept recovery copy, age-expired siblings)
       sweepInstallScratch(fs, p)
+      out
     } finally {
       try if (fs.exists(tmp)) {
         if (!written || fs.exists(p)) fs.delete(tmp, true)
@@ -519,69 +533,40 @@ object ParquetStore {
     }
   }
 
-  /** Write a table bucketed (and sorted) on its join key. Two tables
-    * bucketed the same way join with NO shuffle on either side — at 100 TB
-    * the lineitem⋈orders join becomes a per-bucket sort-merge with zero
-    * network movement, paid once at write time instead of per query.
-    */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-      buckets: Int): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .format("parquet")
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .saveAsTable(table)
-
-  /** [[writeBucketed]] to an EXPLICIT location with the rename-aside
-    * install discipline (the r12 serving-store form): the bucketed
-    * writer only runs through `saveAsTable`, so the files are written
-    * via a throwaway catalog entry pointing at a unique temp dir, the
-    * entry is dropped (external — metadata only, the files stay), and
-    * the dir is published with the same atomic swap as
-    * [[installOverwrite]] — no reader window without a complete store,
-    * interrupted swaps heal by [[compact]]'s rule. Bucket-id file
-    * naming survives the rename, so [[registerBucketed]] can attach
-    * the layout in any later session. Pairs with [[buildIfStale]] for
-    * the pay-once-at-write lifecycle.
+  /** Write a table bucketed (and sorted) on its join key at `path`,
+    * through [[publish]]. Two tables bucketed the same way join with NO
+    * shuffle on either side — at 100 TB the lineitem⋈orders join becomes
+    * a per-bucket sort-merge with zero network movement, paid once at
+    * write time instead of per query. The bucketed writer only runs
+    * through `saveAsTable`, so the files are written via a throwaway
+    * catalog entry pointing at the scratch dir, and the entry is dropped
+    * (external — metadata only, the files stay). Bucket-id file naming
+    * survives the rename, so [[registerBucketed]] can attach the layout
+    * in any later session. Pairs with [[buildIfStale]] for the
+    * pay-once-at-write lifecycle.
     */
   def writeBucketedAt(df: DataFrame, path: String, bucketCol: String,
       buckets: Int): Unit = {
     val s = df.sparkSession
-    val scratch = s"graft_bucketed_build_${java.util.UUID.randomUUID().toString.take(8).replace('-', '_')}"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      s.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$path.install-${java.util.UUID.randomUUID().toString.take(8)}")
-    val old = new org.apache.hadoop.fs.Path(s"$path.old")
-    // the throwaway catalog entry and the scratch dir are both dropped
-    // on ANY failure path (r13 ADVICE: repeated failed builds must not
-    // accumulate junk in the session catalog or under /tmp); after a
-    // successful swap the rename has consumed tmp and both finally
-    // actions are no-ops. Each cleanup is independently guarded: a
-    // DROP TABLE on a broken/stopped session must neither mask the
-    // primary exception nor skip the tmp delete.
-    try {
-      df.write.mode(SaveMode.Overwrite)
-        .format("parquet")
-        .option("path", tmp.toString)
-        .bucketBy(buckets, bucketCol)
-        .sortBy(bucketCol)
-        .saveAsTable(scratch)
-      s.sql(s"DROP TABLE IF EXISTS $scratch")
-      if (fs.exists(old)) fs.delete(old, true)
-      if (fs.exists(p) && !fs.rename(p, old))
-        throw new java.io.IOException(s"writeBucketedAt: cannot move $path aside")
-      if (!fs.rename(tmp, p))
-        throw new java.io.IOException(s"writeBucketedAt: cannot install $tmp at $path")
-      fs.delete(old, true)
-    } finally {
-      try s.sql(s"DROP TABLE IF EXISTS $scratch")
-      catch { case e: Throwable =>
-        System.err.println(s"writeBucketedAt cleanup ($scratch): $e") }
-      try if (fs.exists(tmp)) fs.delete(tmp, true)
-      catch { case e: Throwable =>
-        System.err.println(s"writeBucketedAt cleanup ($tmp): $e") }
+    val scratch = s"graft_bucketed_build_${java.util.UUID.randomUUID().toString.take(8)}"
+    publish(s, path) { tmp =>
+      // the throwaway catalog entry is dropped on ANY failure path (r13
+      // ADVICE: repeated failed builds must not accumulate junk in the
+      // session catalog); the guarded finally DROP on a broken/stopped
+      // session must never mask the primary exception
+      try {
+        df.write.mode(SaveMode.Overwrite)
+          .format("parquet")
+          .option("path", tmp)
+          .bucketBy(buckets, bucketCol)
+          .sortBy(bucketCol)
+          .saveAsTable(scratch)
+        s.sql(s"DROP TABLE IF EXISTS $scratch")
+      } finally {
+        try s.sql(s"DROP TABLE IF EXISTS $scratch")
+        catch { case e: Throwable =>
+          System.err.println(s"writeBucketedAt cleanup ($scratch): $e") }
+      }
     }
   }
 

@@ -1,10 +1,12 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
 
 import graft.functions.ExactNum.{cents, sumCents}
+import graft.sources.ParquetStore
 
 /** Running per-user totals carried across micro-batches. */
 final case class UserRunning(user_id: Long, n_events: Long, value_c: Long)
@@ -206,7 +208,7 @@ object EventStreams {
     * the scan by the same fused codegen expression the batch side uses
     * (`graft_minhash16` via `Dedup.bandSignatures` — a stateless
     * projection, so it streams), then stream-static joined against the
-    * PERSISTED corpus band index (the table `ParquetStore.writeBucketed`
+    * PERSISTED corpus band index (the store `ParquetStore.writeBucketedAt`
     * lays out for the batch d14 — ParquetStoreSpec proves that layout
     * joins with the corpus side shuffle-free). Emits candidate
     * (new_id, dup_of) evidence rows; a pair sharing several bands emits
@@ -319,46 +321,29 @@ object EventStreams {
     * Durability: "store absent" is decided by an explicit existence check,
     * never by catching read exceptions — a transient IO error or corrupt
     * footer fails the batch (the checkpoint retries it) instead of being
-    * mistaken for an empty store and wiping it. The swap is rename-aside
-    * (`path`→`path.old`, tmp→`path`, delete old): at every instant either
-    * `path` or `path.old` holds the full pre/post-merge store, and an
-    * interrupted swap is healed at the start of the next batch.
+    * mistaken for an empty store and wiping it. The merged store is
+    * installed by [[graft.sources.ParquetStore.publish]], whose heal step
+    * repairs an interrupted swap before the existence check.
     */
   def upsertSink(spark: SparkSession, stream: DataFrame, key: String,
       path: String, checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
-        val p = new org.apache.hadoop.fs.Path(path)
-        val tmp = new org.apache.hadoop.fs.Path(s"$path.tmp")
-        val old = new org.apache.hadoop.fs.Path(s"$path.old")
-        // heal an interrupted swap: the aside copy is the live store. A
-        // failed heal must ABORT (Hadoop signals failure by returning
-        // false): proceeding would read "store absent", then delete the
-        // aside copy — the data-loss class this sink guards against.
-        if (!fs.exists(p) && fs.exists(old) && !fs.rename(old, p))
-          throw new java.io.IOException(s"upsertSink: cannot heal $old -> $p")
-        val existing =
-          if (fs.exists(p)) spark.read.parquet(path) // read errors fail the batch
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-        // latest-wins within the batch too: keep the highest ts per key
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(key).orderBy(col("ts").desc)
-        val deduped = batch.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-        graft.operators.DocumentStore.upsert(existing, deduped, key)
-          .write.mode("overwrite").parquet(s"$path.tmp")
-        // rename-aside swap: never a window with no complete store on disk
-        if (fs.exists(old)) fs.delete(old, true)
-        if (fs.exists(p) && !fs.rename(p, old))
-          throw new java.io.IOException(s"upsertSink: cannot move $path aside")
-        if (!fs.rename(tmp, p))
-          throw new java.io.IOException(s"upsertSink: cannot publish $tmp")
-        fs.delete(old, true)
-        ()
+        ParquetStore.publish(spark, path) { tmp =>
+          val existing =
+            if (storeFs(spark, path).exists(new Path(path)))
+              spark.read.parquet(path) // read errors fail the batch
+            else spark.createDataFrame(
+              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
+          // latest-wins within the batch too: keep the highest ts per key
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(key).orderBy(col("ts").desc)
+          val deduped = batch.withColumn("__rn", row_number().over(w))
+            .filter(col("__rn") === 1).drop("__rn")
+          graft.operators.DocumentStore.upsert(existing, deduped, key)
+            .write.mode("overwrite").parquet(tmp)
+        }
       }
       .start()
 
@@ -369,8 +354,8 @@ object EventStreams {
     * non-key column, so refresh cost is O(|MV| + batch) with no history
     * rescan and NO per-key streaming state (the MV itself is the state).
     * Durability follows [[upsertSink]] exactly: explicit existence check
-    * (read errors fail the batch and retry via checkpoint), rename-aside
-    * swap with start-of-batch healing.
+    * (read errors fail the batch and retry via checkpoint), installed by
+    * [[graft.sources.ParquetStore.publish]].
     *
     * Idempotence (r6 ADVICE): foreachBatch is at-least-once — a crash
     * after the publish rename but before the checkpoint commit replays
@@ -397,39 +382,35 @@ object EventStreams {
   def mvRefreshBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       path: String, partials: DataFrame => DataFrame,
       mergeKeys: Seq[String]): Unit = {
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
-        val p = new org.apache.hadoop.fs.Path(path)
-        val tmp = new org.apache.hadoop.fs.Path(s"$path.tmp")
-        val old = new org.apache.hadoop.fs.Path(s"$path.old")
-        if (!fs.exists(p) && fs.exists(old) && !fs.rename(old, p))
-          throw new java.io.IOException(s"mvRefreshSink: cannot heal $old -> $p")
-        // replay after a successful publish: already applied, no-op
-        if (fs.exists(p) && readBatchMeta(fs, p).contains(batchId)) return
-        val delta = partials(batch)
-        val merged =
-          if (fs.exists(p)) {
-            val existing = spark.read.parquet(path)
-            val valueCols = delta.columns.filterNot(mergeKeys.contains)
-            existing.unionByName(delta)
-              .groupBy(mergeKeys.map(col): _*)
-              .agg(sum(col(valueCols.head)).as(valueCols.head),
-                valueCols.tail.map(c => sum(col(c)).as(c)): _*)
-          } else delta
-        merged.write.mode("overwrite").parquet(s"$path.tmp")
-        writeBatchMeta(fs, tmp, batchId)
-        if (fs.exists(old)) fs.delete(old, true)
-        if (fs.exists(p) && !fs.rename(p, old))
-          throw new java.io.IOException(s"mvRefreshSink: cannot move $path aside")
-        if (!fs.rename(tmp, p))
-          throw new java.io.IOException(s"mvRefreshSink: cannot publish $tmp")
-        fs.delete(old, true)
-        ()
+    val fs = storeFs(spark, path)
+    val p = new Path(path)
+    // heal BEFORE the replay check: an interrupted swap leaves the
+    // published batch id in `.old`
+    ParquetStore.heal(spark, path)
+    // replay after a successful publish: already applied, no-op
+    if (fs.exists(p) && readBatchMeta(fs, p).contains(batchId)) return
+    ParquetStore.publish(spark, path) { tmp =>
+      val delta = partials(batch)
+      val merged =
+        if (fs.exists(p)) {
+          val existing = spark.read.parquet(path)
+          val valueCols = delta.columns.filterNot(mergeKeys.contains)
+          existing.unionByName(delta)
+            .groupBy(mergeKeys.map(col): _*)
+            .agg(sum(col(valueCols.head)).as(valueCols.head),
+              valueCols.tail.map(c => sum(col(c)).as(c)): _*)
+        } else delta
+      merged.write.mode("overwrite").parquet(tmp)
+      writeBatchMeta(fs, new Path(tmp), batchId)
+    }
   }
 
+  private def storeFs(spark: SparkSession, path: String) =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   private def readBatchMeta(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Option[Long] = {
-    val m = new org.apache.hadoop.fs.Path(dir, "_graft_last_batch")
+      dir: Path): Option[Long] = {
+    val m = new Path(dir, "_graft_last_batch")
     if (!fs.exists(m)) None
     else {
       val in = fs.open(m)
@@ -440,8 +421,8 @@ object EventStreams {
   }
 
   private def writeBatchMeta(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, id: Long): Unit = {
-    val out = fs.create(new org.apache.hadoop.fs.Path(dir, "_graft_last_batch"), true)
+      dir: Path, id: Long): Unit = {
+    val out = fs.create(new Path(dir, "_graft_last_batch"), true)
     try out.write(s"$id\n".getBytes("UTF-8")) finally out.close()
   }
 

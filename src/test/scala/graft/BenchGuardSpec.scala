@@ -334,14 +334,34 @@ class BenchGuardSpec extends AnyFunSuite {
     val (fullBefore, realBefore) = (snapshot(full), snapshot(real))
     val side = java.nio.file.Files.createTempFile("graft_bench_sidecar", ".json")
     try {
-      Bench.persistArtifacts(sentinel, fullRun = false, side.toString)
+      val runId = Bench.persistArtifacts(sentinel, fullRun = false, side.toString)
       assert(new String(java.nio.file.Files.readAllBytes(side), "UTF-8")
-        == sentinel + "\n", "sidecar must carry the exact line")
+        == s"""{"run_id":"$runId",""" + sentinel.drop(1) + "\n",
+        "sidecar must carry the exact line, stamped with the run id")
+      assert(Bench.persistArtifacts(sentinel, fullRun = false, side.toString) != runId,
+        "two rolls must get distinct run ids")
     } finally java.nio.file.Files.deleteIfExists(side)
     assert(snapshot(full) == fullBefore,
       "a selective run must not clobber the committed round record")
     assert(snapshot(real) == realBefore,
       "the spec must not touch the real bench sidecar")
+  }
+
+  test("persistArtifacts replaces a symlink at the sidecar path, never its target") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft_bench_symlink")
+    val victim = dir.resolve("victim.txt")
+    Files.write(victim, "keep me".getBytes("UTF-8"))
+    val side = Files.createSymbolicLink(dir.resolve("sidecar.json"), victim)
+    try {
+      Bench.persistArtifacts("""{"metric":"total"}""", fullRun = false, side.toString)
+      assert(new String(Files.readAllBytes(victim), "UTF-8") == "keep me",
+        "the symlink target must be untouched")
+      assert(!Files.isSymbolicLink(side) && Files.isRegularFile(side))
+      assert(new String(Files.readAllBytes(side), "UTF-8").startsWith("""{"run_id":"""))
+      assert(dir.toFile.list().toSet == Set("victim.txt", "sidecar.json"),
+        "the sibling temp file must be moved, not left behind")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
   test("PassWall buckets t37 step labels by pass and aggregates wall time") {

@@ -48,6 +48,18 @@ class ParquetStoreSpec extends SparkSpec {
     assert(pruned.count() == expected)
   }
 
+  /** `df` written by [[ParquetStore.writeBucketedAt]] to a fresh temp
+    * dir and attached as `table` by [[ParquetStore.registerBucketed]] —
+    * the q45 serving path. */
+  private def bucketedTable(df: org.apache.spark.sql.DataFrame, table: String,
+      bucketCol: String, buckets: Int): org.apache.spark.sql.DataFrame = {
+    val path = Files.createTempDirectory(s"graft_$table").toString + "/store"
+    ParquetStore.writeBucketedAt(df, path, bucketCol, buckets)
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    ParquetStore.registerBucketed(spark, table, path, df.schema.toDDL, bucketCol, buckets)
+    spark.table(table)
+  }
+
   test("co-bucketed tables join without a shuffle") {
     val conf = spark.conf
     val aqe = conf.get("spark.sql.adaptive.enabled", "true")
@@ -56,23 +68,9 @@ class ParquetStoreSpec extends SparkSpec {
       // force a sort-merge join and a stable (non-adaptive) plan to inspect
       conf.set("spark.sql.adaptive.enabled", "false")
       conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // the in-memory catalog forgets tables between JVMs but their
-      // warehouse directories survive — clear both
-      Seq("lineitem_b", "orders_b").foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        val loc = new java.io.File(
-          spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t)
-        if (loc.exists()) {
-          import scala.reflect.io.Directory
-          new Directory(loc).deleteRecursively()
-        }
-      }
-      graft.sources.ParquetStore.writeBucketed(
-        Tables.lineitem(spark, sfDir), "lineitem_b", "l_orderkey", 8)
-      graft.sources.ParquetStore.writeBucketed(
-        Tables.orders(spark, sfDir), "orders_b", "o_orderkey", 8)
-      val joined = spark.table("lineitem_b")
-        .join(spark.table("orders_b"), col("l_orderkey") === col("o_orderkey"))
+      val joined = bucketedTable(Tables.lineitem(spark, sfDir), "lineitem_b", "l_orderkey", 8)
+        .join(bucketedTable(Tables.orders(spark, sfDir), "orders_b", "o_orderkey", 8),
+          col("l_orderkey") === col("o_orderkey"))
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"),
         s"bucketed join must not shuffle either side:\n$plan")
@@ -93,20 +91,12 @@ class ParquetStoreSpec extends SparkSpec {
     try {
       conf.set("spark.sql.adaptive.enabled", "false")
       conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.sql("DROP TABLE IF EXISTS lsh_index_b")
-      val loc = new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), "lsh_index_b")
-      if (loc.exists()) {
-        import scala.reflect.io.Directory
-        new Directory(loc).deleteRecursively()
-      }
       val docs = Tables.documents(spark, sfDir)
       val bands = graft.operators.Dedup.bandSignatures(docs, 16, 2)
         .withColumn("key", concat_ws("-", col("band"), col("sig")))
-      ParquetStore.writeBucketed(
+      val corpus = bucketedTable(
         bands.filter(col("doc_id") % 10 =!= 7).select("doc_id", "key"),
-        "lsh_index_b", "key", 8)
-      val corpus = spark.table("lsh_index_b").withColumnRenamed("doc_id", "dup_of")
+        "lsh_index_b", "key", 8).withColumnRenamed("doc_id", "dup_of")
       val batch = bands.filter(col("doc_id") % 10 === 7)
         .select(col("doc_id").as("new_id"), col("key"))
       val joined = corpus.join(batch, "key")
@@ -136,10 +126,11 @@ class ParquetStoreSpec extends SparkSpec {
     assert(before >= 40, s"fixture should be fragmented, got $before files")
     val n = ParquetStore.compact(spark, dir, targetBytes = 1L << 30)
     assert(n == 1 && files == 1, s"expected 1 compacted file, got $files")
-    // compaction is pure layout: content identical, temp/aside dirs gone
+    // compaction is pure layout: content identical, scratch/aside dirs gone
     val got = spark.read.parquet(dir).orderBy("doc_id").collect().toSeq
     assert(got == docs.orderBy("doc_id").collect().toSeq)
-    assert(!new java.io.File(dir + ".compact").exists())
+    val siblings = new java.io.File(dir).getParentFile.list().toSeq
+    assert(!siblings.exists(_.contains(".install-")), s"scratch left: $siblings")
     assert(!new java.io.File(dir + ".old").exists())
     // interrupted-swap injection (the upsertSink discipline): store moved
     // aside, install never happened — the next compact must heal first
@@ -149,6 +140,24 @@ class ParquetStoreSpec extends SparkSpec {
     assert(spark.read.parquet(dir).orderBy("doc_id").collect().toSeq ==
       docs.orderBy("doc_id").collect().toSeq)
     assert(!new java.io.File(dir + ".old").exists())
+  }
+
+  test("publish heals an interrupted swap before its writer runs; heal is idempotent") {
+    val parent = Files.createTempDirectory("graft_publish_heal").toFile
+    val path = parent.getPath + "/store"
+    ParquetStore.installOverwrite(spark.range(5).toDF("id"), path)
+    assert(new java.io.File(path).renameTo(new java.io.File(path + ".old")))
+    ParquetStore.heal(spark, path)
+    ParquetStore.heal(spark, path)
+    assert(parent.list().toSet == Set("store"))
+    val seen = ParquetStore.publish(spark, path) { tmp =>
+      val n = spark.read.parquet(path).count()
+      spark.range(7).toDF("id").write.parquet(tmp)
+      n
+    }
+    assert(seen == 5, "the writer must see the healed store")
+    assert(spark.read.parquet(path).count() == 7)
+    assert(parent.list().toSet == Set("store"))
   }
 
   test("a failed install leaves no scratch dirs and no catalog junk (r13 ADVICE)") {
@@ -183,7 +192,7 @@ class ParquetStoreSpec extends SparkSpec {
   }
 
   test("a successful install sweeps a prior run's kept recovery copy (r14)") {
-    // installVia keeps a FULLY-WRITTEN tmp when the swap failed after
+    // publish keeps a FULLY-WRITTEN tmp when the swap failed after
     // the live store was moved aside (the r13 ADVICE: the fresh build
     // must not be the copy that's deleted) — but once a LATER install
     // succeeds, that recovery copy is stale and must be reclaimed, or
