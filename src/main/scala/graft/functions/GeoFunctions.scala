@@ -27,13 +27,6 @@ object GeoFunctions {
       minLat: Double, maxLat: Double, minLon: Double, maxLon: Double): Column =
     lat.between(minLat, maxLat) && lon.between(minLon, maxLon)
 
-  /** Point-radius ring (FDSN latitude/longitude/minradius/maxradius). */
-  def inRadiusKm(lat: Column, lon: Column, centerLat: Double, centerLon: Double,
-      minKm: Double, maxKm: Double): Column = {
-    val d = haversineKm(lit(centerLat), lit(centerLon), lat, lon)
-    d >= minKm && d <= maxKm
-  }
-
   /** Great-circle central angle in DEGREES from a fixed center — the unit
     * the FDSN spec defines for event/station minradius/maxradius. One
     * generated SQL text over index columns `latC`/`lonC`, spliced

@@ -242,7 +242,9 @@ object Dedup {
     */
   def components(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
     // r20 loop-conf adaptation (guide §1.2/§2): the round shape itself was
-    // already near its floor — ProfileComp measured the warm per-call cost
+    // already near its floor — an r20 profile (`git show
+    // 4a72e29:src/test/scala/graft/ProfileComp.scala`, since deleted; it
+    // timed the pre-consolidation loop) measured the warm per-call cost
     // dominated by AQE's sequential stage materialization and per-job
     // fixed overhead across the ~7 tiny rounds, not by the joins' data
     // (a fused union-agg + lazy-ckpt + fused-convergence-count variant

@@ -385,9 +385,10 @@ object RelationalQueries {
     // Plan note: the DISTINCT aggregate runs ALONE, joined on the 3-row
     // group key with one agg holding every non-distinct function —
     // mixing countDistinct with imperative-buffer aggregates routes ALL
-    // of them through the distinct-Expand rewrite: measured (ProfileQ18,
-    // sf0.1) all-four-in-one 13.2 s, countDistinct+HLL++ 2.3 s, vs
-    // 0.72 s countDistinct alone + 0.56 s percentile+approx_percentile
+    // of them through the distinct-Expand rewrite: measured (sf0.1,
+    // `git show 4a72e29:src/test/scala/graft/ProfileQ18.scala`)
+    // all-four-in-one 13.2 s, countDistinct+HLL++ 2.3 s, vs 0.72 s
+    // countDistinct alone + 0.56 s percentile+approx_percentile
     // together. Two pushed-down 2-column scans beat one 28x-slower
     // combined pass — same trade at 100 TB.
     "q18_approx_stats" -> { (s, d) =>

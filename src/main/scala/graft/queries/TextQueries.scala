@@ -187,27 +187,17 @@ object TextQueries {
       .distinct()
   }
 
-  /** Positional twin of [[winnowFps]]: (doc_id, fp, gpos) rows, where
-    * gpos is the 1-based gram position of the selected occurrence,
-    * recovered from the packed minkey (`fp = key div c`,
-    * `gpos = (c-1) - key mod c`). t37's position-bounded confirm join
-    * needs the selection positions; t25 keeps the fp-only form.
-    */
-  private[graft] def winnowFpsPos(docs: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
-    docs.select(col("doc_id"), explode(expr("graft_winnow13p(text)")).as("key"))
-      .select(col("doc_id"), expr(s"key div $WinC").as("fp"),
-        expr(s"($WinC - 1) - (key % $WinC)").as("gpos"))
-  }
-
-  /** [[winnowFpsPos]] with the 27-char confirm CONTEXT SLICE carried per
-    * occurrence (r10, the §7 r11(a) lever): s = text[st, gpos+18] where
-    * st = max(gpos - WinW, 0) — exactly the slice spanConfirmCut's
-    * legacy path cut per occurrence via a per-pass corpus-text join.
-    * Computing it HERE, in the same projection as the winnow explode
-    * (text is still in scope — no join, no codegen variant needed),
-    * deletes that join and the collect_set regroup from every t37 pass.
-    * Space trade: ≤ 27 chars per fingerprint row (~+40%), the standard
+  /** Positional, slice-carrying twin of [[winnowFps]]: (doc_id, fp,
+    * gpos, s) rows, where gpos is the 1-based gram position of the
+    * selected occurrence, recovered from the packed minkey (`fp = key div
+    * c`, `gpos = (c-1) - key mod c`), and s is the 27-char confirm
+    * CONTEXT SLICE text[st, gpos+18], st = max(gpos - WinW, 0) — every
+    * aligned window start behind gpos. t37's position-bounded confirm
+    * needs both; t25 keeps the fp-only form. Computing the slice HERE,
+    * in the same projection as the winnow explode (text is still in
+    * scope — no join, no codegen variant needed), keeps every t37 pass
+    * free of a corpus-text join and a collect_set regroup. Space trade:
+    * ≤ 27 chars per fingerprint row (~+40%), the standard
     * store-context-with-the-index trade; the fps table stays
     * ∝ positions/WinW.
     */
@@ -223,18 +213,15 @@ object TextQueries {
   }
 
   /** The slice expression shared by [[winnowFpsPosS]] and spanRemoval's
-    * delta-side fps maintenance: requires `text` and `gpos` in scope.
-    * (Plain private again since r12 — ProfileT37g drives spanRemoval
-    * through the [[StepProbe]] hook since r11, so nothing outside this
-    * object needs the SQL text; the r11 ADVICE dead-surface note.) */
+    * delta-side fps maintenance: requires `text` and `gpos` in scope. */
   private def sliceExpr = expr(
     s"substring(text, CAST(greatest(gpos - $WinW, 0L) + 1 AS INT), " +
       s"CAST(gpos + 19 - greatest(gpos - $WinW, 0L) AS INT))")
 
-  /** Positional declarative twin of [[winnowFpsPos]] (the form the
-    * DuckDB oracle's selp CTE replays): positional hashes -> packed
-    * keys -> per-doc windowed MIN -> distinct (fp, gpos) recovery from
-    * the packed minkey.
+  /** Positional declarative twin of [[winnowFpsPosS]]'s (doc_id, fp,
+    * gpos) columns (the form the DuckDB oracle's selp CTE replays):
+    * positional hashes -> packed keys -> per-doc windowed MIN ->
+    * distinct (fp, gpos) recovery from the packed minkey.
     */
   private[graft] def winnowFpsPosDeclarative(docs: DataFrame): DataFrame = {
     val h = docs
@@ -253,7 +240,7 @@ object TextQueries {
       .distinct()
   }
 
-  /** t25/t37's shared capped-rare fingerprint table: winnowing
+  /** t25's capped-rare fingerprint table: winnowing
     * fingerprints joined against their corpus document frequency, with
     * boilerplate fps (df > max(20, 1% of corpus)) dropped — the cap
     * that bounds the candidate-pair join fan-out (t25's measured 79%
@@ -261,57 +248,25 @@ object TextQueries {
     * both self-join sides (and t25's per-doc counts) — without it the
     * winnow+df subtree executes once per consumer.
     */
-  private[graft] def winnowRare(docs: DataFrame): DataFrame =
-    capRare(winnowFps(docs), docs.agg(count(lit(1)).as("n_docs")))
-
-  /** The df-cap half of [[winnowRare]], split out so t37's later passes
-    * can feed an INCREMENTALLY maintained raw-fp table instead of
-    * re-winnowing the whole corpus (fps are a deterministic function of
-    * text, so unchanged docs keep their pass-1 fps verbatim).
-    */
-  private def capRare(fpsAll: DataFrame, ndocs: DataFrame): DataFrame = {
+  private[graft] def winnowRare(docs: DataFrame): DataFrame = {
+    val fpsAll = winnowFps(docs)
     val dfc = fpsAll.groupBy("fp").agg(count(lit(1)).as("dfc"))
-    fpsAll.join(dfc, "fp").crossJoin(broadcast(ndocs))
+    fpsAll.join(dfc, "fp")
+      .crossJoin(broadcast(docs.agg(count(lit(1)).as("n_docs"))))
       .filter(col("dfc") <= expr("greatest(CAST(20 AS BIGINT), n_docs div 100)"))
       .select("doc_id", "fp")
       .localCheckpoint()
   }
 
-  /** Positional [[capRare]]: same df cap (document frequency over
-    * DISTINCT (doc_id, fp) — a fp selected at several positions counts
-    * its doc once), but the surviving rows keep every selection
-    * position: (doc_id, fp, gpos). Also returns the CAPPED fp set
-    * (df > cap — the boilerplate tail, a few hundred fps at most):
-    * [[spanRemoval]]'s pass k+1 needs "which fps were capped at pass k"
-    * to find newly-uncapped evidence (see the skip proof there).
-    */
-  private[graft] def capRarePos(fpsPos: DataFrame,
-      ndocs: DataFrame): (DataFrame, DataFrame) = {
-    // df ≤ cap ⇔ fp not in the capped set, and the capped set is the
-    // tiny boilerplate tail (a few hundred fps) — so rare is a
-    // broadcast ANTI-join against it, not a shuffled join against the
-    // full df table: one groupBy shuffle + one broadcast pass total.
-    val capped = fpsPos.select("doc_id", "fp").distinct()
-      .groupBy("fp").agg(count(lit(1)).as("dfc"))
-      .crossJoin(broadcast(ndocs))
-      .filter(col("dfc") > expr("greatest(CAST(20 AS BIGINT), n_docs div 100)"))
-      .select("fp")
-      .localCheckpoint()
-    // rare IS checkpointed: it feeds 2-3 consumers per pass and each
-    // un-materialized consumer would rebuild the capped broadcast
-    // (measured +3 s/run when dropped).
-    val rare = fpsPos.join(broadcast(capped), Seq("fp"), "left_anti")
-      .select("doc_id", "fp", "gpos")
-      .localCheckpoint()
-    (rare, capped)
-  }
-
-  /** One detect→cut pass of t37's span removal over (doc_id, text):
-    * every evidenced span ≥ 20 chars shared between two docs is CUT
-    * from the higher doc_id (keep-lowest policy, applied per pair on
-    * the pass's INPUT texts, so a doc can simultaneously keep vs a
-    * higher partner and lose vs a lower one). Emits (doc_id,
-    * text_clean), one row per doc this pass CHANGED.
+  /** One detect→cut pass of t37's span removal, from the pass's
+    * evidence occurrences: every evidenced span ≥ 20 chars shared
+    * between two docs is CUT from the higher doc_id (keep-lowest policy,
+    * applied per pair on the pass's INPUT texts, so a doc can
+    * simultaneously keep vs a higher partner and lose vs a lower one).
+    * `sliced` = (doc_id, fp, gpos, s), the [[winnowFpsPosS]] rows of the
+    * evidence; `docs` need only cover the docs that can be MARKED (inner
+    * cut join — a superset is identical). Emits (doc_id, text_clean,
+    * prev_len), one row per doc this pass CHANGED.
     *
     * Shape — confirm work is LINEAR in evidence occurrences, never
     * ∝ document bytes or ∝ pairs × grams: the winnowing window argument
@@ -319,97 +274,27 @@ object TextQueries {
     * window of WinW=8 grams it contains, at the SAME relative offset δ
     * in both docs. So a confirmed 20-gram behind an evidence occurrence
     * (fp at 1-based gram position g in its doc) can only start at the
-    * aligned char offsets g-k, k ∈ [1, WinW], and two docs confirm each
-    * other exactly when they contribute the SAME (fp, k, 20-gram) —
-    * which turns confirmation into ONE groupBy over |occurrences| ×
-    * WinW candidate rows: per (fp, k, gram) group, every occurrence
-    * above the group's min doc_id is a confirmed mark (keep-lowest; the
-    * min doc itself keeps). No pair self-join, no per-pair probes, no
-    * large broadcast — the r7 design gram-exploded whole documents per
-    * candidate PAIR (the 208 s catastrophe on the self-similar corpus),
-    * the first r8 rewrite still built the df-bounded pair cross-product
-    * (quadratic in df per fp); this is linear and its shuffle key
-    * (fp, k, gram) is skew-free by the df cap. Spans ALL of whose
-    * windows select df-capped boilerplate fps are t23's domain
-    * (documented carve-out; on cap-free corpora this equals the
-    * all-pairs gram join exactly — OperatorsSpec replays that
-    * equivalence). Cut = complement of the union of marked [p, p+19]
-    * intervals, assembled per doc with array HOFs (sorted fixed-width
-    * intervals: running cover end is last p + 19, so gap i is
-    * [ps[i-1]+20, ps[i]-1]).
+    * aligned char offsets g-k, k ∈ [1, WinW] — all inside the
+    * occurrence's 27-char slice s — and two docs confirm each other
+    * exactly when they contribute the SAME (fp, k, 20-gram). That turns
+    * confirmation into ONE grouping over |occurrences| × WinW candidate
+    * rows: per (fp, k, gram) group, every occurrence above the group's
+    * min doc_id is a confirmed mark (the min doc itself keeps). No pair
+    * self-join, no per-pair probes, no large broadcast — the r7 design
+    * gram-exploded whole documents per candidate PAIR (the 208 s
+    * catastrophe on the self-similar corpus), the first r8 rewrite still
+    * built the df-bounded pair cross-product (quadratic in df per fp);
+    * this is linear and its shuffle key (fp, k, gram) is skew-free by
+    * the df cap. Spans ALL of whose windows select df-capped boilerplate
+    * fps are t23's domain (documented carve-out; on cap-free corpora
+    * this equals the all-pairs gram join exactly — OperatorsSpec replays
+    * that equivalence). Cut = complement of the union of marked
+    * [p, p+19] intervals, assembled per doc with array HOFs (sorted
+    * fixed-width intervals: running cover end is last p + 19, so gap i
+    * is [ps[i-1]+20, ps[i]-1]).
     */
-  private[graft] def spanPass(docs: DataFrame, rarePos: DataFrame,
-      evFilter: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    // Occurrences a pass must consider. Pass 1: every SHAREABLE
-    // occurrence (fp present in >= 2 docs — cheap min/max stats; a
-    // singleton fp cannot witness a cross-doc span). Pass k >= 2: only
-    // fps that can yield NEW marks — fps occurring in a doc changed
-    // last pass, or fps that just dropped under the df cap. Any other
-    // group consists of unchanged docs whose identical grams were
-    // grouped last pass — a mark then would have cut the doc (length
-    // strictly decreases), contradicting "unchanged" — so skipping the
-    // group is a proven no-op and pass work is ∝ change, not ∝ corpus.
-    // The filter is at fp granularity (coarser than per-group but
-    // sound: including a stale group is output-neutral, it just re-
-    // derives marks that already cut). Changed docs decay ~1% → 0 and
-    // capped fps are the boilerplate tail → both broadcast.
-    val occ = evFilter match {
-      case None =>
-        // shareable fps only (>= 2 distinct docs, i.e. min < max over
-        // occurrences) via a LEFT-SEMI join shuffled on fp — NOT a
-        // broadcast: the stats table has one row per distinct rare fp
-        // and grows with the corpus (a broadcast here would violate
-        // this function's own no-large-broadcast claim at scale; AQE
-        // still picks a broadcast when the table is actually small)
-        val shareable = rarePos.groupBy("fp")
-          .agg(min("doc_id").as("mn"), max("doc_id").as("mx"))
-          .filter(col("mn") < col("mx")).select("fp")
-        rarePos.join(shareable, Seq("fp"), "left_semi")
-      case Some((changed, prevCapped)) =>
-        val fset = rarePos
-          .join(broadcast(changed), Seq("doc_id"), "left_semi")
-          .select("fp").unionByName(prevCapped).distinct()
-        rarePos.join(broadcast(fset), Seq("fp"), "left_semi")
-    }
-    spanConfirmCut(docs, occ)
-  }
-
-  /** The confirm→cut tail of a t37 pass, split from [[spanPass]] (r10):
-    * [[spanRemoval]] builds each pass's evidence `occ` with
-    * delta-restricted scans and feeds only the occ docs' texts here,
-    * while the legacy [[spanPass]] composition keeps the r8 shape for
-    * the ProfileT37* cross-checks. `docs` must cover every doc_id in
-    * `occ` (both the slice join and the cut join are inner on doc_id,
-    * so a superset — e.g. the whole corpus — is output-identical).
-    */
-  private[graft] def spanConfirmCut(docs: DataFrame, occ: DataFrame): DataFrame = {
-    // ONE 27-char context slice per occurrence ([max(gpos-WinW,0),
-    // gpos+18] covers all WinW aligned window starts behind gpos), cut
-    // from each doc's text in a single pass over the docs, then the
-    // k-explode derives the WinW candidate 20-grams per occurrence
-    // INSIDE the slice — document bytes are touched exactly once.
-    val sliced = occ
-      .groupBy("doc_id")
-      .agg(collect_set(struct(col("gpos"), col("fp"))).as("gps"))
-      .join(docs, "doc_id")
-      .select(col("doc_id"), explode(expr(
-        s"transform(gps, gp -> named_struct('gpos', gp.gpos, 'fp', gp.fp, " +
-          s"'st', greatest(gp.gpos - $WinW, 0L), " +
-          s"'s', substring(text, CAST(greatest(gp.gpos - $WinW, 0L) + 1 AS INT), " +
-          s"CAST(gp.gpos + 19 - greatest(gp.gpos - $WinW, 0L) AS INT))))")).as("sl"))
-      .select(col("doc_id"), col("sl.gpos").as("gpos"), col("sl.fp").as("fp"),
-        col("sl.s").as("s"))
-    spanCutFromSliced(docs, sliced)
-  }
-
-  /** The k-explode → aligned confirm → cut tail, shared by the legacy
-    * [[spanConfirmCut]] (slices joined per pass) and spanRemoval's r10
-    * slice-borne path ([[winnowFpsPosS]] carries s in the fps table).
-    * `sliced` = (doc_id, fp, gpos, s); `docs` need only cover the docs
-    * that can be MARKED (inner cut join — a superset is identical).
-    */
-  private[graft] def spanCutFromSliced(docs: DataFrame,
-      sliced: DataFrame, withPrevLen: Boolean = false): DataFrame = {
+  private def spanCutFromSliced(docs: DataFrame,
+      sliced: DataFrame): DataFrame = {
     val cand = sliced
       .select(col("doc_id"), col("gpos"), col("fp"),
         (col("gpos") - greatest(col("gpos") - lit(WinW.toLong), lit(0L)))
@@ -458,15 +343,14 @@ object TextQueries {
     // the doc bytes (r21): spanRemoval's delta carries it forward as
     // orig_len so the final removed_chars readout needs no corpus
     // re-scan — see the assembly note there.
-    if (withPrevLen)
-      cut.select(col("doc_id"), col("text_clean"),
-        length(col("text")).cast("long").as("prev_len"))
-    else cut.select(col("doc_id"), col("text_clean"))
+    cut.select(col("doc_id"), col("text_clean"),
+      length(col("text")).cast("long").as("prev_len"))
   }
 
-  /** t37's detect→REMOVE pipeline: [[spanPass]] iterated to the fixed
-    * point (early exit when a pass marks nothing, maxPasses cap on both
-    * engines so the DuckDB oracle can replay the unrolled passes).
+  /** t37's detect→REMOVE pipeline: the [[spanCutFromSliced]] pass
+    * iterated to the fixed point (early exit when a pass marks nothing,
+    * maxPasses cap on both engines so the DuckDB oracle can replay the
+    * unrolled passes).
     *
     * A single pass is NOT idempotent on real corpora — newly-changed
     * docs measured per pass (aligned semantics, current driver
@@ -495,24 +379,35 @@ object TextQueries {
     * passes: only pass 1 winnows the whole corpus; pass k+1 re-winnows
     * just the docs pass k changed (~1% and decaying) and anti-joins out
     * their stale fps — identical to a full re-winnow because fps are a
-    * deterministic per-doc function of text. Pass k >= 2 SKIPS fps that
-    * provably cannot yield new marks (no occurrence in a changed doc,
-    * not newly under the df cap — see spanPass's filter proof), and r10
-    * fused the per-pass machinery around that same proof: pass 1's
-    * df-cap + shareability stats are ONE two-step groupBy (no
+    * deterministic per-doc function of text.
+    *
+    * Skip proof. Pass 1's evidence is every SHAREABLE rare occurrence
+    * (fp present in >= 2 docs — a singleton fp cannot witness a
+    * cross-doc span). Pass k >= 2 SKIPS fps that provably cannot yield
+    * new marks: only fps occurring in a doc changed last pass, or fps
+    * that just dropped under the df cap, can. Any other (fp, k, gram)
+    * group consists of unchanged docs whose identical grams were grouped
+    * last pass — a mark then would have cut the doc (length strictly
+    * decreases), contradicting "unchanged" — so skipping the group is a
+    * no-op and pass work is ∝ change, not ∝ corpus. The filter is at fp
+    * granularity (coarser than per-group but sound: including a stale
+    * group is output-neutral, it just re-derives marks that already
+    * cut). r10 fused the per-pass machinery around that same proof:
+    * pass 1's df-cap + shareability stats are ONE two-step groupBy (no
     * occurrence-cardinality `rare` checkpoint), later passes recount df
     * only over the broadcast candidate-fp set C = changed docs' fps ∪
     * previously-capped fps (capped status can only change inside C, so
     * the corpus-wide distinct+groupBy runs exactly once), and the
-    * confirm/cut text joins see only the occ docs' texts
-    * (spanConfirmCut is inner on occ's doc_ids, so the corpus semi-join
-    * is output-neutral). Later passes therefore cost ∝ last pass's
+    * confirm/cut text join sees only the marked docs' texts (the cut
+    * is inner on the marked doc_ids, so a corpus superset is
+    * output-neutral). Later passes therefore cost ∝ last pass's
     * change: two narrow scans of the checkpointed fps table + one
-    * corpus scan for the text semi-join. Output-identical by the skip
-    * proof (ProfileT37h replays the legacy unfiltered capRarePos +
-    * spanPass loop: byte-identical at sf0.001/0.01); gated by the
-    * planted all-pairs replay + idempotence specs and the sf hash
-    * oracle.
+    * corpus scan for the text join. Output-identical by the skip
+    * proof (a replay of the unfiltered per-pass loop was
+    * byte-identical at sf0.001/0.01 — `git show
+    * 4a72e29:src/test/scala/graft/ProfileT37h.scala`); gated by the
+    * planted all-pairs replay + idempotence specs and the unrolled
+    * DuckDB oracle ([[spanPassCtes]]) at three SFs.
     *
     * r19 job fusion (the r18 verdict item 1 — four consecutive capped
     * driver rolls adjudicated to scheduler-gap exposure at ~17 jobs/
@@ -531,17 +426,22 @@ object TextQueries {
     * dfC) are marked lazily, so their final stage materializes inside
     * their first consumer's job instead of a separate eager-count job.
     * Fewer barriers is also the correct 100x-scale design: stragglers
-    * amplify per-barrier. Output-identical — ProfileT37h's legacy
-    * replay and the sf oracle gate the rewrite (measured 67 -> 45
-    * jobs / 194 -> 130 tasks at sf0.1, ProfileT37n).
+    * amplify per-barrier. Output-identical — the unfiltered-loop replay
+    * and the sf oracle gated the rewrite (measured 67 -> 45 jobs /
+    * 194 -> 130 tasks at sf0.1, `git show
+    * 4a72e29:src/test/scala/graft/ProfileT37n.scala`; NewQueriesR19Spec
+    * pins the job count).
+    *
+    * Each materializing step runs under [[PassWall.step]], the one
+    * per-pass timing hook (a plain by-name call unless Bench arms it).
     */
   private[graft] def spanRemoval(docs0: DataFrame,
-      maxPasses: Int = SpanPasses, probe: StepProbe = NoProbe): DataFrame = {
+      maxPasses: Int = SpanPasses): DataFrame = {
     graft.plans.GraftFunctions.register(docs0.sparkSession)
     // r19 job fusion (the r18 weak-flip exit): the corpus checkpoint and
     // the capN count share ONE job (LoopConf.barrier). Was 3 jobs (ckpt +
     // 2-stage Dataset.count), now 1.
-    val (docs, capN) = probe("docs ckpt+capN") {
+    val (docs, capN) = PassWall.step("docs ckpt+capN") {
       val (d, n) = graft.operators.LoopConf.barrier(
         docs0.select(col("doc_id"), col("text")))
       // the df cap as a driver-side literal (corpus size is fixed for
@@ -550,8 +450,8 @@ object TextQueries {
       // the convergence counts. NB the literal is INLINED into the
       // generated filter code, so a pre-warm slice with a different
       // corpus size can never hit cache for the cap-filter classes
-      // (ProfileT37k/l, r13) — one of the reasons Bench's pre-warm runs
-      // the FULL corpus.
+      // (measured r13) — one of the reasons Bench's pre-warm runs the
+      // FULL corpus.
       (d, math.max(20L, n / 100L))
     }
     // slice-borne fps (r10): each occurrence carries its 27-char confirm
@@ -560,7 +460,7 @@ object TextQueries {
     // here — the winnow itself runs (and caches) inside pass 0's first
     // stats stage, which scans it anyway. NB this shifts the winnow's
     // wall from t37_passes' "setup" bucket into "p0" (§6b r19 note).
-    val fpsBase = probe("fpsBase winnow+ckpt") {
+    val fpsBase = PassWall.step("fpsBase winnow+ckpt") {
       winnowFpsPosS(docs).localCheckpoint(eager = false)
     }
     // Changed docs only, latest text — the pass-k corpus is the cheap
@@ -596,8 +496,8 @@ object TextQueries {
     var cappedPrev: DataFrame = null // fps over the df cap at last pass
     var changedPrevN = 0L // docs changed last pass (drives the fsetC hint)
     while (pass < maxPasses && !converged) {
-      // Per-pass evidence occurrences, r10 fused shape (was capRarePos +
-      // spanPass's internal filter: 2 corpus-wide distinct+groupBy
+      // Per-pass evidence occurrences, r10 fused shape (was a separate
+      // df-cap table + the skip filter: 2 corpus-wide distinct+groupBy
       // shuffles, a full-occurrence `rare` checkpoint and 2 more rare
       // scans per pass — ~5 fps-table passes each round).
       val occ: DataFrame =
@@ -612,7 +512,7 @@ object TextQueries {
           // here; the fp-rollup output materializes (and caches) inside
           // its first consumer's job — shareRare's join below — instead
           // of a separate eager-count job.
-          val stats = probe("pass 0 stats ckpt") {
+          val stats = PassWall.step("pass 0 stats ckpt") {
             fpsBase.groupBy("fp", "doc_id")
               .agg(count(lit(1)).as("np"))
               .groupBy("fp").agg(count(lit(1)).as("dfc"),
@@ -624,17 +524,17 @@ object TextQueries {
             .filter(col("dfc") <= capN && col("mn") < col("mx"))
             .select("fp")
           // shuffled semi-join, deliberately un-hinted: shareRare is
-          // fp-cardinality (grows with the corpus), AQE broadcasts it
-          // only when actually small (see spanPass's pass-1 note)
+          // fp-cardinality (grows with the corpus) — a broadcast here
+          // would be a corpus-proportional build at scale; AQE still
+          // broadcasts it when it is actually small
           fpsBase.join(shareRare, Seq("fp"), "left_semi")
         } else {
           // Candidate fps C: new-text fps of docs changed last pass
           // (outPrev's `keys`, winnowed in the checkpoint job) ∪ fps
-          // capped last pass — exactly spanPass's filter-proof set, both
-          // parts broadcast-size (superset-of-fset argument: keys ⊇ the
-          // rare fps of changed docs, extras are capped and die in the
-          // anti-join — identical to spanPass's occ, ProfileT37h replays
-          // the equality).
+          // capped last pass — exactly the skip proof's set, both parts
+          // broadcast-size (superset argument: keys ⊇ the rare fps of
+          // changed docs, extras are capped and drop out of the rare
+          // side below).
           // un-checkpointed and un-distinct'd on purpose: both consumer
           // joins read only checkpointed small tables (outPrev + the
           // capped set), and duplicate fps in a semi/anti hash build are
@@ -657,8 +557,8 @@ object TextQueries {
           val fsetC =
             if (changedPrevN <= FsetBroadcastMaxDocs) broadcast(fsetC0)
             else fsetC0
-          // df recount restricted to C (SURVEY §7 r9(a)'s "fold
-          // capRarePos into the evidence scan"): df can only have RISEN
+          // df recount restricted to C (SURVEY §7 r9(a)'s "fold the
+          // df cap into the evidence scan"): df can only have RISEN
           // for fps a changed doc gained (⊆ keys) and capped-status can
           // only turn off for fps that were capped (⊆ cappedPrev), so
           // the C-restricted recount IS the full new capped set — the
@@ -681,7 +581,7 @@ object TextQueries {
           // shuffles run here; the final fp-rollup output materializes
           // inside the rare-side broadcast build of the evidence join
           // below, not a separate eager-count job.
-          val dfC = probe(s"pass $pass dfC ckpt") {
+          val dfC = PassWall.step(s"pass $pass dfC ckpt") {
             fpsCur
               .join(fsetC, Seq("fp"), "left_semi")
               .select("doc_id", "fp").distinct()
@@ -732,7 +632,7 @@ object TextQueries {
       //    blocks. Driver-side scalar, the d26 discipline (the only
       //    driver-side values in the loop are this count and capN).
       val k = pass
-      // withPrevLen (r21): each changed row carries the length of the
+      // prev_len (r21): each changed row carries the length of the
       // text it was cut FROM, read in the cut's own pass over the doc
       // bytes. The merge folds it to orig_len = the ORIGINAL corpus
       // length (max over the doc's rows: a doc's first-change row reads
@@ -741,7 +641,7 @@ object TextQueries {
       // assembly then needs NO corpus join: the old readout re-scanned
       // the full corpus text a 5th time just to compute
       // length(o.text) for ~1% of docs.
-      val outNew = spanCutFromSliced(cur, occ, withPrevLen = true)
+      val outNew = spanCutFromSliced(cur, occ)
         .select(col("doc_id"), col("text_clean").as("text"),
           keysCol.as("keys"), lit(k).as("pass"),
           col("prev_len").as("orig_len"))
@@ -767,16 +667,17 @@ object TextQueries {
           .select(col("doc_id"), col("w.text").as("text"),
             col("w.keys").as("keys"), col("w.pass").as("pass"),
             col("orig_len"))
-      val (deltaCkpt, changedN) = probe(s"pass $pass delta+count ckpt") {
-        val d = mergedDelta.localCheckpoint(eager = false)
-        val ord = d.schema.fieldIndex("pass")
-        val n = d.queryExecution.toRdd.mapPartitions { it =>
-          var a = 0L
-          it.foreach(r => if (r.getInt(ord) == k) a += 1)
-          Iterator.single(a)
-        }.fold(0L)(_ + _)
-        (d, n)
-      }
+      val (deltaCkpt, changedN) =
+        PassWall.step(s"pass $pass delta+count ckpt") {
+          val d = mergedDelta.localCheckpoint(eager = false)
+          val ord = d.schema.fieldIndex("pass")
+          val n = d.queryExecution.toRdd.mapPartitions { it =>
+            var a = 0L
+            it.foreach(r => if (r.getInt(ord) == k) a += 1)
+            Iterator.single(a)
+          }.fold(0L)(_ + _)
+          (d, n)
+        }
       changedPrevN = changedN
       if (changedPrevN == 0L) converged = true
       else {
@@ -812,42 +713,33 @@ object TextQueries {
     * tested SFs; the oracle unrolls exactly this many passes. */
   private[graft] val SpanPasses = 4
 
-  /** Per-step instrumentation hook for [[spanRemoval]] (r11, the ADVICE
-    * root fix): the ProfileT37g per-barrier profiler passes a timing
-    * probe and thereby measures the SHIPPED loop by construction —
-    * previously it mirrored the loop as a copy that could silently
-    * drift. Production callers use [[NoProbe]] (zero overhead: the
-    * default inlines to the step body).
-    */
-  private[graft] trait StepProbe {
-    def apply[A](label: String)(f: => A): A
-  }
-
-  /** The no-op [[StepProbe]] every query-path caller uses. */
-  private[graft] object NoProbe extends StepProbe {
-    def apply[A](label: String)(f: => A): A = f
-  }
-
-  /** Bench-armable per-pass wall-time collector for t37 (r15, the r14
+  /** The per-pass timing hook of [[spanRemoval]] (r15, the r14
     * verdict item 1): the driver box has run t37's cold slot at ~2.0x
     * the builder number for three rounds with compilation ruled out
     * in-artifact (`cold_diag` compiles = 0) and the CPU box probe
     * healthy — so the artifact must localize the premium along the
     * pass axis (setup winnow vs pass 0's full-scale joins vs the delta
-    * loop) for the mechanism to get a name. Bench arms this around
+    * loop) for the mechanism to get a name. spanRemoval wraps each
+    * materializing step in [[step]]; Bench arms the collector around
     * t37's cold (warmup rep 0) slot only and emits the snapshot as the
-    * JSON tail's `t37_passes`; query-path callers never touch it
-    * (disarmed = the plain env-gated probe or NoProbe — identical
-    * plan). Labels aggregate by pass index ("pass N ..." → "pN",
-    * everything before the loop → "setup"); the post-loop assembly
-    * join + sink write is the remainder against the recorded cold
-    * time, by construction (it is the returned lazy frame, not a
-    * probed materialization).
+    * JSON tail's `t37_passes`. Disarmed, `step` is the plain by-name
+    * body — identical plan, no timing. Labels aggregate by pass index
+    * ("pass N ..." → "pN", everything before the loop → "setup"); the
+    * post-loop assembly join + sink write is the remainder against the
+    * recorded cold time, by construction (it is the returned lazy
+    * frame, not a timed materialization).
     */
   private[graft] object PassWall {
     private val m = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
     @volatile private[graft] var armed = false
     private[graft] def reset(): Unit = m.clear()
+    /** Runs `f`, adding its wall time to `label`'s bucket when armed. */
+    private[graft] def step[A](label: String)(f: => A): A =
+      if (!armed) f
+      else {
+        val t0 = System.nanoTime()
+        try f finally record(label, System.nanoTime() - t0)
+      }
     private[graft] def record(label: String, nanos: Long): Unit = {
       m.merge(bucket(label), java.lang.Long.valueOf(nanos),
         (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue))
@@ -1593,11 +1485,11 @@ object TextQueries {
       // content — it contributes O(df²) candidate pairs and ~0 evidence
       // (measured sf0.1: 216 such fps carried 79% of the 7.5M raw pairs).
       // Dropping them bounds per-fingerprint join fan-out by the cap.
-      // capped-rare fp table factored as winnowRare (shared with t37's
-      // removal stage); the localCheckpoint barrier there is the
-      // d11/KMeans pattern — it feeds BOTH self-join sides and the
-      // per-doc counts (measured: the winnow+df subtree ran 4x without
-      // it). At 100 TB this is the table a pipeline persists.
+      // capped-rare fp table factored as winnowRare; the localCheckpoint
+      // barrier there is the d11/KMeans pattern — it feeds BOTH
+      // self-join sides and the per-doc counts (measured: the winnow+df
+      // subtree ran 4x without it). At 100 TB this is the table a
+      // pipeline persists.
       val fps = winnowRare(Tables.documents(s, d))
       val cnt = fps.groupBy("doc_id").agg(count(lit(1)).as("nf"))
       val x = fps.join(cnt, "doc_id")
@@ -1623,32 +1515,7 @@ object TextQueries {
       // ships. All semantics + the scale argument live on
       // [[spanRemoval]]; DedupSpec asserts the independent Scala replay
       // (conservation) and idempotence (a second pass removes nothing).
-      // SPARK_GRAFT_T37_PROBE (r13, verdict item 1b): prints the
-      // per-step wall decomposition to stderr so a FULL dev roll can
-      // name which step amplifies in the in-run cold pass — the r12
-      // StepProbe evidence only existed isolated / in 13-query context.
-      // Unset (every production/driver run) this is NoProbe: zero
-      // overhead, identical plan.
-      val base: StepProbe =
-        if (sys.env.contains("SPARK_GRAFT_T37_PROBE")) new StepProbe {
-          def apply[A](label: String)(f: => A): A = {
-            val t0 = System.nanoTime(); val r = f
-            System.err.println(
-              f"T37PROBE $label: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-            r
-          }
-        } else NoProbe
-      // PassWall layer (r15): active only when Bench armed it around
-      // t37's cold slot — every other caller gets `base` verbatim
-      val probe: StepProbe =
-        if (PassWall.armed) new StepProbe {
-          def apply[A](label: String)(f: => A): A = {
-            val t0 = System.nanoTime()
-            try base(label)(f)
-            finally PassWall.record(label, System.nanoTime() - t0)
-          }
-        } else base
-      spanRemoval(Tables.documents(s, d), probe = probe)
+      spanRemoval(Tables.documents(s, d))
     },
 
     "t27_bm25" -> { (s, d) =>
@@ -2524,13 +2391,13 @@ object TextQueries {
        |  WHERE dfc$x.dfc <= greatest(CAST(20 AS BIGINT), nd$x.n_docs // 100))$posCtes""".stripMargin
   }
 
-  /** One unrolled [[spanPass]] replay: detection prefix over `src`,
+  /** One unrolled [[spanRemoval]] pass: detection prefix over `src`,
     * evidence occurrences at threshold >= 1 shared rare fp, ALIGNED
     * position-bounded exact 20-gram confirm (only the WinW aligned
     * window starts (ga-k, gb-k) behind each shared-fp occurrence — the
-    * winnowing window argument, see spanPass), interval-complement
-    * cut, ending in `nxt$x (doc_id, text)` — the pass's cleaned
-    * corpus. See spanRemoval for the engine-parity notes (coalesce:
+    * winnowing window argument, see [[spanCutFromSliced]]),
+    * interval-complement cut, ending in `nxt$x (doc_id, text)` — the
+    * pass's cleaned corpus. See spanRemoval for the engine-parity notes (coalesce:
     * duckdb array_to_string([]) is NULL where spark array_join([])
     * is '').
     */

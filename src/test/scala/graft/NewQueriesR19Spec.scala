@@ -88,11 +88,12 @@ class NewQueriesR19Spec extends SparkSpec {
   test("t37 spanRemoval stays job-fused: bounded scheduler-job count end to end") {
     // r19's other deliverable (the r18 weak-flip exit): the loop was
     // restructured from ~4 actions/pass (~17 jobs/pass, 67 total at
-    // sf0.1) to 2, measured 45 jobs at sf0.001 AND sf0.1 (ProfileT37n;
-    // the count is SF-invariant because jobs are per-exchange, not
-    // per-row). Scheduler-stall exposure is proportional to the job
-    // count, so a silent regression back to the eager-checkpoint /
-    // separate-count / separate-merge shape is a perf bug this pins:
+    // sf0.1) to 2, measured 45 jobs at sf0.001 AND sf0.1 (the count is
+    // SF-invariant because jobs are per-exchange, not per-row; Bench's
+    // `t37_sched` tail field reports it on every roll). Scheduler-stall
+    // exposure is proportional to the job count, so a silent regression
+    // back to the eager-checkpoint / separate-count / separate-merge
+    // shape is a perf bug this pins:
     // 55 = measured 45 + headroom for AQE plan-choice variance, far
     // under the old 67.
     val stats = new Bench.SchedStats

@@ -166,15 +166,18 @@ class DedupSpec extends SparkSpec {
     // t37's confirm bound rests on the SELECTION POSITIONS the fused
     // expression recovers from the packed minkey — assert them against
     // the windowed declarative form on the corpus AND on a randomized
-    // tie-heavy corpus, and that dropping gpos reproduces winnowFps
+    // tie-heavy corpus, and that dropping gpos reproduces winnowFps;
+    // on the randomized corpus also check each row's confirm slice s
     val rnd = new scala.util.Random(20260813L)
     val alpha = "abcde fgh"
-    val rand = (1L to 200L).map { i =>
+    val randRows = (1L to 200L).map { i =>
       val len = rnd.nextInt(260)
       (i, Seq.fill(len)(alpha(rnd.nextInt(alpha.length))).mkString)
-    }.toDF("doc_id", "text")
+    }
+    val rand = randRows.toDF("doc_id", "text")
     for (docs <- Seq(Tables.documents(spark, sfDir).select("doc_id", "text"), rand)) {
-      val fused = graft.queries.TextQueries.winnowFpsPos(docs)
+      val fused = graft.queries.TextQueries.winnowFpsPosS(docs)
+        .select("doc_id", "fp", "gpos")
         .as[(Long, Long, Long)].collect().toSet
       val decl = graft.queries.TextQueries.winnowFpsPosDeclarative(docs)
         .as[(Long, Long, Long)].collect().toSet
@@ -183,6 +186,16 @@ class DedupSpec extends SparkSpec {
         .as[(Long, Long)].collect().toSet
       assert(fused.map(t => (t._1, t._2)) == fpOnly,
         "positional selection must project onto the fp-only selection")
+    }
+    val text = randRows.toMap
+    val slices = graft.queries.TextQueries.winnowFpsPosS(rand)
+      .select("doc_id", "gpos", "s").as[(Long, Long, String)].collect()
+    assert(slices.nonEmpty)
+    slices.foreach { case (id, gpos, sl) =>
+      val t = text(id)
+      val want = t.substring(math.max(gpos - 8, 0L).toInt,
+        math.min(gpos + 19, t.length.toLong).toInt)
+      assert(sl == want, s"doc $id gpos $gpos: slice '$sl' != '$want'")
     }
   }
 
