@@ -21,6 +21,11 @@ import graft.functions.HashFunctions
   *
   * Texts shorter than 3 chars have no shingles → null signature (callers
   * filter; the corpus minimum is 48 chars).
+  *
+  * ASCII only: the walk is over UTF-8 bytes while the twin and the oracle
+  * walk `ascii()` code points, and the two agree only when every byte is
+  * below 0x80. Any other byte throws IllegalArgumentException on both eval
+  * paths rather than return a signature the oracle would not reproduce.
   */
 case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
 
@@ -37,6 +42,12 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
 
   override def nullSafeEval(input: Any): Any = {
     val b = input.asInstanceOf[UTF8String].getBytes
+    var j = 0
+    while (j < b.length) {
+      if (b(j) < 0) throw new IllegalArgumentException(
+        s"graft_minhash expects ASCII text: byte ${b(j) & 0xff} at offset $j")
+      j += 1
+    }
     if (b.length < 3) return null
     val mins = Array.fill(k)(Long.MaxValue)
     var i = 0
@@ -63,8 +74,14 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
       val p = ctx.freshName("p")
       val code = ctx.freshName("code")
       val h = ctx.freshName("h")
+      val j = ctx.freshName("j")
       s"""
          |byte[] $b = $c.getBytes();
+         |for (int $j = 0; $j < $b.length; $j++) {
+         |  if ($b[$j] < 0)
+         |    throw new IllegalArgumentException("graft_minhash expects ASCII text: byte "
+         |      + ($b[$j] & 0xff) + " at offset " + $j);
+         |}
          |if ($b.length < 3) {
          |  ${ev.isNull} = true;
          |} else {

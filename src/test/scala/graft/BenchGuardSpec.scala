@@ -102,92 +102,6 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(node.get("v").asText() == raw)
   }
 
-  test("capRetryJson records both values and adjudicates recovery in-artifact") {
-    // r18 (the r17 verdict item 1): three consecutive driver rolls
-    // landed in degraded host windows and every capped slot's transience
-    // needed an OFF-artifact band essay. The roll-end retry makes the
-    // artifact self-adjudicating: retry back under the cap = transient
-    // (box-proven); retry still over = read against the probe windows;
-    // errored retry (-1) = never "recovered".
-    // r19 (the r18 verdict item 2): the first live recovered:false was
-    // unadjudicable because the END probe ran minutes before the retry
-    // — each retry is now BRACKETED by its own st/mt micro-probes,
-    // each labeled in_band against the §6b bands, so recovered:false
-    // with clean brackets names a real mechanism in-artifact.
-    val inBandPre = (350L, 450L) // inside st 298-415 / mt 378-579
-    val degradedPost = (820L, 730L) // the r18 degraded-window anchors
-    val json = Bench.capRetryJson(
-      Seq(("t37_span_removal", 35.8, Some(9.1), Some(inBandPre), Some(inBandPre)),
-        ("d35_hybrid_rrf_served", 45.6, Some(44.2), Some(inBandPre),
-          Some(degradedPost)),
-        ("broken", 31.0, Some(-1.0), Some(inBandPre), Some(inBandPre)),
-        ("blowup", 800.0, None, None, None)), capSec = 30.0)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = om.readTree(json)
-    val t37 = node.get("t37_span_removal")
-    assert(t37.get("cold").asDouble() == 35.8)
-    assert(t37.get("retry").asDouble() == 9.1)
-    assert(t37.get("recovered").asBoolean(), "retry under cap = transient")
-    assert(t37.get("probe_pre").get("st_ms").asLong() == 350)
-    assert(t37.get("probe_pre").get("in_band").asBoolean(),
-      "in-band CPU anchors must self-label clean")
-    val d35 = node.get("d35_hybrid_rrf_served")
-    assert(!d35.get("recovered").asBoolean(),
-      "a retry still over the cap is NOT recovered")
-    assert(d35.get("probe_pre").get("in_band").asBoolean())
-    assert(!d35.get("probe_post").get("in_band").asBoolean(),
-      "degraded anchors must self-label out-of-band")
-    assert(!node.get("broken").get("recovered").asBoolean(),
-      "an errored retry (-1) must never read as recovered")
-    // a guard-skipped retry (cold beyond CapRetryMaxColdFactor x cap —
-    // mechanism-scale, not re-paid at roll end) renders null/false and
-    // stays distinguishable from an ERRORED retry (-1); nothing ran
-    // between its brackets, so they render null too
-    assert(node.get("blowup").get("retry").isNull,
-      "guard-skipped retry must render null, not -1")
-    assert(!node.get("blowup").get("recovered").asBoolean())
-    assert(node.get("blowup").get("probe_pre").isNull
-      && node.get("blowup").get("probe_post").isNull)
-    assert(Bench.CapRetryMaxColdFactor == 4.0,
-      "the blow-up guard factor is part of the artifact contract")
-    // a retry landing exactly AT the cap recovered (the cap rule is
-    // strictly-greater: main caps on warm > capSec)
-    assert(om.readTree(Bench.capRetryJson(
-        Seq(("q", 31.0, Some(30.0), Some(inBandPre), Some(inBandPre))), 30.0))
-      .get("q").get("recovered").asBoolean())
-    // keys sort for cross-roll diffability; a clean roll renders {}
-    assert(json.indexOf("blowup") < json.indexOf("broken"))
-    assert(json.indexOf("broken") < json.indexOf("d35_hybrid_rrf_served"))
-    assert(Bench.capRetryJson(Nil, 30.0) == "{}")
-  }
-
-  test("bandCheck labels probe windows against the §6b reference bands") {
-    // r19 (the r18 verdict item 3): band placement was a human with §6b
-    // open; the bands are constants now and every window self-labels.
-    // In-band = every banded arm present, positive, at or under its
-    // ceiling; below-lo is a FASTER box, still in band.
-    val clean = Map("st_ms" -> 310L, "mt_ms" -> 420L, "shuf_ms" -> 700L,
-      "scan1_ms" -> 200L, "jobs_ms" -> 1800L)
-    assert(Bench.bandCheck(clean) == ((true, Seq.empty)))
-    assert(Bench.bandCheck(clean + ("st_ms" -> 200L))._1,
-      "below-lo reads as a faster box, not a degraded one")
-    // the r18 driver roll's start window: jobs 19x out, CPU arms out
-    val r18 = Map("st_ms" -> 828L, "mt_ms" -> 729L, "shuf_ms" -> 1074L,
-      "scan1_ms" -> 245L, "jobs_ms" -> 46955L)
-    val (inBand, oob) = Bench.bandCheck(r18)
-    assert(!inBand && oob == Seq("st_ms", "mt_ms", "shuf_ms", "jobs_ms"))
-    // a missing or errored (-1) arm is out-of-band BY NAME: an
-    // unprovable window must not read as clean
-    assert(Bench.bandCheck(clean - "jobs_ms")._2 == Seq("jobs_ms"))
-    assert(Bench.bandCheck(clean + ("scan1_ms" -> -1L))._2 == Seq("scan1_ms"))
-    // unbanded arms (spark_ms/scan_ms) never affect the label
-    assert(Bench.bandCheck(clean + ("spark_ms" -> 99999L))._1)
-    // the CPU-only pad makes a st/mt micro-window checkable without
-    // reading the deliberately-unmeasured disk/scheduler arms as oob
-    assert(Bench.bandCheck(Map("st_ms" -> 350L, "mt_ms" -> 450L)
-      ++ Bench.CpuOnlyPad)._1)
-  }
-
   test("boxFingerprint is a stable short digest; distinct identities differ") {
     // r16 (the r15 verdict item 2): the artifact stamps an identity
     // DIGEST so the next roll can tell a same-box baseline from a
@@ -238,45 +152,65 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(fp != Bench.boxFingerprint("vm||"))
   }
 
-  test("the start/end ratio pair names a mid-roll degradation") {
-    // r17 (the r16 verdict item 2): box_ratio reads the START probes
-    // and box_ratio_end the END probes — same pure function, different
-    // window anchors. The blind spot this closes: a box that degrades
-    // MID-roll (r16's roll-1 page-cache reclaim) shows a clean start
-    // ratio; the end pair is what flags it.
-    val fp = Bench.boxFingerprint("builder-box")
-    val start = Bench.baselineLabel(fp, Some(fp), 303, 417, Some(308), Some(400))
-    val end = Bench.baselineLabel(fp, Some(fp), 920, 1230, Some(308), Some(400))
-    assert(start._2.contains((0.98, 1.04)), "start window reads clean")
-    assert(end._2.contains((2.99, 3.08)), "end window names the degradation")
-    assert(start._1 == end._1, "fingerprint verdict is window-independent")
-  }
-
-  test("baselineLabel marks cross-box baselines and computes probe ratios") {
+  test("vsPrev marks cross-box baselines and flags >1.5x keys") {
     // the r15 verdict item 2: the in-repo BENCH_full.json baseline
-    // alternates between driver and builder rolls, so the flags'
-    // meaning silently flipped every round — the artifact now carries
-    // the adjudication inputs itself
+    // alternates between driver and builder rolls, so every flag says
+    // whether its baseline came from this box
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val fp = Bench.boxFingerprint("builder-box")
     val other = Bench.boxFingerprint("driver-box")
-    // pre-r16 baseline: no fingerprint → cross_box unknown (null),
-    // but the probe-state ratios still compute
-    assert(Bench.baselineLabel(fp, None, 330, 470, Some(300), Some(470)) ==
-      ((None, Some((1.1, 1.0)))))
-    // same box → cross_box false
-    assert(Bench.baselineLabel(fp, Some(fp), 330, 470, Some(330), Some(470))
-      ._1.contains(false))
-    // different box → cross_box true, ratios still carried
-    val (cross, ratios) =
-      Bench.baselineLabel(fp, Some(other), 307, 463, Some(357), Some(583))
-    assert(cross.contains(true))
-    assert(ratios.contains((0.86, 0.79)))
-    // a failed probe on either side (−1 / missing) yields no ratio but
-    // never suppresses the fingerprint verdict
-    assert(Bench.baselineLabel(fp, Some(other), -1, 470, Some(330), Some(470))
-      == ((Some(true), None)))
-    assert(Bench.baselineLabel(fp, Some(fp), 330, 470, None, None)
-      == ((Some(false), None)))
+    def baseline(boxFp: Option[String]) = om.readTree(
+      """{"value":10.0,"capped":[],"queries":{"a":1.0,"b":1.0}""" +
+        boxFp.map(f => s""","box_fp":"$f"""").getOrElse("") + "}")
+    def vs(prev: Option[String], results: Map[String, Bench.Timing]) =
+      om.readTree(Bench.vsPrev(Some(baseline(prev)), results, fp))
+    val flat = Map("a" -> row(1.0), "b" -> row(1.0))
+    // pre-r16 baseline: no fingerprint → cross_box unknown (null)
+    assert(vs(None, flat).get("cross_box").isNull)
+    assert(vs(None, flat).get("prev_box_fp").isNull)
+    // same box → false; different box → true, with the baseline's fp
+    assert(!vs(Some(fp), flat).get("cross_box").asBoolean())
+    val cross = vs(Some(other), flat)
+    assert(cross.get("cross_box").asBoolean())
+    assert(cross.get("prev_box_fp").asText() == other)
+    assert(cross.get("prev_total").asDouble() == 10.0)
+    assert(cross.get("flagged").size() == 0 && cross.get("still_capped").size() == 0)
+    // a >1.5x key lands in flagged with its ratio; a 1.4x move does not
+    val flagged = vs(Some(fp), Map("a" -> row(1.6), "b" -> row(1.4))).get("flagged")
+    assert(flagged.size() == 1 && flagged.get("a").asDouble() == 1.6)
+    // no baseline file: the one fallback shape, same fields
+    val empty = om.readTree(Bench.vsPrev(None, flat, fp))
+    assert(empty.get("cross_box").isNull && empty.get("prev_total").isNull)
+    import scala.jdk.CollectionConverters._
+    assert(empty.fieldNames().asScala.toList == cross.fieldNames().asScala.toList)
+  }
+
+  test("summaryLine is one parseable line under 1500 chars at any registry size") {
+    // the full line is ~31 KB at 202 keys and falls outside a 2000-char
+    // stdout tail; the compact line must survive it whatever the size
+    val keys = (0 until 202).map(i => f"q$i%03d_" + "x" * 35)
+    assert(keys.forall(_.length == 40))
+    val results = keys.zipWithIndex.map { case (k, i) =>
+      k -> (if (i == 0) row(-1.0) else if (i == 1) row(31.0, capped = true, cold = 31.0)
+        else row(1.0 + i / 1000.0)) }.toMap
+    val line = Bench.summaryLine(results, 32, "/root/testdata/sf0.1",
+      Bench.boxFingerprint("builder-box"), "1760000000000-abcdef12", Some(120.0))
+    assert(!line.contains("\n") && line.length < 1500, s"${line.length} chars")
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    import scala.jdk.CollectionConverters._
+    assert(node.fieldNames().asScala.toList == List("metric", "value", "unit",
+      "n_queries", "n_errors", "n_capped", "cpus", "sf", "box_fp", "run_id",
+      "vs_prev_total", "slowest10"))
+    assert(node.get("n_queries").asInt() == 201 && node.get("n_errors").asInt() == 1)
+    assert(node.get("n_capped").asInt() == 1 && node.get("cpus").asInt() == 32)
+    assert(node.get("run_id").asText() == "1760000000000-abcdef12")
+    val total = results.values.map(_._1).filter(_ >= 0).sum
+    assert(node.get("value").asDouble() == total)
+    assert(node.get("vs_prev_total").asDouble() == math.round(total / 120.0 * 1000) / 1000.0)
+    val slow = node.get("slowest10")
+    assert(slow.size() == 10 && slow.fieldNames().next() == keys(1))
+    assert(Bench.summaryLine(results, 32, "sf", "fp", "id", None)
+      .contains("\"vs_prev_total\":null"))
   }
 
   test("the committed roll artifact carries the adjudication contract") {
@@ -294,26 +228,14 @@ class BenchGuardSpec extends AnyFunSuite {
         "vs_prev", "cold_compiles", "cold_jit_ms", "tail"))
       assert(root.has(k), s"artifact lost top-level field $k")
     val tail = root.get("tail")
-    for (k <- Seq("total_s", "n_queries", "n_errors", "cap_jvm", "cap_retry",
-        "box", "cold_diag", "t37_passes", "t37_sched", "slowest10"))
+    for (k <- Seq("total_s", "n_queries", "n_errors", "cap_jvm",
+        "cold_diag", "t37_passes", "t37_sched", "slowest10"))
       assert(tail.has(k), s"artifact tail lost field $k")
-    // the r16 baseline label: box_fp top-level + in the tail box, and
-    // vs_prev carrying the cross-box adjudication fields
+    // the r16 baseline label: box_fp top-level, and vs_prev carrying
+    // the cross-box label
     assert(root.has("box_fp") && root.get("box_fp").asText().nonEmpty)
-    assert(tail.get("box").has("fp"))
-    for (k <- Seq("prev_total", "prev_box_fp", "cross_box", "box_ratio",
-        "box_ratio_end", "baseline_end_in_band", "flagged", "still_capped"))
+    for (k <- Seq("prev_total", "prev_box_fp", "cross_box", "flagged", "still_capped"))
       assert(root.get("vs_prev").has(k), s"vs_prev lost field $k")
-    // r19: every probe window self-labels against the §6b band
-    // constants — in_band plus the out-of-band arm names — and the
-    // baseline-commit rule is mechanically checkable via
-    // vs_prev.baseline_end_in_band above
-    for (w <- Seq("start", "end")) {
-      val win = tail.get("box").get(w)
-      assume(win != null && win.isObject, s"probe $w window null on this roll")
-      assert(win.has("in_band") && win.has("oob"),
-        s"probe $w window lost its band self-label")
-    }
   }
 
   test("persistArtifacts always writes the sidecar; selective runs spare BENCH_full") {
