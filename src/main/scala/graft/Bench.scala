@@ -274,51 +274,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.envCpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Codegen-class cache sized for a 194-query roll (r12): the
-      // default 100 entries hold ~2 queries' worth of generated
-      // classes, so every query late in the run recompiles (janino)
-      // and re-JITs classes an earlier run already produced — and a
-      // codegen-heavy query (t37: ~20 jobs/pass loop) can evict its
-      // own pass-0 classes before its timed rep. Static conf, must be
-      // set before the session exists. Memory cost is generated-class
-      // metadata only (metaspace), well inside the 24g/1g-codecache
-      // JVM this main documents in build.sbt.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // freeBlocks() below makes Spark WARN once per removed
-    // localCheckpoint RDD ("lineage has been truncated...") — expected
-    // and intended (the blocks are dead), but hundreds of lines per
-    // run; keep the rdd package at ERROR so real failures still print.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    // Block hygiene (r11, the driver-roll t37 cap postmortem): every
-    // execution's localCheckpoint blocks otherwise leak until the
-    // DRIVER JVM happens to GC (ContextCleaner is weak-reference
-    // driven, and the 24g heap makes full GCs rare) — late in a
-    // 194-query run hundreds of dead checkpoint RDDs occupy storage
-    // memory and a big cold allocator pays their eviction/GC bill,
-    // which is exactly where r10's driver roll 7x'd t37's cold pass
-    // (7.9 s builder / 54.9 s driver). Explicit unpersist after each
-    // execution removes the GC-timing dependence; nothing in a query
-    // reuses blocks across executions (each call builds fresh frames;
-    // cross-run reuse goes through /tmp/graft_stores parquet, not
-    // block storage), so this is timing-neutral on the measured work.
-    // BLOCKING since r12 (ADVICE): elapsed is captured before the
-    // call, so blocking cannot pollute the finished measurement — but
-    // a non-blocking removal could still be running during the NEXT
-    // rep's timed window.
-    def freeBlocks(): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+    val spark = Session.local(cpus)
     // Session warm-up: JVM/codegen/session init + file listing, so
     // per-query times measure the queries rather than first-action setup.
     try {
@@ -360,7 +318,7 @@ object Bench {
           Tables.documents(spark, sfDir),
           maxPasses = graft.queries.TextQueries.SpanPasses - 1)
           .write.format("noop").mode("overwrite").save()
-        freeBlocks()
+        Session.freeBlocks(spark)
       } catch { case e: Throwable => System.err.println(s"BENCH WARMUP T37: $e") }
     }
     // d35 store pre-build (r13, verdict item 3): the driver box starts
@@ -375,7 +333,7 @@ object Bench {
     if (args.isEmpty || args.contains("d35_hybrid_rrf_served")) {
       try {
         graft.queries.SimilarityQueries.ensureRrfIvfStores(spark, sfDir)
-        freeBlocks()
+        Session.freeBlocks(spark)
       } catch { case e: Throwable => System.err.println(s"BENCH WARMUP D35: $e") }
     }
     // optional args: bench only the named queries (iteration aid)
@@ -393,7 +351,7 @@ object Bench {
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val el = (System.nanoTime() - t0) / 1e9
-      freeBlocks()
+      Session.freeBlocks(spark)
       el
     }
     // Long-tail cap (r7 verdict item): a query whose cold run already
@@ -569,7 +527,7 @@ object Bench {
     println(line)
     val runId = persistArtifacts(line, fullRun = args.isEmpty, SidecarPath)
     val prevTotal = prev.map(_.path("value")).filter(_.isNumber).map(_.asDouble)
-    println(summaryLine(results, cpus.toInt, sfDir, boxFp, runId, prevTotal))
+    println(summaryLine(results, cpus, sfDir, boxFp, runId, prevTotal))
     spark.stop()
   }
 }

@@ -54,17 +54,6 @@ object GeoFunctions {
       s"cos(radians($lat1)) * cos(radians($lat2)) * " +
       s"pow(sin(radians($lon2 - ($lon1)) / 2), 2)))"
 
-  /** Convex-polygon containment: the point is inside iff it is on the same
-    * (left) side of every edge of a counter-clockwise vertex ring. Pure
-    * multiply/compare — engine-exact. Vertices are (lat, lon).
-    */
-  def inConvexPolygon(lat: Column, lon: Column, verts: Seq[(Double, Double)]): Column =
-    verts.indices.map { i =>
-      val (y1, x1) = verts(i)
-      val (y2, x2) = verts((i + 1) % verts.length)
-      (lit(x2 - x1) * (lat - lit(y1)) - lit(y2 - y1) * (lon - lit(x1))) >= 0
-    }.reduce(_ && _)
-
   /** Arbitrary (possibly non-convex) simple-polygon containment by ray
     * casting — PostGIS `ST_Contains` parity: the point is inside iff a ray
     * to +longitude crosses an odd number of edges. Generates the

@@ -45,11 +45,4 @@ object IvfIndex {
         expr("CAST(floor(CAST(SUM(dist) AS DOUBLE) / COUNT(*)) AS BIGINT)")
           .as("mean_err"))
       .orderBy("cent_id")
-
-  /** d10-style IVF ANN top-k served from a (cent_id, cq) codebook. */
-  def topK(queries: DataFrame, candidates: DataFrame, codebook: DataFrame,
-      nprobe: Int, k: Int): DataFrame =
-    SimilaritySearch.ivfTopK(queries, candidates,
-      codebook.select(col("cent_id").as("vec_id"), col("cq").as("q")),
-      nprobe, k)
 }

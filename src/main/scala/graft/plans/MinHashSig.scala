@@ -22,10 +22,8 @@ import graft.functions.HashFunctions
   * Texts shorter than 3 chars have no shingles → null signature (callers
   * filter; the corpus minimum is 48 chars).
   *
-  * ASCII only: the walk is over UTF-8 bytes while the twin and the oracle
-  * walk `ascii()` code points, and the two agree only when every byte is
-  * below 0x80. Any other byte throws IllegalArgumentException on both eval
-  * paths rather than return a signature the oracle would not reproduce.
+  * ASCII only: any byte >= 0x80 throws on both eval paths
+  * ([[AsciiBytes]]).
   */
 case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
 
@@ -41,13 +39,7 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
   private lazy val bs: Array[Long] = (0 until k).map(HashFunctions.permB).toArray
 
   override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[UTF8String].getBytes
-    var j = 0
-    while (j < b.length) {
-      if (b(j) < 0) throw new IllegalArgumentException(
-        s"graft_minhash expects ASCII text: byte ${b(j) & 0xff} at offset $j")
-      j += 1
-    }
+    val b = AsciiBytes.of(input.asInstanceOf[UTF8String], "graft_minhash")
     if (b.length < 3) return null
     val mins = Array.fill(k)(Long.MaxValue)
     var i = 0
@@ -74,14 +66,8 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
       val p = ctx.freshName("p")
       val code = ctx.freshName("code")
       val h = ctx.freshName("h")
-      val j = ctx.freshName("j")
       s"""
-         |byte[] $b = $c.getBytes();
-         |for (int $j = 0; $j < $b.length; $j++) {
-         |  if ($b[$j] < 0)
-         |    throw new IllegalArgumentException("graft_minhash expects ASCII text: byte "
-         |      + ($b[$j] & 0xff) + " at offset " + $j);
-         |}
+         |byte[] $b = graft.plans.AsciiBytes.of($c, "graft_minhash");
          |if ($b.length < 3) {
          |  ${ev.isNull} = true;
          |} else {

@@ -15,8 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * allocation: one walk over the UTF8 bytes, token boundaries at spaces
   * (consecutive spaces produce empty tokens, as `split` does), each
   * token's code from its first 8 bytes space-padded, Horner base 31,
-  * mod P = 2^31-1. ASCII-only texts (multibyte codepoints would diverge
-  * from `ascii()` semantics).
+  * mod P = 2^31-1. ASCII-only texts: multibyte code points would diverge
+  * from `ascii()` semantics, so any byte >= 0x80 throws on both eval
+  * paths ([[AsciiBytes]]).
   */
 case class RollingFingerprint(child: Expression) extends UnaryExpression {
 
@@ -29,7 +30,7 @@ case class RollingFingerprint(child: Expression) extends UnaryExpression {
       s"graft_fingerprint expects string, got ${child.dataType.simpleString}")
 
   override protected def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[UTF8String].getBytes
+    val b = AsciiBytes.of(input.asInstanceOf[UTF8String], "graft_fingerprint")
     var lo = 0
     var hi = b.length
     while (lo < hi && b(lo) == ' ') lo += 1
@@ -66,7 +67,7 @@ case class RollingFingerprint(child: Expression) extends UnaryExpression {
       val k = ctx.freshName("k")
       val ch = ctx.freshName("ch")
       s"""
-         |byte[] $b = $c.getBytes();
+         |byte[] $b = graft.plans.AsciiBytes.of($c, "graft_fingerprint");
          |int $lo = 0; int $hi = $b.length;
          |while ($lo < $hi && $b[$lo] == ' ') $lo++;
          |while ($hi > $lo && $b[$hi - 1] == ' ') $hi--;

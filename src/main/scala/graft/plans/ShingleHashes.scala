@@ -17,8 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * replay): `Dedup.shingleCodesArraySql` for (n=3, base=256, m=2^62 —
   * mod never fires, so values are the exact 24-bit packed codes) and
   * TextQueries' 13-gram Horner fold for (n=13, base=31, m=2^56). Byte
-  * walk == codepoint walk on ASCII corpora (the established MinHashSig
-  * precedent). Short texts (< n chars) yield an empty array, matching
+  * walk == codepoint walk on ASCII text; any byte >= 0x80 throws on both
+  * eval paths ([[AsciiBytes]]). Short texts (< n chars) yield an empty array, matching
   * the sliced zip_with forms.
   *
   * Hot-path justification (CLAUDE.md doctrine): measured 7.8 s (t14) and
@@ -43,7 +43,7 @@ case class ShingleHashes(child: Expression, n: Int, base: Long, mod: Long)
         s"got ${child.dataType.simpleString}, n=$n, base=$base, mod=$mod")
 
   override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[UTF8String].getBytes
+    val b = AsciiBytes.of(input.asInstanceOf[UTF8String], "graft_shingles")
     val count = b.length - n + 1
     if (count <= 0) return new GenericArrayData(Array.emptyLongArray)
     val h = new Array[Long](count)
@@ -76,7 +76,7 @@ case class ShingleHashes(child: Expression, n: Int, base: Long, mod: Long)
       val m = ctx.freshName("m")
       val r = ctx.freshName("r")
       s"""
-         |byte[] $b = $c.getBytes();
+         |byte[] $b = graft.plans.AsciiBytes.of($c, "graft_shingles");
          |int $cnt = $b.length - $n + 1;
          |if ($cnt <= 0) {
          |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(new long[0]);

@@ -12,7 +12,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `(h mod hmod) * c + (c-1-pos)` -> sliding-window minimum over every
   * full window of `w` keys -> sorted distinct fingerprints
   * (`minkey / c`). The packed key makes the required rightmost-argmin a
-  * plain MIN; `pos` is 1-based and must stay below `c`.
+  * plain MIN; `pos` is 1-based and must stay below `c`. ASCII only: any
+  * byte >= 0x80 throws on both eval paths ([[AsciiBytes]]), since the
+  * twin walks code points.
   *
   * Declarative twin (what the DuckDB oracle replays, see
   * t25_winnow_overlap): positional Horner hashes + windowed MIN over the
@@ -52,7 +54,7 @@ case class WinnowFps(child: Expression, n: Int, base: Long, mod: Long,
         s"w=$w, hmod=$hmod, c=$c")
 
   override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[UTF8String].getBytes
+    val b = AsciiBytes.of(input.asInstanceOf[UTF8String], "graft_winnow")
     val cnt = b.length - n + 1
     // position-packing precondition enforced, not assumed: pos (1-based,
     // <= cnt) must stay below c or (c-1-pos) goes negative, silently
@@ -108,7 +110,7 @@ case class WinnowFps(child: Expression, n: Int, base: Long, mod: Long,
       val m = ctx.freshName("m")
       val r = ctx.freshName("r")
       s"""
-         |byte[] $b = $cv.getBytes();
+         |byte[] $b = graft.plans.AsciiBytes.of($cv, "graft_winnow");
          |int $cnt = $b.length - $n + 1;
          |if ($cnt >= ${c}L) {
          |  throw new IllegalArgumentException(

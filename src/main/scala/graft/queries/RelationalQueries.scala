@@ -105,38 +105,21 @@ object RelationalQueries {
         col("est_lc"), col("est_used"))
   }
 
-  /** The skew-measurement join (q37/q38 + graft.SkewBench): a DELIBERATE
-    * hot key — 90% of lineitem rows land on hk=0, the remaining 10% on
-    * hk ∈ {90..99} — joined to a 100-row dim FORCED onto the sort-merge
-    * path (`hint("merge")`; a broadcastable dim would hide the disease —
-    * the production setting this simulates is a dim too big to
-    * broadcast). Unsalted: the fact shuffles on hk and ONE task sorts
+  /** The skew-measurement join (q37/q38): a DELIBERATE hot key — 90% of
+    * lineitem rows land on hk=0, the remaining 10% on hk ∈ {90..99} —
+    * joined to a 100-row dim FORCED onto the sort-merge path
+    * (`hint("merge")`; a broadcastable dim would hide the disease — the
+    * production setting this simulates is a dim too big to broadcast).
+    * Unsalted: the fact shuffles on hk and ONE task sorts
     * and joins 90% of the table. Salted: the dim replicates ×16 and the
     * fact adds a deterministic salt, so the hot key spreads over 16
     * tasks; results are bit-identical (each fact row still matches
     * exactly one dim replica) and both variants share one oracle.
     */
   private[graft] def skewJoinAgg(s: SparkSession, d: String,
-      salted: Boolean, hot: Boolean = true, amp: Int = 1,
-      mappers: Int = 0): DataFrame = {
-    // hot=false is SkewBench's uniform-key CONTROL (same volume, no hot
-    // key) — it prices the fixed shuffle/join cost so the skew penalty
-    // is read as disease-minus-control; amp>1 replicates rows executor-
-    // side so the hot task dominates scheduling overhead at toy SF;
-    // mappers>0 round-robins the fact over that many map tasks first —
-    // sf0.1's lineitem is ONE parquet row group = one mapper, and AQE's
-    // skew split works at mapper granularity (it regroups map outputs),
-    // so without this the splitter has nothing to split; a production
-    // fact table always has many mappers
-    val hkSql =
-      if (hot) "CAST(CASE WHEN l_orderkey % 100 < 90 THEN 0 " +
-        "ELSE l_orderkey % 100 END AS BIGINT)"
-      else "CAST(l_orderkey % 100 AS BIGINT)"
-    val base0 = Tables.lineitem(s, d)
-    val base = if (mappers > 0) base0.repartition(mappers) else base0
-    val fact0 = if (amp > 1)
-      base.withColumn("rep", explode(expr(s"sequence(1, $amp)"))) else base
-    val fact = fact0.withColumn("hk", expr(hkSql))
+      salted: Boolean): DataFrame = {
+    val fact = Tables.lineitem(s, d).withColumn("hk", expr(
+      "CAST(CASE WHEN l_orderkey % 100 < 90 THEN 0 ELSE l_orderkey % 100 END AS BIGINT)"))
     val dim = s.range(0, 100).select(col("id").as("k"), (col("id") % 7).as("grp"))
     val joined = if (salted) {
       val salts = 16
@@ -552,17 +535,17 @@ object RelationalQueries {
       // The skew CURE, oracle-checked: the deliberately hot-keyed
       // sort-merge join (90% of rows on one key — see skewJoinAgg) run
       // through explicit ×16 salting. q38 is the same computation
-      // UNSALTED — the disease; BENCH carries both, and graft.SkewBench
-      // isolates disease vs AQE-skew-split vs salting under controlled
-      // configs (numbers in SURVEY §6b).
+      // UNSALTED — the disease; BENCH carries both. Disease vs
+      // AQE-skew-split vs salting under controlled configs: SURVEY §6b,
+      // `git show 77a6ec9:src/main/scala/graft/SkewBench.scala`.
       skewJoinAgg(s, d, salted = true)
     },
 
     "q38_skew_unsalted" -> { (s, d) =>
       // The skew DISEASE, same semantics and oracle as q37: the hot key
       // shuffles 90% of the fact into one sort-merge task (AQE's runtime
-      // skew split is the only mitigation here — measured explicitly by
-      // graft.SkewBench with it on and off).
+      // skew split is the only mitigation here — measured with it on
+      // and off by `git show 77a6ec9:src/main/scala/graft/SkewBench.scala`).
       skewJoinAgg(s, d, salted = false)
     },
 

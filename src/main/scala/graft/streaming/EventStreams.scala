@@ -111,15 +111,6 @@ object EventStreams {
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n"), col("value_c"))
 
-  /** Session windows with a 30-minute inactivity gap, per user. */
-  def sessionCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "30 minutes")
-      .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("w.start").as("session_start"), col("w.end").as("session_end"),
-        col("user_id"), col("n_events"))
-
   /** Streaming exact dedup on an id column; the watermark bounds the
     * dedup-state retention window (Jane: idempotent re-uploads).
     */
@@ -267,10 +258,9 @@ object EventStreams {
   }
 
   /** Event-time sessionizer emitting CLOSED sessions only (unlike
-    * [[sessionCounts]], which emits on watermark via `session_window`,
-    * this keeps explicit per-user state and closes a session either when
-    * a later event arrives past the gap or when the event-time timeout
-    * fires). The state is one `OpenSession` per active user — bounded by
+    * Spark's `session_window`, which emits on watermark, this keeps
+    * explicit per-user state and closes a session either when a later
+    * event arrives past the gap or when the event-time timeout fires). The state is one `OpenSession` per active user — bounded by
     * live-key cardinality; the watermark drives timeout GC.
     */
   def closedSessions(spark: SparkSession, events: DataFrame,

@@ -2,9 +2,16 @@ package graft
 
 /** Driver-contract smoke: entry returns rows; every query key has either an
   * oracle or is intentionally rows-only; all queries run at sf0.001; the
-  * library packages read no environment knobs.
+  * library packages read no environment knobs; one session factory.
   */
 class EntrySpec extends SparkSpec {
+
+  private def scalaFiles(f: java.io.File): Seq[java.io.File] =
+    if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(scalaFiles)
+    else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+
+  private def lines(f: java.io.File): List[String] =
+    scala.util.Using.resource(scala.io.Source.fromFile(f, "UTF-8"))(_.getLines().toList)
 
   test("entry flagship query returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
@@ -31,26 +38,38 @@ class EntrySpec extends SparkSpec {
   }
 
   test("library packages read no environment variables or system properties") {
-    // deployment settings belong to the entry mains in graft/ (Bench,
-    // Verify, SkewBench); a knob inside an operator or query changes
-    // behaviour that no test or oracle run sets
+    // deployment settings belong to the entry mains and the session
+    // factory in graft/ (Bench, Verify, Session); a knob inside an
+    // operator or query changes behaviour that no test or oracle run sets
     val knob = "\\b(sys\\.env|sys\\.props|System\\.getenv|System\\.getProperty)\\b".r
     val pkgs = Seq("operators", "queries", "sources", "plans", "functions", "streaming")
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     val roots = pkgs.map(p => new java.io.File(s"src/main/scala/graft/$p"))
     assert(roots.forall(_.isDirectory),
       s"package dirs not found from ${new java.io.File(".").getAbsolutePath}")
     val hits = for {
       f <- roots.flatMap(scalaFiles)
-      lines = scala.util.Using.resource(
-        scala.io.Source.fromFile(f, "UTF-8"))(_.getLines().toList)
-      (line, i) <- lines.zipWithIndex
+      (line, i) <- lines(f).zipWithIndex
       code = line.trim
       if !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*")
       if knob.findFirstIn(line).isDefined
     } yield s"${f.getPath}:${i + 1}"
     assert(hits.isEmpty, s"environment knobs in library code:\n${hits.mkString("\n")}")
+  }
+
+  test("graft.Session is the only SparkSession builder") {
+    // one conf for every main and spec: the plans Explain prints are the
+    // plans Bench times and Verify checks (pattern split so this file
+    // does not match itself)
+    val builder = Seq("SparkSession", "builder").mkString(".")
+    val roots = Seq("src/main/scala", "src/test/scala").map(new java.io.File(_))
+    assert(roots.forall(_.isDirectory),
+      s"source dirs not found from ${new java.io.File(".").getAbsolutePath}")
+    val hits = for {
+      f <- roots.flatMap(scalaFiles)
+      if f.getPath != "src/main/scala/graft/Session.scala"
+      (line, i) <- lines(f).zipWithIndex
+      if line.contains(builder)
+    } yield s"${f.getPath}:${i + 1}"
+    assert(hits.isEmpty, s"SparkSession built outside graft.Session:\n${hits.mkString("\n")}")
   }
 }

@@ -138,9 +138,11 @@ class KMeansSpec extends SparkSpec {
     val cand = all.filter(col("vec_id") >= 20)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("query_id", "rn").collect().toSeq
-    val servedTop = IvfIndex.topK(qs, cand, loaded, nprobe = 2, k = 3)
+    def topK(cb: org.apache.spark.sql.DataFrame) = SimilaritySearch.ivfTopK(qs, cand,
+      cb.select(col("cent_id").as("vec_id"), col("cq").as("q")), nprobe = 2, k = 3)
+    val servedTop = topK(loaded)
     assert(!servedTop.queryExecution.executedPlan.toString.contains("% 100"))
-    assert(rows(servedTop) == rows(IvfIndex.topK(qs, cand, codebook, 2, 3)))
+    assert(rows(servedTop) == rows(topK(codebook)))
   }
 
   test("delta append: stored postings + assigned delta serve equal to full assignment, training-free") {

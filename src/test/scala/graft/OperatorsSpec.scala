@@ -53,15 +53,6 @@ class GeoFunctionsSpec extends SparkSpec {
     // (8,8) is in the notch — a convex test could not exclude it
     assert(inside == Set((2.0, 8.0), (8.0, 2.0)))
   }
-
-  test("convex polygon contains interior, excludes exterior") {
-    import spark.implicits._
-    val square = Seq((0.0, 0.0), (0.0, 10.0), (10.0, 10.0), (10.0, 0.0))
-    val df = Seq((5.0, 5.0), (11.0, 5.0), (-1.0, 5.0), (0.0, 0.0)).toDF("lat", "lon")
-    val inside = df.filter(GeoFunctions.inConvexPolygon(col("lat"), col("lon"), square))
-      .collect().map(r => (r.getDouble(0), r.getDouble(1))).toSet
-    assert(inside == Set((5.0, 5.0), (0.0, 0.0))) // boundary counts as inside
-  }
 }
 
 class AsOfJoinSpec extends SparkSpec {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only tail profiler for the r21 optimization round (the r20 verdict
   * item 6): decomposes the slowest sub-1.3 s bench-tail queries into
   * (plan build+analysis) vs (execution) wall, with per-execution job/
@@ -19,16 +17,8 @@ object ProfileR21 {
         "q29_parts_analysis", "m12_phash_clusters", "t32_bpe_vocab",
         "q43_equidepth_hist", "t15_repetition", "t29_bpe_merges",
         "d08_embed_neardup")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(32)
     graft.plans.GraftFunctions.register(spark)
-    def freeBlocks(): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
     // session warmup (as Bench)
     Tables.lineitem(spark, sfDir).count()
     Tables.events(spark, sfDir).count()
@@ -40,7 +30,7 @@ object ProfileR21 {
       // warm run: codegen + broadcast + listing
       try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        freeBlocks()
+        Session.freeBlocks(spark)
       } catch { case e: Throwable => println(s"[r21] $name WARM FAIL: $e") }
       (1 to 3).foreach { rep =>
         val st = new Bench.SchedStats
@@ -62,7 +52,7 @@ object ProfileR21 {
             f"task_ms ${st.taskMs.get()}%6d  run_ms ${st.runMs.get()}%6d")
         } finally {
           spark.sparkContext.removeSparkListener(st)
-          freeBlocks()
+          Session.freeBlocks(spark)
         }
       }
     }
