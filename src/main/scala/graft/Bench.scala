@@ -8,8 +8,9 @@ import org.apache.spark.sql.SparkSession
   * `spread` = (max-min)/min over the timed runs estimates the noise
   * floor, so a 2x move between rounds is adjudicable as signal vs
   * interleaving noise (round 4 could not tell — e.g. its d12 1.35→2.62).
-  * Key order in the JSON puts `queries`/`spread`/`cold` LAST: the driver
-  * stores a front-truncated tail, so the per-query data is what survives.
+  * Key order in the JSON puts the per-query maps (`cold_diag`, `spread`,
+  * `cold`, `queries`) LAST, so a capture that keeps only the line's end
+  * still holds the per-query data.
   * `cold` (r11) is each query's warmup time — the in-run first-execution
   * time the long-tail cap reads — recorded so a cap event is diagnosable
   * from the artifact (the r10 t37 lesson). The roll ends with a second,
@@ -154,59 +155,6 @@ object Bench {
     case c => c.toString
   }
 
-  /** Scheduler/task telemetry for t37's cold slot (r15): accumulates
-    * job/stage/task counts and the tasks' wall (`task_ms` = sum of
-    * TaskInfo.duration), executor run (`run_ms` = executorRunTime), and
-    * GC (`gc_ms`) time over the window it is registered for. Cold wall
-    * 2x with run_ms FLAT = the time went to gaps (job submission, task
-    * launch, inter-stage idle); run_ms itself 2x = the tasks computed
-    * slower. Events post async on the listener bus, so the reader polls
-    * until counts stabilize before snapshotting — telemetry-grade, not a
-    * barrier.
-    */
-  private[graft] final class SchedStats extends org.apache.spark.scheduler.SparkListener {
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val stages = new java.util.concurrent.atomic.AtomicLong
-    val tasks = new java.util.concurrent.atomic.AtomicLong
-    val taskMs = new java.util.concurrent.atomic.AtomicLong
-    val runMs = new java.util.concurrent.atomic.AtomicLong
-    val gcMs = new java.util.concurrent.atomic.AtomicLong
-    override def onJobStart(
-        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      jobs.incrementAndGet(); ()
-    }
-    override def onStageCompleted(
-        s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      stages.incrementAndGet(); ()
-    }
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      tasks.incrementAndGet()
-      if (t.taskInfo != null) { taskMs.addAndGet(t.taskInfo.duration); () }
-      if (t.taskMetrics != null) {
-        runMs.addAndGet(t.taskMetrics.executorRunTime)
-        gcMs.addAndGet(t.taskMetrics.jvmGCTime); ()
-      }
-    }
-    /** Wait (bounded) for the async bus to drain: two consecutive
-      * identical event counts 50 ms apart, up to ~2 s. Watches the
-      * COMBINED jobs+stages+tasks counter (r16, the r15 ADVICE): job/
-      * stage-completed events post on the same async bus but can arrive
-      * AFTER the final onTaskEnd, so a tasks-only watch could snapshot
-      * with the job/stage counts still draining. */
-    def settle(): Unit = {
-      var prev = -1L; var spins = 0
-      def combined = jobs.get() + stages.get() + tasks.get()
-      while (combined != prev && spins < 40) {
-        prev = combined; Thread.sleep(50); spins += 1
-      }
-    }
-    def json: String =
-      s"""{"jobs":${jobs.get()},"stages":${stages.get()},""" +
-        s""""tasks":${tasks.get()},"task_ms":${taskMs.get()},""" +
-        s""""run_ms":${runMs.get()},"gc_ms":${gcMs.get()}}"""
-  }
-
   /** The roll's `vs_prev` object against `prev`, the parsed committed
     * `BENCH_full.json` (None = no baseline). Regression guard (r9): each
     * warm-min is compared with the baseline's by [[vsPrevFlags]] and
@@ -272,6 +220,58 @@ object Bench {
       s""""slowest10":${slowest10(results)}}"""
   }
 
+  /** The positions of each `cold_diag` entry. */
+  private[graft] val ColdDiagFields =
+    Seq("compiles", "jit_ms", "jobs", "stages", "tasks", "task_ms", "run_ms", "gc_ms")
+
+  /** The roll's full JSON line. `cold_diag` has one entry per benched key
+    * ([[ColdDiagFields]]): the first-ever codegen compiles and JIT ms
+    * inside its cold slot (`coldDiag`, r14), then its cold slot's
+    * [[JobStats.Record]] counts (zeros without a record). The tail's
+    * `cold_steps` holds the [[JobStats.step]] walls of the keys that
+    * recorded any (t37: setup/p0..p3); cold minus their sum is the
+    * unstepped rest (t37's post-loop assembly and sink write). Depends on
+    * its inputs alone; [[vsPrev]] prints its flags to stderr. */
+  private[graft] def rollLine(results: Map[String, Timing], reps: Int, sf: String,
+      boxFp: String, prev: Option[com.fasterxml.jackson.databind.JsonNode],
+      capJvm: Map[String, String], coldDiag: Map[String, (Long, Long)],
+      stats: Map[String, JobStats.Record]): String = {
+    def str(x: String): String = "\"" + jsonEsc(x) + "\""
+    def obj[V](m: Iterable[(String, V)])(v: V => String): String =
+      m.map { case (k, x) => str(k) + ":" + v(x) }.mkString("{", ",", "}")
+    def arr(xs: Iterable[String]): String = xs.map(str).mkString("[", ",", "]")
+    val ok = results.values.filter(_._1 >= 0)
+    val total = ok.map(_._1).sum
+    // capped queries ran once cold and carry a fabricated 0.0 spread —
+    // including them would bias the noise-floor median toward 0
+    val spreads = results.values
+      .collect { case (t, sp, capped, _) if t >= 0 && !capped => sp }
+      .toSeq.sorted
+    val noiseMed = if (spreads.isEmpty) 0.0 else spreads(spreads.size / 2)
+    val diag = coldDiag.toSeq.sortBy(_._1).map { case (k, (cg, jit)) =>
+      k -> (Seq(cg, jit) ++ stats.get(k).fold(Seq.fill(6)(0L))(_.counts)) }
+    val steps = stats.toSeq.filter(_._2.steps.nonEmpty).sortBy(_._1)
+      .map { case (k, r) => k -> obj(r.steps)(t => (math.round(t * 1000) / 1000.0).toString) }
+    // Headline summary as the very LAST field, so a capture that keeps
+    // only the line's end still holds the totals + the slowest-10 for
+    // cross-round comparison; cap_jvm (r13) rides there too, one
+    // JSON-escaped string per capped key.
+    val tail = s"""{"total_s":$total,"n_queries":${ok.size},""" +
+      s""""n_errors":${results.size - ok.size},""" +
+      s""""cap_jvm":${obj(capJvm)(str)},""" +
+      s""""cold_steps":${obj(steps)(identity)},""" +
+      s""""slowest10":${slowest10(results)}}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","sf":${str(sf)},""" +
+      s""""box_fp":"$boxFp","reps":$reps,"warmups":1,"noise_floor_med_spread":$noiseMed,""" +
+      s""""errors":${arr(results.collect { case (k, v) if v._1 < 0 => k })},""" +
+      s""""capped":${arr(results.collect { case (k, v) if v._3 => k })},""" +
+      s""""vs_prev":${vsPrev(prev, results, boxFp)},""" +
+      s""""cold_diag_fields":${arr(ColdDiagFields)},""" +
+      s""""cold_diag":${obj(diag)(_.mkString("[", ",", "]"))},""" +
+      s""""spread":${obj(results)(_._2.toString)},"cold":${obj(results)(_._4.toString)},""" +
+      s""""queries":${obj(results)(_._1.toString)},"tail":$tail}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Session.envCpus
@@ -307,7 +307,7 @@ object Bench {
     // the final pass's empty-keys projection variant compiles as the
     // prewarm's own last pass — ZERO residual compiles in the measured
     // cold run (`git show 4a72e29:src/test/scala/graft/ProfileT37m.scala`;
-    // the tail's `cold_diag` reports the count on every roll). The
+    // `cold_diag` reports the count on every roll). The
     // measured run still executes all SpanPasses passes of real work;
     // only compilation, JIT profiles, and page cache are warm — the
     // same contract every other query's warmup rep provides. Runs only
@@ -388,10 +388,9 @@ object Bench {
     // time landed inside each query's cold slot. On a healthy
     // pre-warmed roll t37's compile delta is ~0 (measured r13), so a
     // large delta is the compilation mechanism resurfacing. Cheap (two
-    // counter reads per query), carried in the artifact.
+    // counter reads per query), carried in the artifact next to the
+    // cold slot's JobStats record.
     val coldDiag = scala.collection.mutable.Map.empty[String, (Long, Long)]
-    // registered around t37's cold slot only (see the query loop)
-    val t37Sched = new SchedStats
     def cgCount: Long = org.apache.spark.metrics.source.CodegenMetrics
       .METRIC_COMPILATION_TIME.getCount
     // the bean is null on JVMs without a compilation system (-Xint) and
@@ -408,8 +407,9 @@ object Bench {
     // this roll's box identity, stamped into the artifact so the NEXT
     // roll's vs_prev can label cross-box baselines (r16)
     val boxFp = boxFingerprint(boxIdentity())
-    // Each query runs ONE cold rep — the cap's input and the cold_diag
-    // slot — then, under the cap, `reps` timed reps (see [[Timing]]).
+    // Each query runs ONE cold rep — the cap's input, tagged with its
+    // name for the cold_diag record — then, under the cap, `reps` timed
+    // reps (see [[Timing]]).
     val results: Map[String, Timing] =
       selected.map { case (name, fn) =>
         // cold survives a later-rep crash: "ran cold fine, crashed
@@ -418,26 +418,10 @@ object Bench {
         var cold = -1.0
         try {
           val (cg0, jit0) = (cgCount, jitMs)
-          // t37's cold slot additionally collects per-pass wall times
-          // (r15): the tail's `t37_passes` localizes a cold premium
-          // along the pass axis. The timed reps run the plain path.
-          val collectPasses = name == "t37_span_removal"
-          if (collectPasses) {
-            graft.queries.TextQueries.PassWall.reset()
-            graft.queries.TextQueries.PassWall.armed = true
-            spark.sparkContext.addSparkListener(t37Sched)
-          }
-          try {
-            cold = once(fn)
-            // delta read BEFORE the finally's settle() below: the
-            // 0.1-2 s bus-drain sleep would otherwise add post-run
-            // background JIT to t37's cold_diag entry alone
-            coldDiag(name) = (cgCount - cg0, jitMs - jit0)
-          } finally if (collectPasses) {
-            graft.queries.TextQueries.PassWall.armed = false
-            t37Sched.settle()
-            spark.sparkContext.removeSparkListener(t37Sched)
-          }
+          // read before the roll's one JobStats.drain, so the bus wait
+          // adds no post-run background JIT to any entry
+          try cold = JobStats.tagged(spark, name)(once(fn))
+          finally coldDiag(name) = (cgCount - cg0, jitMs - jit0)
           if (cold > capSec) {
             System.err.println(
               f"BENCH CAPPED $name: cold $cold%.2fs > cap ${capSec}%.1fs, skipping timed reps")
@@ -460,21 +444,6 @@ object Bench {
             name -> (-1.0, 0.0, false, cold)
         }
       }
-    def fmtMap(sel: Timing => Double): String =
-      results.map { case (k, v) => s"\"" + k + "\":" + sel(v) }
-        .mkString("{", ",", "}")
-    val errs = results.collect { case (k, (v, _, _, _)) if v < 0 => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val capped = results.collect { case (k, (_, _, true, _)) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val ok = results.values.filter(_._1 >= 0)
-    val total = ok.map(_._1).sum
-    // capped queries ran once cold and carry a fabricated 0.0 spread —
-    // including them would bias the noise-floor median toward 0
-    val spreads = results.values
-      .collect { case (t, sp, capped, _) if t >= 0 && !capped => sp }
-      .toSeq.sorted
-    val noiseMed = if (spreads.isEmpty) 0.0 else spreads(spreads.size / 2)
     // the committed baseline, parsed once for vs_prev and the summary's
     // vs_prev_total; a missing or unparsable file reads as no baseline
     val prev: Option[com.fasterxml.jackson.databind.JsonNode] = try {
@@ -486,44 +455,10 @@ object Bench {
       case e: Throwable =>
         System.err.println(s"BENCH VS_PREV: $e"); None
     }
-    // cap_jvm rides the tail (the most truncation-survivable spot):
-    // empty on a clean roll, one JSON-escaped string per capped query.
-    val capJvmJson = capJvm
-      .map { case (k, v) => s"\"" + k + "\":\"" + jsonEsc(v) + "\"" }
-      .mkString("{", ",", "}")
-    // t37 per-pass wall times from its COLD slot (r15): "setup" = the
-    // pre-loop winnow/checkpoint steps, "pN" = pass N's probed
-    // materializations; the cold total minus the sum is the post-loop
-    // assembly join + noop write (the returned lazy frame).
-    val t37Passes = graft.queries.TextQueries.PassWall.snapshot
-      .map { case (k, v) => s"\"" + k + "\":" + math.round(v * 1000) / 1000.0 }
-      .mkString("{", ",", "}")
-    // cold_diag in the TAIL for the queries a cap/cold debate is ever
-    // about (t37 + anything capped); the full per-query maps ride as
-    // normal fields below. Format: name -> [cold_compiles, cold_jit_ms].
-    val diagKeys = (capJvm.keys.toSet + "t37_span_removal")
-      .filter(coldDiag.contains).toSeq.sorted
-    val coldDiagJson = diagKeys
-      .map(k => s"\"" + k + s"""\":[${coldDiag(k)._1},${coldDiag(k)._2}]""")
-      .mkString("{", ",", "}")
-    def fmtLongMap(sel: ((Long, Long)) => Long): String =
-      coldDiag.map { case (k, v) => s"\"" + k + "\":" + sel(v) }
-        .mkString("{", ",", "}")
-    // Headline summary as the very LAST field: the driver stores a
-    // front-truncated tail of this line, so totals + the slowest-10 must
-    // sit at the end to survive truncation for cross-round comparison.
-    val tail = s"""{"total_s":$total,"n_queries":${ok.size},""" +
-      s""""n_errors":${results.size - ok.size},"cap_jvm":$capJvmJson,""" +
-      s""""cold_diag":$coldDiagJson,"t37_passes":$t37Passes,""" +
-      s""""t37_sched":${t37Sched.json},"slowest10":${slowest10(results)}}"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",""" +
-      s""""box_fp":"$boxFp",""" +
-      s""""reps":$reps,"warmups":1,"noise_floor_med_spread":$noiseMed,""" +
-      s""""errors":$errs,"capped":$capped,"vs_prev":${vsPrev(prev, results, boxFp)},""" +
-      s""""cold_compiles":${fmtLongMap(_._1)},""" +
-      s""""cold_jit_ms":${fmtLongMap(_._2)},""" +
-      s""""spread":${fmtMap(_._2)},"cold":${fmtMap(_._4)},""" +
-      s""""queries":${fmtMap(_._1)},"tail":$tail}"""
+    // a stuck listener bus costs the counts, not the roll's timings
+    try JobStats.drain(spark) catch { case e: Throwable => System.err.println(s"BENCH DRAIN: $e") }
+    val stats = results.keys.flatMap(k => JobStats.record(spark, k).map(k -> _)).toMap
+    val line = rollLine(results, reps, sfDir, boxFp, prev, capJvm.toMap, coldDiag.toMap, stats)
     println(line)
     val runId = persistArtifacts(line, fullRun = args.isEmpty, SidecarPath)
     val prevTotal = prev.map(_.path("value")).filter(_.isNumber).map(_.asDouble)

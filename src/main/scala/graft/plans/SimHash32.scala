@@ -24,6 +24,8 @@ import graft.functions.HashFunctions
   *    right-padded with spaces to 8 chars) mod P, then for each plane b:
   *    vote +1 if (a_b·code + b_b) mod P is odd else −1;
   *  - bit b of the result is set iff its vote sum is > 0.
+  * The walk is over bytes, the twin's over code points: a non-ASCII byte
+  * throws ([[AsciiBytes]]).
   */
 case class SimHash32(child: Expression) extends UnaryExpression {
 
@@ -60,8 +62,7 @@ object SimHash32 {
     */
   def compute(text: UTF8String, as: Array[Long], bs: Array[Long]): Long = {
     val bits = as.length
-    val t = text.trim()
-    val b = t.getBytes
+    val b = AsciiBytes.of(text.trim(), "graft_simhash32")
     val votes = new Array[Int](bits)
     val seen = new java.util.HashSet[UTF8String]()
     var start = 0

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{JobStats, Tables}
 import graft.functions.HashFunctions
 import graft.functions.TextFunctions._
 import graft.operators.{Dedup, Multimodal, PrefixSum}
@@ -432,16 +432,18 @@ object TextQueries {
     * 4a72e29:src/test/scala/graft/ProfileT37n.scala`; NewQueriesR19Spec
     * pins the job count).
     *
-    * Each materializing step runs under [[PassWall.step]], the one
-    * per-pass timing hook (a plain by-name call unless Bench arms it).
+    * Each materializing step runs under [[graft.JobStats.step]] as
+    * "setup" (before the loop) or "pN" (pass N): a plain by-name call
+    * outside a tag, per-pass walls in Bench's `cold_steps` inside one.
     */
   private[graft] def spanRemoval(docs0: DataFrame,
       maxPasses: Int = SpanPasses): DataFrame = {
-    graft.plans.GraftFunctions.register(docs0.sparkSession)
+    val spark = docs0.sparkSession
+    graft.plans.GraftFunctions.register(spark)
     // r19 job fusion (the r18 weak-flip exit): the corpus checkpoint and
     // the capN count share ONE job (LoopConf.barrier). Was 3 jobs (ckpt +
     // 2-stage Dataset.count), now 1.
-    val (docs, capN) = PassWall.step("docs ckpt+capN") {
+    val (docs, capN) = JobStats.step(spark, "setup") {
       val (d, n) = graft.operators.LoopConf.barrier(
         docs0.select(col("doc_id"), col("text")))
       // the df cap as a driver-side literal (corpus size is fixed for
@@ -459,8 +461,8 @@ object TextQueries {
     // Lazy (r19 fusion #4): shuffle-free plan, so the mark costs no job
     // here — the winnow itself runs (and caches) inside pass 0's first
     // stats stage, which scans it anyway. NB this shifts the winnow's
-    // wall from t37_passes' "setup" bucket into "p0" (§6b r19 note).
-    val fpsBase = PassWall.step("fpsBase winnow+ckpt") {
+    // wall from the "setup" step into "p0" (§6b r19 note).
+    val fpsBase = JobStats.step(spark, "setup") {
       winnowFpsPosS(docs).localCheckpoint(eager = false)
     }
     // Changed docs only, latest text — the pass-k corpus is the cheap
@@ -512,7 +514,7 @@ object TextQueries {
           // here; the fp-rollup output materializes (and caches) inside
           // its first consumer's job — shareRare's join below — instead
           // of a separate eager-count job.
-          val stats = PassWall.step("pass 0 stats ckpt") {
+          val stats = JobStats.step(spark, "p0") {
             fpsBase.groupBy("fp", "doc_id")
               .agg(count(lit(1)).as("np"))
               .groupBy("fp").agg(count(lit(1)).as("dfc"),
@@ -581,7 +583,7 @@ object TextQueries {
           // shuffles run here; the final fp-rollup output materializes
           // inside the rare-side broadcast build of the evidence join
           // below, not a separate eager-count job.
-          val dfC = PassWall.step(s"pass $pass dfC ckpt") {
+          val dfC = JobStats.step(spark, s"p$pass") {
             fpsCur
               .join(fsetC, Seq("fp"), "left_semi")
               .select("doc_id", "fp").distinct()
@@ -668,7 +670,7 @@ object TextQueries {
             col("w.keys").as("keys"), col("w.pass").as("pass"),
             col("orig_len"))
       val (deltaCkpt, changedN) =
-        PassWall.step(s"pass $pass delta+count ckpt") {
+        JobStats.step(spark, s"p$pass") {
           val d = mergedDelta.localCheckpoint(eager = false)
           val ord = d.schema.fieldIndex("pass")
           val n = d.queryExecution.toRdd.mapPartitions { it =>
@@ -712,55 +714,6 @@ object TextQueries {
   /** Pass cap for [[spanRemoval]] — measured fixed point + 1 at all
     * tested SFs; the oracle unrolls exactly this many passes. */
   private[graft] val SpanPasses = 4
-
-  /** The per-pass timing hook of [[spanRemoval]] (r15, the r14
-    * verdict item 1): the driver box has run t37's cold slot at ~2.0x
-    * the builder number for three rounds with compilation ruled out
-    * in-artifact (`cold_diag` compiles = 0) and the CPU box probe
-    * healthy — so the artifact must localize the premium along the
-    * pass axis (setup winnow vs pass 0's full-scale joins vs the delta
-    * loop) for the mechanism to get a name. spanRemoval wraps each
-    * materializing step in [[step]]; Bench arms the collector around
-    * t37's cold (warmup rep 0) slot only and emits the snapshot as the
-    * JSON tail's `t37_passes`. Disarmed, `step` is the plain by-name
-    * body — identical plan, no timing. Labels aggregate by pass index
-    * ("pass N ..." → "pN", everything before the loop → "setup"); the
-    * post-loop assembly join + sink write is the remainder against the
-    * recorded cold time, by construction (it is the returned lazy
-    * frame, not a timed materialization).
-    */
-  private[graft] object PassWall {
-    private val m = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    @volatile private[graft] var armed = false
-    private[graft] def reset(): Unit = m.clear()
-    /** Runs `f`, adding its wall time to `label`'s bucket when armed. */
-    private[graft] def step[A](label: String)(f: => A): A =
-      if (!armed) f
-      else {
-        val t0 = System.nanoTime()
-        try f finally record(label, System.nanoTime() - t0)
-      }
-    private[graft] def record(label: String, nanos: Long): Unit = {
-      m.merge(bucket(label), java.lang.Long.valueOf(nanos),
-        (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue))
-      ()
-    }
-    /** "pass N ..." → "pN"; pre-loop steps → "setup". */
-    private[graft] def bucket(label: String): String =
-      "pass (\\d+)".r.findFirstMatchIn(label)
-        .map(mm => s"p${mm.group(1)}").getOrElse("setup")
-    /** (bucket, seconds) — "p0".."pN" in NUMERIC pass order, "setup"
-      * last (r16, the r15 ADVICE: a lexicographic sort would order p10
-      * before p2 if pass counts ever grow past 9; identical output for
-      * today's 4 passes). */
-    private[graft] def snapshot: Seq[(String, Double)] = {
-      import scala.jdk.CollectionConverters._
-      m.asScala.toSeq
-        .map { case (k, v) => (k, v.longValue / 1e9) }
-        .sortBy { case (k, _) =>
-          if (k == "setup") (1, 0) else (0, k.drop(1).toInt) }
-    }
-  }
 
   /** spanRemoval broadcasts the per-pass candidate-fp set only while the
     * changed-doc count stays under this bound (≈ docs × avg fps/doc ≈
@@ -827,6 +780,7 @@ object TextQueries {
   private[graft] def trainPerceptron(feat: DataFrame): DataFrame = {
     def upd(sx: String) = floorDivSql(sx, "n", "div")
     // r21 (the r20 verdict item 6): ProfileR21 measured this tail class
+    // (`git show 420a545:src/test/scala/graft/ProfileR21.scala`)
     // at wall ≈ jobs × ~60 ms scheduler fixed cost — t38 ran 31 jobs
     // for ~0.7 s of task compute. n now comes from the checkpointed
     // feat's own RDD count (one cached-blocks job) and drives BOTH a
@@ -966,7 +920,8 @@ object TextQueries {
   private def bpeTrain(s: SparkSession, d: String)
       : (Seq[DataFrame], DataFrame) = {
     // one barrier job both persists the word histogram and measures it
-    // for the sized loop conf — ProfileR21 (the r20 verdict item 6)
+    // for the sized loop conf — ProfileR21 (the r20 verdict item 6;
+    // `git show 420a545:src/test/scala/graft/ProfileR21.scala`)
     // measured t29/t32's wall at ≈ jobs × ~60 ms scheduler fixed cost
     // (30-31 jobs for ~0.3 s of task compute); AQE off inside the
     // vocab-sized loop collapses each iteration's per-stage re-plan

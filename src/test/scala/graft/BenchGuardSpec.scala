@@ -214,28 +214,54 @@ class BenchGuardSpec extends AnyFunSuite {
   }
 
   test("the committed roll artifact carries the adjudication contract") {
-    // r16: BENCH_full.json is the baseline every next roll's vs_prev
-    // parses AND the evidence §6b adjudications quote — if a Bench
-    // refactor drops a field the whole chain goes quietly blind.
-    // Tolerant by design: values may be null (failed probe arms, a
-    // pre-r16 driver roll mid-transition), only the SHAPE is pinned,
-    // and an absent file (fresh clone) skips.
+    // r16: BENCH_full.json is the baseline every next roll's vs_prev and
+    // summary parse — if a Bench refactor drops a field they read, the
+    // chain goes quietly blind. Pinned here: what vsPrev/summaryLine read
+    // from the committed file; the full line shape is pinned on synthetic
+    // results by the rollLine test below, because the committed file is
+    // whichever full roll ran last. An absent file (fresh clone) skips.
     val f = new java.io.File("BENCH_full.json")
     assume(f.exists, "no committed roll artifact in this checkout")
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = om.readTree(java.nio.file.Files.readAllBytes(f.toPath))
-    for (k <- Seq("value", "queries", "spread", "cold", "capped", "errors",
-        "vs_prev", "cold_compiles", "cold_jit_ms", "tail"))
-      assert(root.has(k), s"artifact lost top-level field $k")
+    assert(root.get("value").isNumber, "summaryLine reads the baseline total")
+    assert(root.get("queries").isObject && root.get("queries").size() > 0,
+      "vsPrev reads the per-query warm-mins")
+    assert(root.get("capped").isArray, "vsPrev reads the capped keys")
+    assert(root.has("box_fp") && root.get("box_fp").asText().nonEmpty,
+      "vsPrev labels cross-box baselines from box_fp")
+  }
+
+  test("rollLine pins the full line's shape on synthetic results") {
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    import scala.jdk.CollectionConverters._
+    import com.fasterxml.jackson.databind.JsonNode
+    def fields(n: JsonNode) = n.fieldNames().asScala.toList
+    def longs(n: JsonNode) = n.elements().asScala.map(_.asLong).toList
+    val rec = JobStats.Record(46, 60, 131, 4000, 3500, 20, Seq("setup" -> 0.5, "p0" -> 4.0))
+    // the SF dir comes from the environment: a quote or backslash in it
+    // must not corrupt the line (nor the next roll's vs_prev parse)
+    val sf = """/data/sf"0.1\x"""
+    val line = Bench.rollLine(Map("t37" -> row(9.0, cold = 12.0), "err" -> row(-1.0)), 2, sf,
+      "fp", Some(om.readTree("""{"value":10.0,"capped":[],"queries":{"t37":5.0},"box_fp":"0"}""")),
+      Map.empty, Map("t37" -> (0L, 8490L), "err" -> (1L, 2L)), Map("t37" -> rec))
+    val root = om.readTree(line)
+    assert(fields(root) == List("metric", "value", "unit", "sf", "box_fp", "reps", "warmups",
+      "noise_floor_med_spread", "errors", "capped", "vs_prev", "cold_diag_fields",
+      "cold_diag", "spread", "cold", "queries", "tail"))
+    assert(root.get("sf").asText() == sf && root.get("value").asDouble() == 9.0)
+    assert(fields(root.get("vs_prev")) ==
+      List("prev_total", "prev_box_fp", "cross_box", "flagged", "still_capped"))
+    assert(root.get("vs_prev").get("flagged").get("t37").asDouble() == 1.8)
+    assert(root.get("cold_diag_fields").elements().asScala.map(_.asText).toList ==
+      Bench.ColdDiagFields)
+    assert(longs(root.get("cold_diag").get("t37")) == List(0, 8490, 46, 60, 131, 4000, 3500, 20))
+    assert(longs(root.get("cold_diag").get("err")) == List(1, 2, 0, 0, 0, 0, 0, 0))
     val tail = root.get("tail")
-    for (k <- Seq("total_s", "n_queries", "n_errors", "cap_jvm",
-        "cold_diag", "t37_passes", "t37_sched", "slowest10"))
-      assert(tail.has(k), s"artifact tail lost field $k")
-    // the r16 baseline label: box_fp top-level, and vs_prev carrying
-    // the cross-box label
-    assert(root.has("box_fp") && root.get("box_fp").asText().nonEmpty)
-    for (k <- Seq("prev_total", "prev_box_fp", "cross_box", "flagged", "still_capped"))
-      assert(root.get("vs_prev").has(k), s"vs_prev lost field $k")
+    assert(fields(tail) == List("total_s", "n_queries", "n_errors", "cap_jvm",
+      "cold_steps", "slowest10"))
+    assert(fields(tail.get("cold_steps")) == List("t37"), "only keys that recorded steps")
+    assert(fields(tail.get("cold_steps").get("t37")) == List("setup", "p0"))
   }
 
   test("persistArtifacts always writes the sidecar; selective runs spare BENCH_full") {
@@ -286,53 +312,35 @@ class BenchGuardSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
-  test("PassWall buckets t37 step labels by pass and aggregates wall time") {
-    // the r15 probe extension: Bench arms this collector around t37's
-    // cold slot and emits the snapshot as the tail's `t37_passes` — the
-    // label→bucket mapping and the per-bucket accumulation are what
-    // make the artifact field readable, so they are pinned here
-    import graft.queries.TextQueries.PassWall
-    assert(PassWall.bucket("docs ckpt+capN") == "setup")
-    assert(PassWall.bucket("fpsBase winnow+ckpt") == "setup")
-    assert(PassWall.bucket("pass 0 stats ckpt") == "p0")
-    assert(PassWall.bucket("pass 1 dfC ckpt") == "p1")
-    assert(PassWall.bucket("pass 3 delta+count ckpt") == "p3")
-    assert(PassWall.bucket("pass 12 count") == "p12")
-    PassWall.reset()
-    PassWall.record("pass 0 stats ckpt", 1500000000L)
-    PassWall.record("pass 0 count", 500000000L)
-    PassWall.record("docs ckpt", 250000000L)
-    val snap = PassWall.snapshot.toMap
-    assert(math.abs(snap("p0") - 2.0) < 1e-9, s"p0 must aggregate: $snap")
-    assert(math.abs(snap("setup") - 0.25) < 1e-9)
-    // snapshot order is NUMERIC pass order with setup last (r16, the
-    // r15 ADVICE: lexicographic would put p10 before p2)
-    PassWall.record("pass 10 count", 1L)
-    PassWall.record("pass 2 count", 1L)
-    assert(PassWall.snapshot.map(_._1) == Seq("p0", "p2", "p10", "setup"))
-    PassWall.reset()
-    assert(PassWall.snapshot.isEmpty)
+  test("JobStats.step is plain outside a tag; inside one it sums walls per label") {
+    val spark = SparkSpec.session
+    assert(JobStats.step(spark, "outside")(42) == 42)
+    JobStats.tagged(spark, "BenchGuardSpec steps") {
+      JobStats.step(spark, "setup")(Thread.sleep(20))
+      JobStats.step(spark, "p0")(Thread.sleep(30))
+      assert(JobStats.step(spark, "setup") { Thread.sleep(20); "v" } == "v")
+    }
+    JobStats.step(spark, "outside")(())
+    val steps = JobStats.record(spark, "BenchGuardSpec steps").get.steps
+    assert(steps.map(_._1) == Seq("setup", "p0"), s"run order, one entry per label: $steps")
+    assert(steps.head._2 >= 0.04 && steps(1)._2 >= 0.03, s"$steps")
   }
 
-  test("SchedStats accumulates job/stage/task telemetry and renders JSON") {
-    // the r15 t37_sched field: a driver-box cold premium decomposes into
-    // "task time grew" (run_ms tracks the wall) vs "gaps grew" (run_ms
-    // flat while wall doubles — the scheduler axis). The accumulator and
-    // its JSON shape are what the adjudication reads, so pin them.
+  test("JobStats counts are exact after drain; untagged and marker jobs are excluded") {
     val spark = SparkSpec.session
-    val s = new Bench.SchedStats
-    spark.sparkContext.addSparkListener(s)
-    try {
-      spark.range(1L << 16).selectExpr("sum(id)").head()
-      s.settle()
-    } finally spark.sparkContext.removeSparkListener(s)
-    assert(s.jobs.get() >= 1 && s.stages.get() >= 1 && s.tasks.get() >= 1,
-      s"telemetry must accumulate: ${s.json}")
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = om.readTree(s.json)
-    assert(node.get("tasks").asLong() == s.tasks.get())
-    assert(node.get("task_ms").asLong() >= 0 && node.get("gc_ms").asLong() >= 0)
-    // a fresh instance renders all-zero (the not-benched shape in the tail)
-    assert(om.readTree(new Bench.SchedStats().json).get("jobs").asLong() == 0)
+    val sc = spark.sparkContext
+    JobStats.tagged(spark, "BenchGuardSpec counts") {
+      sc.parallelize(1 to 4, 2).count()
+      JobStats.tagged(spark, "BenchGuardSpec inner")(sc.parallelize(1 to 2, 1).count())
+      sc.parallelize(1 to 10, 3).map(x => (x % 2, x)).reduceByKey(_ + _, 2).count()
+    }
+    JobStats.drain(spark)
+    val r = JobStats.record(spark, "BenchGuardSpec counts").get
+    assert(r.counts.take(3) == Seq(2, 3, 7), s"$r")
+    assert(JobStats.record(spark, "BenchGuardSpec inner").get.counts.take(3) == Seq(1, 1, 1))
+    sc.parallelize(1 to 4, 2).count() // untagged, then a second marker job
+    JobStats.drain(spark)
+    assert(JobStats.record(spark, "BenchGuardSpec counts").get == r)
+    assert(sc.getLocalProperty("graft.tag") == null, "the tag is restored")
   }
 }

@@ -2,7 +2,8 @@ package graft
 
 /** Driver-contract smoke: entry returns rows; every query key has either an
   * oracle or is intentionally rows-only; all queries run at sf0.001; the
-  * library packages read no environment knobs; one session factory.
+  * library packages read no environment knobs; one session factory; one
+  * engine listener.
   */
 class EntrySpec extends SparkSpec {
 
@@ -56,20 +57,24 @@ class EntrySpec extends SparkSpec {
     assert(hits.isEmpty, s"environment knobs in library code:\n${hits.mkString("\n")}")
   }
 
-  test("graft.Session is the only SparkSession builder") {
-    // one conf for every main and spec: the plans Explain prints are the
-    // plans Bench times and Verify checks (pattern split so this file
-    // does not match itself)
-    val builder = Seq("SparkSession", "builder").mkString(".")
-    val roots = Seq("src/main/scala", "src/test/scala").map(new java.io.File(_))
-    assert(roots.forall(_.isDirectory),
-      s"source dirs not found from ${new java.io.File(".").getAbsolutePath}")
-    val hits = for {
-      f <- roots.flatMap(scalaFiles)
-      if f.getPath != "src/main/scala/graft/Session.scala"
-      (line, i) <- lines(f).zipWithIndex
-      if line.contains(builder)
-    } yield s"${f.getPath}:${i + 1}"
-    assert(hits.isEmpty, s"SparkSession built outside graft.Session:\n${hits.mkString("\n")}")
-  }
+  // one conf for every main and spec (the plans Explain prints are the
+  // plans Bench times and Verify checks), and one tagged engine listener;
+  // each pattern is assembled at run time so this file does not match it
+  for ((name, needle, owner) <- Seq(
+      ("graft.Session is the only SparkSession builder",
+        Seq("SparkSession", "builder").mkString("."), "Session"),
+      ("graft.JobStats is the only SparkListener registration",
+        Seq("add", "SparkListener").mkString, "JobStats")))
+    test(name) {
+      val roots = Seq("src/main/scala", "src/test/scala").map(new java.io.File(_))
+      assert(roots.forall(_.isDirectory),
+        s"source dirs not found from ${new java.io.File(".").getAbsolutePath}")
+      val hits = for {
+        f <- roots.flatMap(scalaFiles)
+        if f.getPath != s"src/main/scala/graft/$owner.scala"
+        (line, i) <- lines(f).zipWithIndex
+        if line.contains(needle)
+      } yield s"${f.getPath}:${i + 1}"
+      assert(hits.isEmpty, s"$needle outside graft.$owner:\n${hits.mkString("\n")}")
+    }
 }

@@ -90,20 +90,19 @@ class NewQueriesR19Spec extends SparkSpec {
     // restructured from ~4 actions/pass (~17 jobs/pass, 67 total at
     // sf0.1) to 2, measured 45 jobs at sf0.001 AND sf0.1 (the count is
     // SF-invariant because jobs are per-exchange, not per-row; Bench's
-    // `t37_sched` tail field reports it on every roll). Scheduler-stall
+    // `cold_diag` reports it on every roll). Scheduler-stall
     // exposure is proportional to the job count, so a silent regression
     // back to the eager-checkpoint / separate-count / separate-merge
     // shape is a perf bug this pins:
     // 55 = measured 45 + headroom for AQE plan-choice variance, far
     // under the old 67.
-    val stats = new Bench.SchedStats
-    spark.sparkContext.addSparkListener(stats)
-    try {
+    val tag = "t37 job-fusion pin"
+    JobStats.tagged(spark, tag) {
       graft.queries.TextQueries.spanRemoval(Tables.documents(spark, sfDir))
         .write.format("noop").mode("overwrite").save()
-      stats.settle()
-    } finally spark.sparkContext.removeSparkListener(stats)
-    val jobs = stats.jobs.get()
+    }
+    JobStats.drain(spark)
+    val jobs = JobStats.record(spark, tag).fold(0L)(_.jobs)
     assert(jobs >= 10, s"sanity: the pass loop must actually run ($jobs jobs)")
     assert(jobs <= 55,
       s"spanRemoval ran $jobs scheduler jobs (fused shape is ~45; the " +

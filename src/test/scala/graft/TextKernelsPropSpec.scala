@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.Prop.propBoolean
@@ -70,7 +70,7 @@ trait TextKernelProps extends SparkSpec {
 }
 
 /** Property-based differential check of the byte-walking shingle,
-  * fingerprint and winnow kernels: on generated ASCII texts (empty,
+  * fingerprint, winnow and simhash kernels: on generated ASCII texts (empty,
   * shorter than the n-gram, 40-200 chars, null) the interpreted and the
   * generated-code paths must equal the declarative twin the oracles
   * replay; a non-ASCII byte must throw on both paths.
@@ -118,7 +118,9 @@ class TextKernelsPropSpec extends TextKernelProps {
     Kernel("graft_fingerprint", rowTwin(graft.functions.TextFunctions.fingerprintSpark)),
     Kernel("graft_winnow13", docTwin(TextQueries.winnowFpsDeclarative(_))),
     Kernel("graft_winnow13p", docTwin(TextQueries.winnowFpsPosDeclarative(_)
-      .selectExpr("doc_id", s"fp * $winC + ($winC - 1 - gpos)"))))
+      .selectExpr("doc_id", s"fp * $winC + ($winC - 1 - gpos)"))),
+    Kernel("graft_simhash32", docTwin(df => Dedup.simHashDeclarative(
+      df.withColumn("n_chars", lit(0)), 32).select("doc_id", "simhash"))))
 
   test("shingle, fingerprint and winnow kernels equal their declarative twins on ASCII texts") {
     val classes = scala.collection.mutable.Set[String]()
