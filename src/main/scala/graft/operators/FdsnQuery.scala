@@ -10,9 +10,11 @@ import graft.functions.GeoFunctions
   * Jane translates FDSN HTTP query params into a Django ORM / PostGIS query
   * over its index tables; graft translates the same param surface into one
   * Catalyst predicate + sort + limit over an index DataFrame. Because the
-  * result is a single declarative plan, parquet pushdown and partition
-  * pruning apply to every parameter for free — at 100 TB the time/bbox
-  * params become scan-pruning, not post-filters.
+  * result is a single declarative plan, every parameter pushes down to
+  * the parquet scan (row-group skipping). Partition pruning applies where
+  * the store's layout matches a parameter: over a day-partitioned event
+  * store ([[graft.sources.ParquetStore.writeDayPartitioned]]) the time
+  * window also bounds `p_day`, so the scan reads only the window's days.
   */
 object FdsnQuery {
 
@@ -49,9 +51,9 @@ object FdsnQuery {
     def updatedAfter: Option[String]
   }
 
-  /** Filter `index` by `lead` predicates, then the bbox, then `attrs`,
-    * then updatedafter and the point-radius — one order for both
-    * services, so each service's plan keeps its predicate sequence.
+  /** Filter `index` by one conjunction: `lead` predicates, then the bbox,
+    * then `attrs`, then updatedafter and the point-radius — one order for
+    * both services, so each service's plan keeps its predicate sequence.
     */
   private def filterBy(index: DataFrame, p: GeoParams,
       lead: Seq[Option[Column]], attrs: Seq[Option[Column]]): DataFrame = {
@@ -69,9 +71,17 @@ object FdsnQuery {
       val deg = expr(GeoFunctions.centralAngleDegSql("latitude", "longitude", lat, lon))
       deg >= p.minRadius.getOrElse(0.0) && deg <= p.maxRadius.getOrElse(180.0)
     }
-    ((lead ++ bbox ++ attrs :+ updated :+ radius).flatten)
-      .foldLeft(index)(_ filter _)
+    (lead ++ bbox ++ attrs :+ updated :+ radius).flatten
+      .reduceOption(_ && _).fold(index)(index.filter)
   }
+
+  /** The UTC calendar day of FDSN time `t`, shifted by `days`. A store's
+    * `p_day` is the day in its writer's session zone, which the reader
+    * cannot see; every real zone is within a day of UTC, so a window's
+    * UTC days widened by one on each side cover its `p_day`s. */
+  private def utcDay(t: String, days: Int): Column =
+    date_add(date_from_unix_date(
+      floor(unix_seconds(lit(t).cast("timestamp")) / 86400).cast("int")), days)
 
   /** fdsnws-event query parameters (public FDSN spec surface). */
   final case class EventParams(
@@ -99,13 +109,19 @@ object FdsnQuery {
 
   /** Compile event params over an event-index DataFrame with columns
     * `time: timestamp, latitude, longitude, depth, magnitude,
-    * magnitude_type, agency, contributor, updated_s` (+ id cols).
+    * magnitude_type, agency, contributor, updated_s` (+ id cols). An
+    * index with a `p_day` column (a day-partitioned store) also gets the
+    * time window as a `p_day` bound, which prunes its day partitions; the
+    * `time` predicates keep the result exact.
     */
   def events(index: DataFrame, p: EventParams): DataFrame = {
+    val days = index.columns.contains("p_day")
     val filtered = filterBy(index, p,
       lead = Seq(
         p.starttime.map(t => col("time") >= lit(t).cast("timestamp")),
-        p.endtime.map(t => col("time") <= lit(t).cast("timestamp"))),
+        p.endtime.map(t => col("time") <= lit(t).cast("timestamp")),
+        p.starttime.filter(_ => days).map(t => col("p_day") >= utcDay(t, -1)),
+        p.endtime.filter(_ => days).map(t => col("p_day") <= utcDay(t, 1))),
       attrs = Seq(
         p.minDepth.map(col("depth") >= _),
         p.maxDepth.map(col("depth") <= _),

@@ -31,7 +31,7 @@ object IvfIndex {
 
   /** Load a persisted codebook for serving. */
   def load(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.sources.ParquetStore.read(spark, path)
 
   /** d29's index-health report over any codebook (inline-trained or
     * loaded): one assignment pass + one cent_id-keyed map-side-combined

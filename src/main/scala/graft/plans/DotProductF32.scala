@@ -5,8 +5,57 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 import org.apache.spark.sql.SparkSessionExtensions
+
+/** What both dot kernels share with their declarative twin
+  * `aggregate(zip_with(a, b, (x, y) -> x * y), 0, (acc, v) -> acc + v)`:
+  * a null element makes its product, and so the sum, NULL, which makes the
+  * result nullable whenever an element type is. Unequal lengths THROW,
+  * as in [[SqDistI64]]: the twin pads the shorter side with NULL, and a
+  * silent common-prefix sum would hash-flake engine-vs-oracle with no
+  * error. DotKernelsPropSpec pins both eval paths against the twin.
+  */
+sealed trait ArrayDot extends BinaryExpression {
+  protected def fn: String
+  protected def elemType: DataType
+
+  override def nullIntolerant: Boolean = true
+
+  protected def elemNulls: Boolean = Seq(left, right).exists(_.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => false
+  })
+  override def nullable: Boolean = left.nullable || right.nullable || elemNulls
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+    val ok = Seq(left, right).forall(_.dataType match {
+      case ArrayType(t, _) => t == elemType
+      case _ => false
+    })
+    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+      s"$fn expects (array<${elemType.simpleString}>, array<${elemType.simpleString}>), got " +
+        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
+  }
+
+  /** The common length of `x` and `y`; throws on a mismatch. */
+  protected def length(x: ArrayData, y: ArrayData): Int = {
+    val n = x.numElements()
+    if (y.numElements() != n)
+      throw new IllegalArgumentException(s"$fn length mismatch: $n vs ${y.numElements()}")
+    n
+  }
+
+  /** [[length]] in generated code, declaring `n`. */
+  protected def lengthCode(a: String, b: String, n: String): String =
+    s"""
+       |int $n = $a.numElements();
+       |if ($b.numElements() != $n)
+       |  throw new IllegalArgumentException(
+       |    "$fn length mismatch: " + $n + " vs " + $b.numElements());
+     """.stripMargin
+}
 
 /** Native codegen dot product over two `array<float>` columns.
   *
@@ -15,32 +64,26 @@ import org.apache.spark.sql.SparkSessionExtensions
   * and interprets two lambdas. This expression compiles to a single fused
   * primitive loop inside WholeStageCodegen — no allocation, no virtual
   * calls — which is what the 100 TB scan path wants. Returns double
-  * (f32 products accumulate in f64); null if either side is null.
+  * (f32 products accumulate in f64); null if either side or any element
+  * is null (the [[ArrayDot]] contract).
   */
-case class DotProductF32(left: Expression, right: Expression)
-    extends BinaryExpression {
+case class DotProductF32(left: Expression, right: Expression) extends ArrayDot {
 
+  override protected def fn: String = "graft_dot_f32"
+  override protected def elemType: DataType = FloatType
   override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"graft_dot_f32 expects (array<float>, array<float>), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
 
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = length(x, y)
     var s = 0.0
     var i = 0
-    while (i < n) { s += x.getFloat(i).toDouble * y.getFloat(i); i += 1 }
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      s += x.getFloat(i).toDouble * y.getFloat(i)
+      i += 1
+    }
     s
   }
 
@@ -49,10 +92,14 @@ case class DotProductF32(left: Expression, right: Expression)
       val i = ctx.freshName("i")
       val n = ctx.freshName("n")
       val s = ctx.freshName("s")
+      val nullElem =
+        if (elemNulls) s"if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"
+        else ""
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |${lengthCode(a, b, n)}
          |double $s = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
+         |  $nullElem
          |  $s += ((double) $a.getFloat($i)) * $b.getFloat($i);
          |}
          |${ev.value} = $s;
@@ -68,33 +115,32 @@ case class DotProductF32(left: Expression, right: Expression)
   * twin of [[DotProductF32]] for the quantized similarity/near-dup path.
   * At sf0.1 the pairwise scan is ~9x faster than the declarative
   * `aggregate(zip_with(...))` fold it replaces (no per-row array alloc,
-  * no interpreted lambdas).
+  * no interpreted lambdas). Overflow throws, as the twin's ANSI
+  * arithmetic does; like the twin, every product is taken (an overflow
+  * after a null element still throws) but the sum stops at the first null.
   */
-case class DotProductI64(left: Expression, right: Expression)
-    extends BinaryExpression {
+case class DotProductI64(left: Expression, right: Expression) extends ArrayDot {
 
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(org.apache.spark.sql.types.LongType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"graft_dot_i64 expects (array<bigint>, array<bigint>), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
+  override protected def fn: String = "graft_dot_i64"
+  override protected def elemType: DataType = LongType
+  override def dataType: DataType = LongType
 
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = length(x, y)
     var s = 0L
+    var sawNull = false
     var i = 0
-    while (i < n) { s += x.getLong(i) * y.getLong(i); i += 1 }
-    s
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) sawNull = true
+      else {
+        val p = Math.multiplyExact(x.getLong(i), y.getLong(i))
+        if (!sawNull) s = Math.addExact(s, p)
+      }
+      i += 1
+    }
+    if (sawNull) null else s
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -102,11 +148,21 @@ case class DotProductI64(left: Expression, right: Expression)
       val i = ctx.freshName("i")
       val n = ctx.freshName("n")
       val s = ctx.freshName("s")
+      val p = ctx.freshName("p")
+      val product = s"long $p = java.lang.Math.multiplyExact($a.getLong($i), $b.getLong($i));"
+      val body =
+        if (elemNulls)
+          s"""
+             |if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; continue; }
+             |$product
+             |if (!${ev.isNull}) $s = java.lang.Math.addExact($s, $p);
+           """.stripMargin
+        else s"$product\n$s = java.lang.Math.addExact($s, $p);"
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |${lengthCode(a, b, n)}
          |long $s = 0L;
          |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $a.getLong($i) * $b.getLong($i);
+         |  $body
          |}
          |${ev.value} = $s;
        """.stripMargin

@@ -29,7 +29,7 @@ object DedupQueries {
     */
   private[graft] def bandServe(s: SparkSession, storePath: String,
       batch: DataFrame): DataFrame = {
-    val corpus = s.read.parquet(storePath)
+    val corpus = graft.sources.ParquetStore.read(s, storePath)
     Dedup.bandSignatures(batch, K, Bands)
       .select(col("doc_id").as("new_id"), col("band"), col("sig"))
       .join(corpus, Seq("band", "sig"))

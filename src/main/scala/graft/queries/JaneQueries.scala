@@ -503,7 +503,7 @@ object JaneQueries {
           path, "ingest_day")
       }
       // serve: the cutoff prunes day directories before any row is read
-      s.read.parquet(path)
+      graft.sources.ParquetStore.read(s, path)
         .filter(col("ingest_day") <= 3)
         .groupBy("group_id")
         .agg(expr("max_by(doc_id, version)").as("doc_t1"),
@@ -647,7 +647,7 @@ object JaneQueries {
       val path = s"/tmp/graft_stores/maint_${new java.io.File(d).getName}"
       graft.sources.ParquetStore.installOverwrite(vacuumed.repartition(16), path)
       graft.sources.ParquetStore.compact(s, path)
-      val compacted = s.read.parquet(path)
+      val compacted = graft.sources.ParquetStore.read(s, path)
       def card(stage: String, df: DataFrame) =
         df.agg(count(lit(1)).as("n_rows"),
             countDistinct(col("group_id")).as("n_groups"),

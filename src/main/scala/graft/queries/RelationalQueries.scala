@@ -88,7 +88,7 @@ object RelationalQueries {
     * estimate arithmetic as q31.
     */
   private[graft] def hllServe(s: SparkSession, storePath: String): DataFrame = {
-    val stored = s.read.parquet(storePath)
+    val stored = graft.sources.ParquetStore.read(s, storePath)
     s.range(0, 64).toDF("r")
       .join(stored, col("r") === col("reg"), "left")
       .select(expr("coalesce(rho_max, 0)").as("rho_max"))
@@ -144,7 +144,7 @@ object RelationalQueries {
     */
   private[graft] def cmsServe(s: SparkSession, storePath: String,
       lookups: DataFrame): DataFrame = {
-    val stored = s.read.parquet(storePath)
+    val stored = graft.sources.ParquetStore.read(s, storePath)
     val hashes = CmsRows.zipWithIndex.map { case ((a, b), i) =>
       (i, s"((user_id * ${a}L + ${b}L) % $CmsP) % 256")
     }
@@ -174,7 +174,7 @@ object RelationalQueries {
     */
   private[graft] def mvRefresh(s: SparkSession, storePath: String,
       delta: DataFrame): DataFrame =
-    s.read.parquet(storePath)
+    graft.sources.ParquetStore.read(s, storePath)
       .unionByName(mvPartials(delta))
       .groupBy("mon", "o_orderstatus")
       .agg(sum(col("n_orders")).as("n_orders"),

@@ -482,7 +482,7 @@ object SimilarityQueries {
       val cb = graft.operators.IvfIndex.load(s, cbPath)
       val sem = SimilaritySearch.ivfTopKAssigned(
           queries = e.filter(col("vec_id") < NQueries),
-          postings = s.read.parquet(postPath),
+          postings = graft.sources.ParquetStore.read(s, postPath),
           centroids = cb.select(col("cent_id").as("vec_id"), col("cq").as("q")),
           nprobe = 2, k = RrfN)
         .select(col("query_id").as("qid"), col("cand_id").as("cand"),
@@ -919,7 +919,7 @@ object SimilarityQueries {
       val cb = graft.operators.IvfIndex.load(s, cbPath)
       val deltaPost = graft.operators.KMeans.assignQuantized(delta, cb)
         .select(col("cent_id"), col("vec_id").as("cand_id"), col("q"))
-      val posts = s.read.parquet(postPath).unionByName(deltaPost)
+      val posts = graft.sources.ParquetStore.read(s, postPath).unionByName(deltaPost)
       SimilaritySearch.ivfTopKAssigned(
         queries = e.filter(col("vec_id") >= 10 && col("vec_id") < 20),
         postings = posts,

@@ -1158,7 +1158,7 @@ object TextQueries {
         .filter(col("epoch") === TrainEpochs.toLong)
         .select("w_stop", "w_short", "w_mlen", "w_bias")
       graft.sources.ParquetStore.installOverwrite(wFinal, path)
-      serveClassifier(feat, s.read.parquet(path)).orderBy("doc_id")
+      serveClassifier(feat, graft.sources.ParquetStore.read(s, path)).orderBy("doc_id")
     },
 
     "t43_classifier_eval" -> { (s, d) =>

@@ -1,15 +1,22 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 
 /** Index-store layout (Jane: PostgreSQL tables; graft: partitioned parquet).
   *
-  * The store is written day-partitioned on event time so FDSN time-window
-  * params become directory-level partition pruning at 100 TB — the scan
-  * never lists, let alone reads, out-of-window days. Bucketing on the key
-  * columns (saveAsTable path) additionally co-locates the frequent joins.
+  * The store is written day-partitioned on event time, so a predicate on
+  * `p_day` (FdsnQuery.events derives one from its time window) prunes
+  * partitions at planning: the scan reads only the in-window day
+  * directories. [[read]] still LISTS every day directory, and a compacted
+  * store is flat (p_day is a data column), so there the bound only skips
+  * row groups. Bucketing on the key columns (saveAsTable path)
+  * additionally co-locates the frequent joins.
   *
   * Publish protocol (Jane's rule: a re-upload supersedes the old version
   * and no reader ever sees a half-written store). Every store write goes
@@ -36,9 +43,41 @@ object ParquetStore {
   def writeDayPartitioned(df: DataFrame, tsCol: String, path: String): Unit =
     installOverwritePartitioned(df.withColumn("p_day", to_date(col(tsCol))), path, "p_day")
 
-  /** Read back; time predicates on `p_day` prune partitions at planning. */
+  /** The one parquet reader: plans `path` (a file, a flat store or a
+    * hive-partitioned one) with no Spark job. `spark.read.parquet`
+    * infers the data schema in a job that reads one footer; here the
+    * driver reads the first visible data file's footer and converts it
+    * with the session's parquet confs, the same function that job runs
+    * when schemas are not merged (Spark's default, which graft keeps).
+    * Partition columns are still inferred from directory names, so
+    * columns and types are unchanged. A missing or empty path takes
+    * Spark's own path and so its errors. The schema is read on every call.
+    */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    firstDataFile(spark, path) match {
+      case Some(file) =>
+        val footer = new Footer(file, ParquetFooterReader.readFooter(
+          HadoopInputFile.fromPath(file, hadoopConf(spark)), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+        val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+        spark.read.schema(ParquetFileFormat.readSchemaFromFooter(footer, converter)).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The first data file under `path` in name order, skipping the names
+    * Spark's file listing hides (`_`/`.` prefixes; hive `k=v` dirs kept). */
+  private def firstDataFile(spark: SparkSession, path: String): Option[Path] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(hadoopConf(spark))
+    def visible(st: FileStatus): Boolean = {
+      val n = st.getPath.getName
+      !(n.startsWith("_") && !n.contains("=")) && !n.startsWith(".")
+    }
+    def first(st: FileStatus): Option[Path] =
+      if (st.isFile) Some(st.getPath)
+      else fs.listStatus(st.getPath).filter(visible).sortBy(_.getPath.getName)
+        .iterator.flatMap(first).nextOption()
+    if (fs.exists(p)) first(fs.getFileStatus(p)) else None
+  }
 
   /** Write a geo index partitioned by the 10°×10° grid cell (the j20
     * cell key). A bbox/radius query then enumerates its covering cells as
@@ -79,7 +118,7 @@ object ParquetStore {
       val p = new Path(path)
       val bytes = p.getFileSystem(hadoopConf(spark)).getContentSummary(p).getLength
       val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-      spark.read.parquet(path).repartition(n)
+      read(spark, path).repartition(n)
         .write.mode(SaveMode.Overwrite).parquet(tmp)
       n
     }

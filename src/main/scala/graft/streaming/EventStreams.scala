@@ -323,7 +323,7 @@ object EventStreams {
         ParquetStore.publish(spark, path) { tmp =>
           val existing =
             if (storeFs(spark, path).exists(new Path(path)))
-              spark.read.parquet(path) // read errors fail the batch
+              ParquetStore.read(spark, path) // read errors fail the batch
             else spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
           // latest-wins within the batch too: keep the highest ts per key
@@ -383,7 +383,7 @@ object EventStreams {
       val delta = partials(batch)
       val merged =
         if (fs.exists(p)) {
-          val existing = spark.read.parquet(path)
+          val existing = ParquetStore.read(spark, path)
           val valueCols = delta.columns.filterNot(mergeKeys.contains)
           existing.unionByName(delta)
             .groupBy(mergeKeys.map(col): _*)

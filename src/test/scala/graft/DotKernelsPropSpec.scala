@@ -1,0 +1,116 @@
+package graft
+
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.types._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.Prop.propBoolean
+
+import graft.plans.GraftFunctions
+
+/** Property-based differential check of the two dot kernels: on generated
+  * array pairs (null arrays, empty, ragged, null elements, extreme
+  * magnitudes) the interpreted path and the CODEGEN_ONLY path must equal
+  * the declarative `aggregate(zip_with(…))` twin, or throw on both paths —
+  * which they may only do on a length mismatch or where the twin throws.
+  */
+class DotKernelsPropSpec extends SparkSpec {
+
+  private case class Kernel(fn: String, elem: DataType, twin: String,
+      plain: Gen[Any], extremes: Seq[Any]) {
+    val value: Gen[Any] = Gen.frequency(8 -> plain, 1 -> Gen.oneOf(extremes))
+  }
+
+  private val kernels = Seq(
+    Kernel("graft_dot_f32", FloatType,
+      "aggregate(zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
+        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)",
+      Gen.choose(-1000f, 1000f), Seq(Float.MaxValue, -Float.MaxValue,
+        Float.MinPositiveValue, Float.PositiveInfinity, Float.NaN)),
+    // the extremes overflow a product or the sum, which throws under ANSI
+    Kernel("graft_dot_i64", LongType,
+      "aggregate(zip_with(a, b, (x, y) -> x * y), 0L, (acc, v) -> acc + v)",
+      Gen.choose(-1000000L, 1000000L), Seq(Long.MaxValue, Long.MinValue,
+        1L << 32, -(1L << 31), 3037000500L)))
+
+  /** One side: null, or up to 8 elements, one in 13 of them null. */
+  private type Side = Option[Seq[Option[Any]]]
+  private def side(k: Kernel, n: Int): Gen[Side] = Gen.frequency(
+    1 -> Gen.const(None),
+    10 -> Gen.listOfN(n, Gen.frequency(12 -> k.value.map(Some(_)), 1 -> Gen.const(None)))
+      .map(Some(_)))
+  private def pair(k: Kernel): Gen[(Side, Side)] = for {
+    n <- Gen.choose(0, 8)
+    m <- Gen.frequency(4 -> Gen.const(n), 1 -> Gen.choose(0, 8))
+    a <- side(k, n)
+    b <- side(k, m)
+  } yield (a, b)
+
+  private def classes(k: Kernel, a: Side, b: Side): Set[String] = {
+    val arrays = Seq(a, b).flatten
+    val elems = arrays.flatten
+    Set("null array" -> (arrays.size < 2), "empty" -> arrays.exists(_.isEmpty),
+      "ragged" -> (arrays.map(_.size).distinct.size > 1),
+      "null element" -> elems.contains(None),
+      "extreme" -> elems.flatten.exists(v => k.extremes.exists(_.equals(v))))
+      .collect { case (c, true) => c }
+  }
+
+  /** A result as comparable bits (NaN equals NaN), or the thrown class. */
+  private def bits(v: Any): Option[Long] = v match {
+    case null => None
+    case r: Row => bits(if (r.isNullAt(0)) null else r.get(0))
+    case d: Double => Some(java.lang.Double.doubleToLongBits(d))
+    case l: Long => Some(l)
+  }
+  private def outcome(body: => Any): Either[String, Option[Long]] =
+    try Right(bits(body)) catch { case e: Exception => Left(e.getClass.getSimpleName) }
+
+  private def arrayType(k: Kernel, a: Side, b: Side) =
+    ArrayType(k.elem, containsNull = Seq(a, b).flatten.flatten.contains(None))
+
+  private def interpreted(k: Kernel, a: Side, b: Side): Either[String, Option[Long]] = {
+    val t = arrayType(k, a, b)
+    def lit(s: Side) = Literal.create(s.map(_.map(_.map(_.asInstanceOf[AnyRef]).orNull)).orNull, t)
+    outcome(GraftFunctions.builders.find(_._1.funcName == k.fn).get._3(Seq(lit(a), lit(b)))
+      .eval(null))
+  }
+
+  /** `sql` over a one-row RDD-backed frame in generated code (CODEGEN_ONLY,
+    * so a broken doGenCode cannot fall back silently). */
+  private def generated(k: Kernel, a: Side, b: Side, sql: String): Either[String, Option[Long]] = {
+    GraftFunctions.register(spark)
+    val t = arrayType(k, a, b)
+    val schema = StructType(Seq(StructField("a", t), StructField("b", t)))
+    val row = Row(a.map(_.map(_.orNull)).orNull, b.map(_.map(_.orNull)).orNull)
+    val key = "spark.sql.codegen.factoryMode"
+    val prev = spark.conf.get(key, "FALLBACK")
+    spark.conf.set(key, "CODEGEN_ONLY")
+    try outcome(spark.createDataFrame(spark.sparkContext.parallelize(Seq(row), 1), schema)
+      .selectExpr(sql).collect().head)
+    finally spark.conf.set(key, prev)
+  }
+
+  for (k <- kernels)
+    test(s"${k.fn} equals its aggregate(zip_with) twin or throws on both eval paths") {
+      val seen = scala.collection.mutable.Set[String]()
+      val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(60)
+          .withInitialSeed(20261019L), Prop.forAllNoShrink(pair(k)) { case (a, b) =>
+        seen ++= classes(k, a, b)
+        val interp = interpreted(k, a, b)
+        val gen = generated(k, a, b, s"${k.fn}(a, b)")
+        val twin = generated(k, a, b, k.twin)
+        val ragged = a.isDefined && b.isDefined && a.get.size != b.get.size
+        val ok =
+          if (interp.isLeft || gen.isLeft) interp.isLeft && gen.isLeft && (ragged || twin.isLeft)
+          else interp == gen && gen == twin
+        ok :| s"${k.fn}($a, $b): interpreted $interp, codegen $gen, twin $twin"
+      })
+      assert(res.passed, res.status match {
+        case Test.Failed(_, labels) => labels.mkString("; ")
+        case s => s.toString
+      })
+      assert(seen == Set("null array", "empty", "ragged", "null element", "extreme"),
+        s"generator missed a class: $seen")
+    }
+}

@@ -3,7 +3,7 @@ package graft
 /** Driver-contract smoke: entry returns rows; every query key has either an
   * oracle or is intentionally rows-only; all queries run at sf0.001; the
   * library packages read no environment knobs; one session factory; one
-  * engine listener.
+  * engine listener; one parquet reader.
   */
 class EntrySpec extends SparkSpec {
 
@@ -58,15 +58,19 @@ class EntrySpec extends SparkSpec {
   }
 
   // one conf for every main and spec (the plans Explain prints are the
-  // plans Bench times and Verify checks), and one tagged engine listener;
-  // each pattern is assembled at run time so this file does not match it
-  for ((name, needle, owner) <- Seq(
+  // plans Bench times and Verify checks), one tagged engine listener, and
+  // one parquet reader (no schema-inference job per read); each pattern is
+  // assembled at run time so this file does not match it
+  private val mainAndTest = Seq("src/main/scala", "src/test/scala")
+  for ((name, needle, owner, dirs) <- Seq(
       ("graft.Session is the only SparkSession builder",
-        Seq("SparkSession", "builder").mkString("."), "Session"),
+        Seq("SparkSession", "builder").mkString("."), "Session", mainAndTest),
       ("graft.JobStats is the only SparkListener registration",
-        Seq("add", "SparkListener").mkString, "JobStats")))
+        Seq("add", "SparkListener").mkString, "JobStats", mainAndTest),
+      ("graft.sources.ParquetStore is the only parquet reader in the library",
+        Seq("read", "parquet(").mkString("."), "sources/ParquetStore", Seq("src/main/scala"))))
     test(name) {
-      val roots = Seq("src/main/scala", "src/test/scala").map(new java.io.File(_))
+      val roots = dirs.map(new java.io.File(_))
       assert(roots.forall(_.isDirectory),
         s"source dirs not found from ${new java.io.File(".").getAbsolutePath}")
       val hits = for {
@@ -75,6 +79,6 @@ class EntrySpec extends SparkSpec {
         (line, i) <- lines(f).zipWithIndex
         if line.contains(needle)
       } yield s"${f.getPath}:${i + 1}"
-      assert(hits.isEmpty, s"$needle outside graft.$owner:\n${hits.mkString("\n")}")
+      assert(hits.isEmpty, s"$needle outside $owner.scala:\n${hits.mkString("\n")}")
     }
 }

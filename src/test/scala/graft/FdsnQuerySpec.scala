@@ -1,10 +1,16 @@
 package graft
 
+import java.time.{Instant, LocalDateTime, ZoneOffset}
+
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.Prop.propBoolean
 
 import graft.operators.FdsnQuery
 import graft.operators.FdsnQuery.{EventParams, StationParams}
 import graft.operators.Indexers.{ChannelIndex, EventIndex}
+import graft.sources.ParquetStore
 
 /** FDSN parameter-surface behavior on the event/channel indices. */
 class FdsnQuerySpec extends SparkSpec {
@@ -206,5 +212,52 @@ class FdsnQuerySpec extends SparkSpec {
       .as[(Long, String, String, Long)].collect().toSet
     assert(cellForm == brute,
       s"missing=${(brute -- cellForm).take(5)} extra=${(cellForm -- brute).take(5)}")
+  }
+
+  test("a time window prunes a day store to its days and returns the unpartitioned rows") {
+    // p_day written under +14:00 and read under UTC: the widest real gap
+    // between the writer's day and the reader's
+    val tz = "spark.sql.session.timeZone"
+    val dir = java.nio.file.Files.createTempDirectory("graft_fdsn_days_").toString + "/events"
+    spark.conf.set(tz, "+14:00")
+    try ParquetStore.writeDayPartitioned(index.coalesce(1), "time", dir)
+    finally spark.conf.set(tz, "UTC")
+    val store = ParquetStore.read(spark, dir)
+
+    // UTC windows over the data's 30 days and a little beyond; a third
+    // start shortly before a midnight and end shortly after it
+    val day = 86400L
+    val t0 = Instant.parse("2023-12-30T00:00:00Z").getEpochSecond
+    val window: Gen[(Long, Long)] = Gen.frequency(
+      1 -> (for {
+        d <- Gen.choose(0L, 33L); before <- Gen.choose(1L, 7200L); after <- Gen.choose(1L, 7200L)
+      } yield (t0 + d * day - before, t0 + d * day + after)),
+      2 -> (for {
+        s <- Gen.choose(t0, t0 + 34 * day); len <- Gen.choose(0L, 5 * day)
+      } yield (s, s + len)))
+    def iso(s: Long) = LocalDateTime.ofEpochSecond(s, 0, ZoneOffset.UTC).toString
+    var crossed = false
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(16)
+        .withInitialSeed(20261019L), Prop.forAllNoShrink(window) { case (s, e) =>
+      val days = e / day - s / day + 1
+      crossed ||= days > 1 && e - s <= 14400
+      val p = FdsnQuery.EventParams(starttime = Some(iso(s)), endtime = Some(iso(e)))
+      val pruned = FdsnQuery.events(store, p).select("event_id")
+      val got = pruned.collect().map(_.getLong(0)).toSeq
+      val want = FdsnQuery.events(index, p).select("event_id").collect().map(_.getLong(0)).toSeq
+      // the physical plan before AQE, whose scan node a stage replaced by
+      // an empty relation still shows; numFiles is its selected files
+      val scans = pruned.queryExecution.sparkPlan.collect { case f: FileSourceScanExec => f }
+      val files = scans.map(_.selectedPartitions.totalNumberOfFiles).sum
+      val label = s"[${iso(s)}, ${iso(e)}]: ${got.size} vs ${want.size} rows, $files files, " +
+        s"partition filters ${scans.map(_.partitionFilters.mkString(", "))}"
+      (got == want && scans.size == 1 && scans.head.partitionFilters.exists(_.references
+        .exists(_.name == "p_day")) && files <= days + 2) :| label
+    })
+    assert(res.passed, res.status match {
+      case Test.Failed(_, labels) => labels.mkString("; ")
+      case st => st.toString
+    })
+    assert(crossed, "no generated window crossed a midnight")
   }
 }

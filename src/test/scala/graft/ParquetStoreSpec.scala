@@ -48,6 +48,67 @@ class ParquetStoreSpec extends SparkSpec {
     assert(pruned.count() == expected)
   }
 
+  /** A flat, a day-partitioned and a cell-partitioned store of the event
+    * index, each written by ParquetStore. */
+  private lazy val layouts: Seq[(String, String)] = {
+    val index = graft.operators.Indexers.EventIndex.attach(Tables.events(spark, sfDir))
+    val root = Files.createTempDirectory("graft_layouts_").toString
+    ParquetStore.installOverwrite(index, s"$root/flat")
+    ParquetStore.writeDayPartitioned(index, "time", s"$root/day")
+    ParquetStore.writeCellPartitioned(index, "latitude", "longitude", s"$root/cell")
+    Seq("flat", "day", "cell").map(l => l -> s"$root/$l")
+  }
+
+  private def jobs(tag: String)(body: => Any): Long = {
+    JobStats.tagged(spark, tag)(body)
+    JobStats.drain(spark)
+    JobStats.record(spark, tag).fold(0L)(_.jobs)
+  }
+
+  test("ParquetStore.read plans a store with no schema job") {
+    for ((layout, path) <- layouts) {
+      val tag = s"ParquetStoreSpec read $layout"
+      val read = jobs(s"$tag store")(ParquetStore.read(spark, path).queryExecution.analyzed)
+      val inferred = jobs(s"$tag inferred")(spark.read.parquet(path))
+      // Spark lists a directory with more than 32 subdirectories in a job
+      // (parallel partition discovery): the cell store's busy latitude bands
+      val schema = spark.read.parquet(path).schema
+      val listing = jobs(s"$tag listing")(spark.read.schema(schema).parquet(path))
+      assert(read == listing && inferred == listing + 1,
+        s"$layout store: read $read, inferred $inferred, listing $listing jobs")
+      if (layout != "cell") assert(read == 0, s"$layout store: read ran $read job(s)")
+    }
+  }
+
+  test("ParquetStore.read keeps spark.read.parquet's schema on stores it writes") {
+    for ((layout, path) <- layouts)
+      assert(ParquetStore.read(spark, path).schema == spark.read.parquet(path).schema, layout)
+  }
+
+  test("ParquetStore.read keeps spark.read.parquet's schema on every table at three SFs") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.getOption(key)
+    val tables = Seq("region", "nation", "customer", "supplier", "part", "orders",
+      "lineitem", "events", "documents", "embeddings")
+    try for (sf <- Seq("sf0.001", "sf0.01", "sf0.1"); t <- tables) {
+      // events is read as Tables.events reads it
+      spark.conf.set(key, (t == "events").toString)
+      val path = s"${new java.io.File(sfDir).getParent}/$sf/$t.parquet"
+      assert(ParquetStore.read(spark, path).schema == spark.read.parquet(path).schema, s"$sf $t")
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("ParquetStore.read fails like spark.read.parquet on a missing path and an empty dir") {
+    val root = Files.createTempDirectory("graft_read_err_").toString
+    val empty = new java.io.File(s"$root/empty")
+    assert(empty.mkdir() && new java.io.File(empty, "_SUCCESS").createNewFile())
+    for (path <- Seq(s"$root/missing", empty.getPath)) {
+      val want = intercept[Exception](spark.read.parquet(path)).getClass
+      val got = intercept[Exception](ParquetStore.read(spark, path)).getClass
+      assert(got == want, path)
+    }
+  }
+
   /** `df` written by [[ParquetStore.writeBucketedAt]] to a fresh temp
     * dir and attached as `table` by [[ParquetStore.registerBucketed]] —
     * the q45 serving path. */
