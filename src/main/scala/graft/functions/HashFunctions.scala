@@ -8,8 +8,10 @@ package graft.functions
   * Constants are fixed (no RNG) so every run and both engines agree.
   */
 object HashFunctions {
-  /** Mersenne prime 2^31 - 1. */
-  val P: Long = 2147483647L
+  /** Mersenne prime 2^31 - 1. A constant (`final`, no type), so the
+    * `graft.plans` kernels compile `% P` against a literal the JIT turns
+    * into multiplies instead of a hardware divide per hash. */
+  final val P = 2147483647L
 
   /** Multiplier/offset for permutation i (i >= 0); values in [1, P). */
   def permA(i: Int): Long = (1299721L * (i + 1) + 104729L) % P

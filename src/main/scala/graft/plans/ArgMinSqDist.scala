@@ -62,9 +62,21 @@ case class ArgMinSqDist(left: Expression, right: Expression)
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
   }
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val q = a.asInstanceOf[ArrayData]
-    val cbs = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    ArgMinSqDist.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => NullableResult.assign(ev, dataType,
+      s"graft.plans.ArgMinSqDist.compute($a, $b)"))
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object ArgMinSqDist {
+  /** Shared by interpreted eval and codegen; null on an empty codebook. */
+  def compute(q: ArrayData, cbs: ArrayData): java.lang.Long = {
     val k = cbs.numElements()
     if (k == 0) return null
     val n = q.numElements()
@@ -97,52 +109,4 @@ case class ArgMinSqDist(left: Expression, right: Expression)
         s"graft_argmin_sqdist packing overflow: dist=$bestD k=$k")
     bestD * (1L << 21) + bestI
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val k = ctx.freshName("k")
-      val c = ctx.freshName("c")
-      val cq = ctx.freshName("cq")
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      val bestD = ctx.freshName("bestD")
-      val bestI = ctx.freshName("bestI")
-      val lenOk = ctx.freshName("lenOk")
-      s"""
-         |int $k = $b.numElements();
-         |if ($k == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  long $bestD = Long.MAX_VALUE;
-         |  int $bestI = -1;
-         |  boolean $lenOk = true;
-         |  for (int $c = 0; $c < $k; $c++) {
-         |    org.apache.spark.sql.catalyst.util.ArrayData $cq = $b.getArray($c);
-         |    $lenOk &= $cq.numElements() == $n;
-         |    int $m = java.lang.Math.min($n, $cq.numElements());
-         |    long $s = 0L;
-         |    for (int $i = 0; $i < $m; $i++) {
-         |      long $d = $a.getLong($i) - $cq.getLong($i);
-         |      $s += $d * $d;
-         |    }
-         |    if ($s < $bestD) { $bestD = $s; $bestI = $c; }
-         |  }
-         |  if (!$lenOk)
-         |    throw new IllegalArgumentException(
-         |      "graft_argmin_sqdist length mismatch: some centroid's length != " + $n);
-         |  if ($bestD < 0L || $bestD >= (1L << 42) || $k > (1 << 21))
-         |    throw new ArithmeticException(
-         |      "graft_argmin_sqdist packing overflow: dist=" + $bestD + " k=" + $k);
-         |  ${ev.value} = $bestD * (1L << 21) + $bestI;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

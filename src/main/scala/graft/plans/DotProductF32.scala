@@ -2,70 +2,69 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** What both dot kernels share with their declarative twin
-  * `aggregate(zip_with(a, b, (x, y) -> x * y), 0, (acc, v) -> acc + v)`:
-  * a null element makes its product, and so the sum, NULL, which makes the
-  * result nullable whenever an element type is. Unequal lengths THROW,
-  * as in [[SqDistI64]]: the twin pads the shorter side with NULL, and a
-  * silent common-prefix sum would hash-flake engine-vs-oracle with no
-  * error. DotKernelsPropSpec pins both eval paths against the twin.
+/** What the dot kernels share with their declarative twin
+  * `aggregate(zip_with(a, b, (x, y) -> f(x, y)), 0, (acc, v) -> acc + v)`:
+  * a null element makes its term, and so the sum, NULL, which makes the
+  * result nullable whenever an element type is. Unequal lengths THROW:
+  * the twin pads the shorter side with NULL, and a silent common-prefix
+  * sum would hash-flake engine-vs-oracle with no error. Each kernel's
+  * `compute` returns the boxed result, null for NULL. DotKernelsPropSpec
+  * pins both eval paths against the twin.
   */
-sealed trait ArrayDot extends BinaryExpression {
+trait ArrayDot extends BinaryExpression {
   protected def fn: String
   protected def elemType: DataType
 
   override def nullIntolerant: Boolean = true
 
-  protected def elemNulls: Boolean = Seq(left, right).exists(_.dataType match {
-    case ArrayType(_, containsNull) => containsNull
-    case _ => false
-  })
-  override def nullable: Boolean = left.nullable || right.nullable || elemNulls
+  override def nullable: Boolean = left.nullable || right.nullable ||
+    Seq(left, right).exists(_.dataType match {
+      case ArrayType(_, containsNull) => containsNull
+      case _ => false
+    })
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+  override def checkInputDataTypes(): TypeCheckResult = {
     val ok = Seq(left, right).forall(_.dataType match {
       case ArrayType(t, _) => t == elemType
       case _ => false
     })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+    if (ok) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
       s"$fn expects (array<${elemType.simpleString}>, array<${elemType.simpleString}>), got " +
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
   }
 
+  /** Generated code storing `call`, a companion's `compute` call. */
+  protected def resultCode(ev: ExprCode, call: String): String =
+    if (nullable) NullableResult.assign(ev, dataType, call)
+    else s"${ev.value} = $call;" // no null element: compute never returns null
+}
+
+object ArrayDot {
   /** The common length of `x` and `y`; throws on a mismatch. */
-  protected def length(x: ArrayData, y: ArrayData): Int = {
+  def length(fn: String, x: ArrayData, y: ArrayData): Int = {
     val n = x.numElements()
     if (y.numElements() != n)
       throw new IllegalArgumentException(s"$fn length mismatch: $n vs ${y.numElements()}")
     n
   }
-
-  /** [[length]] in generated code, declaring `n`. */
-  protected def lengthCode(a: String, b: String, n: String): String =
-    s"""
-       |int $n = $a.numElements();
-       |if ($b.numElements() != $n)
-       |  throw new IllegalArgumentException(
-       |    "$fn length mismatch: " + $n + " vs " + $b.numElements());
-     """.stripMargin
 }
 
 /** Native codegen dot product over two `array<float>` columns.
   *
   * The similarity hot path scores every candidate row; the declarative
   * `aggregate(zip_with(...))` form allocates an intermediate array per row
-  * and interprets two lambdas. This expression compiles to a single fused
-  * primitive loop inside WholeStageCodegen — no allocation, no virtual
-  * calls — which is what the 100 TB scan path wants. Returns double
-  * (f32 products accumulate in f64); null if either side or any element
-  * is null (the [[ArrayDot]] contract).
+  * and interprets two lambdas. This expression is one primitive loop
+  * called from inside WholeStageCodegen — no intermediate array, no
+  * lambdas. Returns double (f32 products accumulate in f64); null if
+  * either side or any element is null (the [[ArrayDot]] contract).
   */
 case class DotProductF32(left: Expression, right: Expression) extends ArrayDot {
 
@@ -73,10 +72,22 @@ case class DotProductF32(left: Expression, right: Expression) extends ArrayDot {
   override protected def elemType: DataType = FloatType
   override def dataType: DataType = DoubleType
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = length(x, y)
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    DotProductF32.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      resultCode(ev, s"graft.plans.DotProductF32.compute($a, $b)"))
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object DotProductF32 {
+  /** Shared by interpreted eval and codegen; null on a null element. */
+  def compute(x: ArrayData, y: ArrayData): java.lang.Double = {
+    val n = ArrayDot.length("graft_dot_f32", x, y)
     var s = 0.0
     var i = 0
     while (i < n) {
@@ -86,29 +97,6 @@ case class DotProductF32(left: Expression, right: Expression) extends ArrayDot {
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val nullElem =
-        if (elemNulls) s"if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"
-        else ""
-      s"""
-         |${lengthCode(a, b, n)}
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $nullElem
-         |  $s += ((double) $a.getFloat($i)) * $b.getFloat($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Codegen dot product over two `array<bigint>` columns — the exact-math
@@ -125,10 +113,22 @@ case class DotProductI64(left: Expression, right: Expression) extends ArrayDot {
   override protected def elemType: DataType = LongType
   override def dataType: DataType = LongType
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = length(x, y)
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    DotProductI64.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      resultCode(ev, s"graft.plans.DotProductI64.compute($a, $b)"))
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object DotProductI64 {
+  /** Shared by interpreted eval and codegen; null on a null element. */
+  def compute(x: ArrayData, y: ArrayData): java.lang.Long = {
+    val n = ArrayDot.length("graft_dot_i64", x, y)
     var s = 0L
     var sawNull = false
     var i = 0
@@ -142,35 +142,6 @@ case class DotProductI64(left: Expression, right: Expression) extends ArrayDot {
     }
     if (sawNull) null else s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val p = ctx.freshName("p")
-      val product = s"long $p = java.lang.Math.multiplyExact($a.getLong($i), $b.getLong($i));"
-      val body =
-        if (elemNulls)
-          s"""
-             |if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; continue; }
-             |$product
-             |if (!${ev.isNull}) $s = java.lang.Math.addExact($s, $p);
-           """.stripMargin
-        else s"$product\n$s = java.lang.Math.addExact($s, $p);"
-      s"""
-         |${lengthCode(a, b, n)}
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $body
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Registration: programmatic (per session) or via
@@ -181,7 +152,6 @@ object GraftFunctions {
   val dotI64Info = new ExpressionInfo(classOf[DotProductI64].getName, "graft_dot_i64")
   val sqdistI64Info = new ExpressionInfo(classOf[SqDistI64].getName, "graft_sqdist_i64")
   val argminInfo = new ExpressionInfo(classOf[ArgMinSqDist].getName, "graft_argmin_sqdist")
-  val isectInfo = new ExpressionInfo(classOf[IntersectCountSorted].getName, "graft_isect_sorted")
   val isectI64Info = new ExpressionInfo(classOf[IntersectCountSortedI64].getName, "graft_isect_sorted_i64")
   val fpInfo = new ExpressionInfo(classOf[RollingFingerprint].getName, "graft_fingerprint")
   val mh16Info = new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash16")
@@ -217,8 +187,6 @@ object GraftFunctions {
       (exprs: Seq[Expression]) => SqDistI64(exprs(0), exprs(1))),
     (FunctionIdentifier("graft_argmin_sqdist"), argminInfo,
       (exprs: Seq[Expression]) => ArgMinSqDist(exprs(0), exprs(1))),
-    (FunctionIdentifier("graft_isect_sorted"), isectInfo,
-      (exprs: Seq[Expression]) => IntersectCountSorted(exprs(0), exprs(1))),
     (FunctionIdentifier("graft_isect_sorted_i64"), isectI64Info,
       (exprs: Seq[Expression]) => IntersectCountSortedI64(exprs(0), exprs(1))),
     (FunctionIdentifier("graft_fingerprint"), fpInfo,

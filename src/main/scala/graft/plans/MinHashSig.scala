@@ -38,9 +38,28 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
   private lazy val as: Array[Long] = (0 until k).map(HashFunctions.permA).toArray
   private lazy val bs: Array[Long] = (0 until k).map(HashFunctions.permB).toArray
 
-  override def nullSafeEval(input: Any): Any = {
-    val b = AsciiBytes.of(input.asInstanceOf[UTF8String], "graft_minhash")
+  override def nullSafeEval(input: Any): Any =
+    MinHashSig.compute(input.asInstanceOf[UTF8String], as, bs)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val aRef = ctx.addReferenceObj("minhashA", as, "long[]")
+    val bRef = ctx.addReferenceObj("minhashB", bs, "long[]")
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.plans.MinHashSig.compute($c, $aRef, $bRef);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object MinHashSig {
+  /** Shared by interpreted eval and codegen: one minimum per permutation
+    * (`as`, `bs`); null for text shorter than 3 chars. */
+  def compute(text: UTF8String, as: Array[Long], bs: Array[Long]): GenericArrayData = {
+    val b = AsciiBytes.of(text, "graft_minhash")
     if (b.length < 3) return null
+    val k = as.length
     val mins = Array.fill(k)(Long.MaxValue)
     var i = 0
     while (i <= b.length - 3) {
@@ -55,37 +74,4 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
     }
     new GenericArrayData(mins)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("minhashA", as, "long[]")
-    val bRef = ctx.addReferenceObj("minhashB", bs, "long[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val b = ctx.freshName("b")
-      val mins = ctx.freshName("mins")
-      val i = ctx.freshName("i")
-      val p = ctx.freshName("p")
-      val code = ctx.freshName("code")
-      val h = ctx.freshName("h")
-      s"""
-         |byte[] $b = graft.plans.AsciiBytes.of($c, "graft_minhash");
-         |if ($b.length < 3) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long[] $mins = new long[$k];
-         |  java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |  for (int $i = 0; $i <= $b.length - 3; $i++) {
-         |    long $code = ($b[$i] & 0xff) * 65536L + ($b[$i + 1] & 0xff) * 256L + ($b[$i + 2] & 0xff);
-         |    for (int $p = 0; $p < $k; $p++) {
-         |      long $h = ($aRef[$p] * $code + $bRef[$p]) % ${HashFunctions.P}L;
-         |      if ($h < $mins[$p]) $mins[$p] = $h;
-         |    }
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -29,8 +29,21 @@ case class RollingFingerprint(child: Expression) extends UnaryExpression {
     else TypeCheckResult.TypeCheckFailure(
       s"graft_fingerprint expects string, got ${child.dataType.simpleString}")
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val b = AsciiBytes.of(input.asInstanceOf[UTF8String], "graft_fingerprint")
+  override protected def nullSafeEval(input: Any): Any =
+    RollingFingerprint.compute(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.plans.RollingFingerprint.compute($c);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object RollingFingerprint {
+  /** Shared by interpreted eval and codegen. */
+  def compute(text: UTF8String): Long = {
+    val b = AsciiBytes.of(text, "graft_fingerprint")
     var lo = 0
     var hi = b.length
     while (lo < hi && b(lo) == ' ') lo += 1
@@ -54,40 +67,4 @@ case class RollingFingerprint(child: Expression) extends UnaryExpression {
     }
     fp
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val b = ctx.freshName("b")
-      val lo = ctx.freshName("lo")
-      val hi = ctx.freshName("hi")
-      val fp = ctx.freshName("fp")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val acc = ctx.freshName("acc")
-      val k = ctx.freshName("k")
-      val ch = ctx.freshName("ch")
-      s"""
-         |byte[] $b = graft.plans.AsciiBytes.of($c, "graft_fingerprint");
-         |int $lo = 0; int $hi = $b.length;
-         |while ($lo < $hi && $b[$lo] == ' ') $lo++;
-         |while ($hi > $lo && $b[$hi - 1] == ' ') $hi--;
-         |long $fp = 0L;
-         |int $i = $lo;
-         |while (true) {
-         |  int $j = $i;
-         |  while ($j < $hi && $b[$j] != ' ') $j++;
-         |  long $acc = 0L;
-         |  for (int $k = 8; $k >= 1; $k--) {
-         |    int $ch = ($i + $k - 1 < $j) ? ($b[$i + $k - 1] & 0xff) : 32;
-         |    $acc = $ch + 31L * $acc;
-         |  }
-         |  $fp = ($fp * 1000003L + $acc % 2147483647L) % 2147483647L;
-         |  if ($j >= $hi) break; else $i = $j + 1;
-         |}
-         |${ev.value} = $fp;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

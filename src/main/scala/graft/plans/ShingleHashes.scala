@@ -42,16 +42,30 @@ case class ShingleHashes(child: Expression, n: Int, base: Long, mod: Long)
       s"graft_shingles expects (string) with n > 0 and base*(mod-1)+255 < 2^63, " +
         s"got ${child.dataType.simpleString}, n=$n, base=$base, mod=$mod")
 
-  override def nullSafeEval(input: Any): Any = {
-    val b = AsciiBytes.of(input.asInstanceOf[UTF8String], "graft_shingles")
+  override def nullSafeEval(input: Any): Any =
+    ShingleHashes.compute(input.asInstanceOf[UTF8String], n, base, mod)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.plans.ShingleHashes.compute($c, $n, ${base}L, ${mod}L);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object ShingleHashes {
+  /** Shared by interpreted eval and codegen. */
+  def compute(text: UTF8String, n: Int, base: Long, mod: Long): GenericArrayData = {
+    val b = AsciiBytes.of(text, "graft_shingles")
     val count = b.length - n + 1
     if (count <= 0) return new GenericArrayData(Array.emptyLongArray)
     val h = new Array[Long](count)
+    val mask = NonNegMod.maskOf(mod)
     var i = 0
     while (i < count) {
       var acc = 0L
       var j = 0
-      while (j < n) { acc = ((b(i + j) & 0xff) + base * acc) % mod; j += 1 }
+      while (j < n) { acc = NonNegMod((b(i + j) & 0xff) + base * acc, mod, mask); j += 1 }
       h(i) = acc
       i += 1
     }
@@ -64,42 +78,4 @@ case class ShingleHashes(child: Expression, n: Int, base: Long, mod: Long)
     }
     new GenericArrayData(java.util.Arrays.copyOf(h, m))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val b = ctx.freshName("b")
-      val cnt = ctx.freshName("cnt")
-      val h = ctx.freshName("h")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val acc = ctx.freshName("acc")
-      val m = ctx.freshName("m")
-      val r = ctx.freshName("r")
-      s"""
-         |byte[] $b = graft.plans.AsciiBytes.of($c, "graft_shingles");
-         |int $cnt = $b.length - $n + 1;
-         |if ($cnt <= 0) {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(new long[0]);
-         |} else {
-         |  long[] $h = new long[$cnt];
-         |  for (int $i = 0; $i < $cnt; $i++) {
-         |    long $acc = 0L;
-         |    for (int $j = 0; $j < $n; $j++) {
-         |      $acc = (($b[$i + $j] & 0xff) + ${base}L * $acc) % ${mod}L;
-         |    }
-         |    $h[$i] = $acc;
-         |  }
-         |  java.util.Arrays.sort($h);
-         |  int $m = 1;
-         |  for (int $r = 1; $r < $cnt; $r++) {
-         |    if ($h[$r] != $h[$m - 1]) { $h[$m] = $h[$r]; $m++; }
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |    java.util.Arrays.copyOf($h, $m));
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

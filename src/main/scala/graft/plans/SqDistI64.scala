@@ -1,9 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Codegen squared L2 distance Σ(x−c)² over two `array<bigint>` columns —
   * the training/assignment twin of [[DotProductI64]].
@@ -14,70 +14,45 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * paths used is a CodegenFallback higher-order function — per row it
   * allocates the zipped intermediate array and interprets two lambdas
   * (guide §4: eliminate non-codegen expressions from the hot path). This
-  * compiles to one fused primitive loop inside WholeStageCodegen.
+  * is one primitive loop called from inside WholeStageCodegen.
   * Identical arithmetic and fold order (index-ascending), so results are
-  * bit-equal on equal-length non-null arrays — the only shape the
-  * quantized embedding pipeline produces (CodegenOnlySpec pins equality
-  * on the real corpus). Null if either side is null. Unequal lengths
-  * THROW (r21, the r20 ADVICE): the declarative fold returns NULL there
-  * while a silent min-length prefix sum would hash-flake engine-vs-oracle
-  * with no error — the contract is self-enforcing, not comment-enforced.
+  * bit-equal to the fold (CodegenOnlySpec pins equality on the real
+  * corpus). The [[ArrayDot]] contract: NULL if either side or any element
+  * is null, and unequal lengths THROW (the fold returns NULL there, and a
+  * silent min-length prefix sum would hash-flake engine-vs-oracle with no
+  * error). The sum wraps where the fold's ANSI arithmetic throws; callers
+  * keep to the milli-unit embedding bounds, far inside 2^63.
   */
-case class SqDistI64(left: Expression, right: Expression)
-    extends BinaryExpression {
+case class SqDistI64(left: Expression, right: Expression) extends ArrayDot {
 
+  override protected def fn: String = "graft_sqdist_i64"
+  override protected def elemType: DataType = LongType
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"graft_sqdist_i64 expects (array<bigint>, array<bigint>), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    SqDistI64.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (y.numElements() != n)
-      throw new IllegalArgumentException(
-        s"graft_sqdist_i64 length mismatch: $n vs ${y.numElements()}")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      resultCode(ev, s"graft.plans.SqDistI64.compute($a, $b)"))
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object SqDistI64 {
+  /** Shared by interpreted eval and codegen; null on a null element. */
+  def compute(x: ArrayData, y: ArrayData): java.lang.Long = {
+    val n = ArrayDot.length("graft_sqdist_i64", x, y)
     var s = 0L
     var i = 0
     while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
       val d = x.getLong(i) - y.getLong(i)
       s += d * d
       i += 1
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = $a.numElements();
-         |if ($b.numElements() != $n)
-         |  throw new IllegalArgumentException(
-         |    "graft_sqdist_i64 length mismatch: " + $n + " vs " + $b.numElements());
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $d = $a.getLong($i) - $b.getLong($i);
-         |  $s += $d * $d;
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

@@ -53,8 +53,23 @@ case class WinnowFps(child: Expression, n: Int, base: Long, mod: Long,
         s"${child.dataType.simpleString}, n=$n, base=$base, mod=$mod, " +
         s"w=$w, hmod=$hmod, c=$c")
 
-  override def nullSafeEval(input: Any): Any = {
-    val b = AsciiBytes.of(input.asInstanceOf[UTF8String], "graft_winnow")
+  override def nullSafeEval(input: Any): Any =
+    WinnowFps.compute(input.asInstanceOf[UTF8String], n, base, mod, w, hmod, c, keepPos)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, t =>
+      s"${ev.value} = graft.plans.WinnowFps.compute(" +
+        s"$t, $n, ${base}L, ${mod}L, $w, ${hmod}L, ${c}L, $keepPos);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object WinnowFps {
+  /** Shared by interpreted eval and codegen. */
+  def compute(text: UTF8String, n: Int, base: Long, mod: Long,
+      w: Int, hmod: Long, c: Long, keepPos: Boolean): GenericArrayData = {
+    val b = AsciiBytes.of(text, "graft_winnow")
     val cnt = b.length - n + 1
     // position-packing precondition enforced, not assumed: pos (1-based,
     // <= cnt) must stay below c or (c-1-pos) goes negative, silently
@@ -67,12 +82,14 @@ case class WinnowFps(child: Expression, n: Int, base: Long, mod: Long,
     val wins = cnt - w + 1
     if (wins <= 0) return new GenericArrayData(Array.emptyLongArray)
     val k = new Array[Long](cnt)
+    val mask = NonNegMod.maskOf(mod)
+    val hmask = NonNegMod.maskOf(hmod)
     var i = 0
     while (i < cnt) {
       var acc = 0L
       var j = 0
-      while (j < n) { acc = ((b(i + j) & 0xff) + base * acc) % mod; j += 1 }
-      k(i) = (acc % hmod) * c + (c - 1 - (i + 1))
+      while (j < n) { acc = NonNegMod((b(i + j) & 0xff) + base * acc, mod, mask); j += 1 }
+      k(i) = NonNegMod(acc, hmod, hmask) * c + (c - 1 - (i + 1))
       i += 1
     }
     val f = new Array[Long](wins)
@@ -93,61 +110,4 @@ case class WinnowFps(child: Expression, n: Int, base: Long, mod: Long,
     }
     new GenericArrayData(java.util.Arrays.copyOf(f, m))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, cv => {
-      val b = ctx.freshName("b")
-      val cnt = ctx.freshName("cnt")
-      val wins = ctx.freshName("wins")
-      val k = ctx.freshName("k")
-      val f = ctx.freshName("f")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val acc = ctx.freshName("acc")
-      val s = ctx.freshName("s")
-      val t = ctx.freshName("t")
-      val mn = ctx.freshName("mn")
-      val m = ctx.freshName("m")
-      val r = ctx.freshName("r")
-      s"""
-         |byte[] $b = graft.plans.AsciiBytes.of($cv, "graft_winnow");
-         |int $cnt = $b.length - $n + 1;
-         |if ($cnt >= ${c}L) {
-         |  throw new IllegalArgumentException(
-         |    "graft_winnow: document with " + $b.length + " bytes exceeds " +
-         |    "the position-packing capacity (need n-grams < c=" + ${c}L + ")");
-         |}
-         |int $wins = $cnt - $w + 1;
-         |if ($wins <= 0) {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(new long[0]);
-         |} else {
-         |  long[] $k = new long[$cnt];
-         |  for (int $i = 0; $i < $cnt; $i++) {
-         |    long $acc = 0L;
-         |    for (int $j = 0; $j < $n; $j++) {
-         |      $acc = (($b[$i + $j] & 0xff) + ${base}L * $acc) % ${mod}L;
-         |    }
-         |    $k[$i] = ($acc % ${hmod}L) * ${c}L + (${c}L - 1L - ($i + 1));
-         |  }
-         |  long[] $f = new long[$wins];
-         |  for (int $s = 0; $s < $wins; $s++) {
-         |    long $mn = $k[$s];
-         |    for (int $t = 1; $t < $w; $t++) {
-         |      if ($k[$s + $t] < $mn) $mn = $k[$s + $t];
-         |    }
-         |    $f[$s] = ${if (keepPos) s"$mn" else s"$mn / ${c}L"};
-         |  }
-         |  java.util.Arrays.sort($f);
-         |  int $m = 1;
-         |  for (int $r = 1; $r < $wins; $r++) {
-         |    if ($f[$r] != $f[$m - 1]) { $f[$m] = $f[$r]; $m++; }
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |    java.util.Arrays.copyOf($f, $m));
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

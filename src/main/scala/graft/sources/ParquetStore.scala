@@ -79,29 +79,6 @@ object ParquetStore {
     if (fs.exists(p)) first(fs.getFileStatus(p)) else None
   }
 
-  /** Write a geo index partitioned by the 10°×10° grid cell (the j20
-    * cell key). A bbox/radius query then enumerates its covering cells as
-    * predicates on the cell columns, and the scan prunes whole
-    * directories BEFORE any exact geometry (haversine/ray-cast) runs —
-    * the coarse-then-exact pattern every spatial index uses, expressed as
-    * plain partition pruning. At 100 TB a 30°-wide bbox reads ~1.5% of
-    * the corpus's directories instead of scanning everything.
-    */
-  def writeCellPartitioned(df: DataFrame, latCol: String, lonCol: String,
-      path: String): Unit =
-    installOverwritePartitioned(
-      df.withColumn("p_cell_lat", expr(s"CAST(floor($latCol / 10) AS BIGINT)"))
-        .withColumn("p_cell_lon", expr(s"CAST(floor($lonCol / 10) AS BIGINT)")),
-      path, "p_cell_lat", "p_cell_lon")
-
-  /** Cell predicates covering a bbox, for [[writeCellPartitioned]] stores:
-    * AND these with the exact bbox filter to get pruning + exactness.
-    */
-  def cellRangeFilter(minLat: Double, maxLat: Double,
-      minLon: Double, maxLon: Double): org.apache.spark.sql.Column =
-    col("p_cell_lat").between(math.floor(minLat / 10).toLong, math.floor(maxLat / 10).toLong) &&
-      col("p_cell_lon").between(math.floor(minLon / 10).toLong, math.floor(maxLon / 10).toLong)
-
   /** Small-files compaction — the maintenance pass every continuously
     * ingested store needs: streaming micro-batches, upserts, and wide
     * per-task writers accumulate many tiny files, and at 100 TB scan

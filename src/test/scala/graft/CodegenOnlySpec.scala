@@ -29,8 +29,7 @@ class CodegenOnlySpec extends SparkSpec {
           "graft_dot_f32(fv, fv) AS d32",
           "graft_dot_i64(la, lb) AS d64",
           "graft_sqdist_i64(la, lb) AS sq64",
-          "graft_isect_sorted_i64(la, lb) AS i64",
-          "graft_isect_sorted(array('a','b'), array('b','c')) AS istr")
+          "graft_isect_sorted_i64(la, lb) AS i64")
         .head()
       assert(!r.anyNull)
       assert(r.getSeq[Long](r.fieldIndex("mh")).length == 16)
@@ -38,7 +37,6 @@ class CodegenOnlySpec extends SparkSpec {
       assert(r.getAs[Long]("d64") == 1L * 2 + 2 * 5 + 5 * 9)
       assert(r.getAs[Long]("sq64") == 1L + 9 + 16) // (1-2)²+(2-5)²+(5-9)²
       assert(r.getAs[Long]("i64") == 2L) // {2,5}
-      assert(r.getAs[Long]("istr") == 1L) // {b}
     }
   }
 

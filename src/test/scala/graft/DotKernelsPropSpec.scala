@@ -8,50 +8,90 @@ import org.scalacheck.Prop.propBoolean
 
 import graft.plans.GraftFunctions
 
-/** Property-based differential check of the two dot kernels: on generated
-  * array pairs (null arrays, empty, ragged, null elements, extreme
-  * magnitudes) the interpreted path and the CODEGEN_ONLY path must equal
-  * the declarative `aggregate(zip_with(…))` twin, or throw on both paths —
-  * which they may only do on a length mismatch or where the twin throws.
+/** Property-based differential check of the array-pair kernels: on
+  * generated array pairs the interpreted path and the CODEGEN_ONLY path
+  * must equal the kernel's declarative twin, or throw on both paths. The
+  * dot and squared-distance kernels (null arrays, empty, ragged, null
+  * elements, extreme magnitudes) may only throw on a length mismatch or
+  * where the twin throws; the sorted intersect count (sorted distinct
+  * arrays: null, empty, disjoint, identical, Long.MinValue/MaxValue)
+  * never throws.
   */
 class DotKernelsPropSpec extends SparkSpec {
 
-  private case class Kernel(fn: String, elem: DataType, twin: String,
-      plain: Gen[Any], extremes: Seq[Any]) {
-    val value: Gen[Any] = Gen.frequency(8 -> plain, 1 -> Gen.oneOf(extremes))
+  /** One side: null, or its elements, each possibly null. */
+  private type Side = Option[Seq[Option[Any]]]
+
+  private case class Kernel(fn: String, elem: DataType, twinName: String, twin: String,
+      pairs: Gen[(Side, Side)], extremes: Seq[Any], classes: Set[String],
+      throwsOnRagged: Boolean)
+
+  /** Up to 8 elements, one in 13 of them null; equal lengths 4 in 5. */
+  private def arrayDot(fn: String, elem: DataType, twin: String,
+      plain: Gen[Any], extremes: Seq[Any]): Kernel = {
+    val value = Gen.frequency(8 -> plain, 1 -> Gen.oneOf(extremes))
+    def side(n: Int): Gen[Side] = Gen.frequency(
+      1 -> Gen.const(None),
+      10 -> Gen.listOfN(n, Gen.frequency(12 -> value.map(Some(_)), 1 -> Gen.const(None)))
+        .map(Some(_)))
+    val pairs = for {
+      n <- Gen.choose(0, 8)
+      m <- Gen.frequency(4 -> Gen.const(n), 1 -> Gen.choose(0, 8))
+      a <- side(n)
+      b <- side(m)
+    } yield (a, b)
+    Kernel(fn, elem, "aggregate(zip_with)", twin, pairs, extremes,
+      Set("null array", "empty", "ragged", "null element", "extreme"), throwsOnRagged = true)
+  }
+
+  /** Sorted distinct arrays over a narrow range (so overlaps are common)
+    * plus the Long extremes; the second side is drawn independently, equal
+    * to the first, or disjoint from it. */
+  private val sortedPairs: Gen[(Side, Side)] = {
+    val sorted = Gen.listOf(Gen.frequency(
+      8 -> Gen.choose(-20L, 20L), 1 -> Gen.oneOf(Long.MinValue, Long.MaxValue)))
+      .map(_.distinct.sorted.take(8))
+    def side(s: Gen[Seq[Long]]): Gen[Side] =
+      Gen.frequency(1 -> Gen.const(None), 8 -> s.map(v => Some(v.map(Some(_)))))
+    for {
+      a <- side(sorted)
+      xs = a.toSeq.flatten.flatten.toSet
+      b <- Gen.frequency(4 -> side(sorted), 1 -> Gen.const(a),
+        1 -> side(sorted.map(_.filterNot(xs))))
+    } yield (a, b)
   }
 
   private val kernels = Seq(
-    Kernel("graft_dot_f32", FloatType,
+    arrayDot("graft_dot_f32", FloatType,
       "aggregate(zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
         "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)",
       Gen.choose(-1000f, 1000f), Seq(Float.MaxValue, -Float.MaxValue,
         Float.MinPositiveValue, Float.PositiveInfinity, Float.NaN)),
     // the extremes overflow a product or the sum, which throws under ANSI
-    Kernel("graft_dot_i64", LongType,
+    arrayDot("graft_dot_i64", LongType,
       "aggregate(zip_with(a, b, (x, y) -> x * y), 0L, (acc, v) -> acc + v)",
       Gen.choose(-1000000L, 1000000L), Seq(Long.MaxValue, Long.MinValue,
-        1L << 32, -(1L << 31), 3037000500L)))
-
-  /** One side: null, or up to 8 elements, one in 13 of them null. */
-  private type Side = Option[Seq[Option[Any]]]
-  private def side(k: Kernel, n: Int): Gen[Side] = Gen.frequency(
-    1 -> Gen.const(None),
-    10 -> Gen.listOfN(n, Gen.frequency(12 -> k.value.map(Some(_)), 1 -> Gen.const(None)))
-      .map(Some(_)))
-  private def pair(k: Kernel): Gen[(Side, Side)] = for {
-    n <- Gen.choose(0, 8)
-    m <- Gen.frequency(4 -> Gen.const(n), 1 -> Gen.choose(0, 8))
-    a <- side(k, n)
-    b <- side(k, m)
-  } yield (a, b)
+        1L << 32, -(1L << 31), 3037000500L)),
+    // extremes at the largest magnitude whose 8-term sum of squared
+    // differences stays below 2^63 (the kernel wraps where the twin throws)
+    arrayDot("graft_sqdist_i64", LongType,
+      "aggregate(zip_with(a, b, (x, y) -> (x - y) * (x - y)), 0L, (acc, v) -> acc + v)",
+      Gen.choose(-1000000L, 1000000L), Seq(1L << 28, -(1L << 28))),
+    Kernel("graft_isect_sorted_i64", LongType, "size(array_intersect)",
+      "CAST(size(array_intersect(a, b)) AS BIGINT)", sortedPairs,
+      Seq(Long.MinValue, Long.MaxValue),
+      Set("null array", "empty", "ragged", "disjoint", "identical", "extreme"),
+      throwsOnRagged = false))
 
   private def classes(k: Kernel, a: Side, b: Side): Set[String] = {
     val arrays = Seq(a, b).flatten
     val elems = arrays.flatten
+    val both = a.isDefined && b.isDefined && arrays.forall(_.nonEmpty)
     Set("null array" -> (arrays.size < 2), "empty" -> arrays.exists(_.isEmpty),
       "ragged" -> (arrays.map(_.size).distinct.size > 1),
       "null element" -> elems.contains(None),
+      "disjoint" -> (both && a.get.intersect(b.get).isEmpty),
+      "identical" -> (both && a == b),
       "extreme" -> elems.flatten.exists(v => k.extremes.exists(_.equals(v))))
       .collect { case (c, true) => c }
   }
@@ -92,15 +132,16 @@ class DotKernelsPropSpec extends SparkSpec {
   }
 
   for (k <- kernels)
-    test(s"${k.fn} equals its aggregate(zip_with) twin or throws on both eval paths") {
+    test(s"${k.fn} equals its ${k.twinName} twin" +
+        (if (k.throwsOnRagged) " or throws on both eval paths" else " on both eval paths")) {
       val seen = scala.collection.mutable.Set[String]()
       val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(60)
-          .withInitialSeed(20261019L), Prop.forAllNoShrink(pair(k)) { case (a, b) =>
+          .withInitialSeed(20261019L), Prop.forAllNoShrink(k.pairs) { case (a, b) =>
         seen ++= classes(k, a, b)
         val interp = interpreted(k, a, b)
         val gen = generated(k, a, b, s"${k.fn}(a, b)")
         val twin = generated(k, a, b, k.twin)
-        val ragged = a.isDefined && b.isDefined && a.get.size != b.get.size
+        val ragged = k.throwsOnRagged && a.isDefined && b.isDefined && a.get.size != b.get.size
         val ok =
           if (interp.isLeft || gen.isLeft) interp.isLeft && gen.isLeft && (ragged || twin.isLeft)
           else interp == gen && gen == twin
@@ -110,7 +151,6 @@ class DotKernelsPropSpec extends SparkSpec {
         case Test.Failed(_, labels) => labels.mkString("; ")
         case s => s.toString
       })
-      assert(seen == Set("null array", "empty", "ragged", "null element", "extreme"),
-        s"generator missed a class: $seen")
+      assert(k.classes.subsetOf(seen), s"generator missed a class: ${k.classes -- seen}")
     }
 }

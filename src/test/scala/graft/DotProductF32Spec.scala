@@ -37,21 +37,6 @@ class DotProductF32Spec extends SparkSpec {
     assert(diff == 0L)
   }
 
-  test("merge-walk intersect count equals array_intersect on sorted distinct arrays") {
-    GraftFunctions.register(spark)
-    val docs = Tables.documents(spark, sfDir).limit(80)
-      .selectExpr("doc_id",
-        "sort_array(array_distinct(transform(sequence(1, length(text) - 2), i -> substring(text, i, 3)))) AS sh")
-    val pairs = docs.select(col("doc_id").as("a"), col("sh").as("sha"))
-      .crossJoin(docs.select(col("doc_id").as("b"), col("sh").as("shb")))
-    val diff = pairs
-      .withColumn("fast", expr("graft_isect_sorted(sha, shb)"))
-      .withColumn("slow", expr("CAST(size(array_intersect(sha, shb)) AS BIGINT)"))
-      .filter(col("fast") =!= col("slow"))
-      .count()
-    assert(diff == 0L)
-  }
-
   test("single-pass fingerprint equals the declarative fold, incl. edge shapes") {
     GraftFunctions.register(spark)
     import spark.implicits._

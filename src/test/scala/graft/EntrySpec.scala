@@ -3,7 +3,8 @@ package graft
 /** Driver-contract smoke: entry returns rows; every query key has either an
   * oracle or is intentionally rows-only; all queries run at sf0.001; the
   * library packages read no environment knobs; one session factory; one
-  * engine listener; one parquet reader.
+  * engine listener; one parquet reader; one implementation per codegen
+  * kernel.
   */
 class EntrySpec extends SparkSpec {
 
@@ -81,4 +82,27 @@ class EntrySpec extends SparkSpec {
       } yield s"${f.getPath}:${i + 1}"
       assert(hits.isEmpty, s"$needle outside $owner.scala:\n${hits.mkString("\n")}")
     }
+
+  // a graft.plans kernel holds its algorithm once, in its companion's
+  // compute, which interpreted eval and generated code both call; a
+  // hand-written Java body in doGenCode (the only use of freshName there)
+  // would be a second implementation to keep in step
+  test("every graft.plans expression evaluates through one compute") {
+    val root = new java.io.File("src/main/scala/graft/plans")
+    assert(root.isDirectory, s"plans dir not found from ${new java.io.File(".").getAbsolutePath}")
+    val found = for {
+      f <- scalaFiles(root)
+      ls = lines(f)
+      (line, i) <- ls.zipWithIndex
+      kind <- Seq("freshName(", "def doGenCode(", "def nullSafeEval(").filter(line.contains)
+      // a method's text runs to the next blank line
+      body = ls.drop(i).takeWhile(_.trim.nonEmpty).mkString("\n")
+    } yield (kind, s"${f.getPath}:${i + 1}", kind != "freshName(" && body.contains("compute("))
+    val bad = found.collect { case (kind, at, false) => s"$at: $kind" }
+    assert(bad.isEmpty,
+      s"freshName( or an eval method that does not call compute(:\n${bad.mkString("\n")}")
+    val counts = found.groupMapReduce(_._1)(_ => 1)(_ + _)
+    assert(counts.get("def doGenCode(").exists(_ > 0) &&
+      counts.get("def doGenCode(") == counts.get("def nullSafeEval("), counts)
+  }
 }

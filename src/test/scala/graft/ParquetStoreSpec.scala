@@ -25,38 +25,14 @@ class ParquetStoreSpec extends SparkSpec {
     assert(pruned.count() == expected)
   }
 
-  test("cell-partitioned geo store prunes partitions before exact geometry") {
-    val dir = Files.createTempDirectory("graft_geo_store_").toString
-    val index = graft.operators.Indexers.EventIndex
-      .attach(Tables.events(spark, sfDir))
-    ParquetStore.writeCellPartitioned(index, "latitude", "longitude", dir)
-    val cells = new java.io.File(dir).listFiles().map(_.getName)
-      .filter(_.startsWith("p_cell_lat="))
-    assert(cells.length > 1, s"expected cell directories, got ${cells.toSeq}")
-
-    // j01's bbox, composed as cell pruning + the exact filter
-    val pruned = ParquetStore.read(spark, dir)
-      .filter(ParquetStore.cellRangeFilter(-30, 30, 0, 90))
-      .filter(col("latitude").between(-30, 30) && col("longitude").between(0, 90))
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("p_cell_lat"),
-      s"expected cell partition pruning in plan:\n$plan")
-    // exactness: identical to the unpartitioned bbox filter
-    val expected = index
-      .filter(col("latitude").between(-30, 30) && col("longitude").between(0, 90))
-      .count()
-    assert(pruned.count() == expected)
-  }
-
-  /** A flat, a day-partitioned and a cell-partitioned store of the event
-    * index, each written by ParquetStore. */
+  /** A flat and a day-partitioned store of the event index, each written
+    * by ParquetStore. */
   private lazy val layouts: Seq[(String, String)] = {
     val index = graft.operators.Indexers.EventIndex.attach(Tables.events(spark, sfDir))
     val root = Files.createTempDirectory("graft_layouts_").toString
     ParquetStore.installOverwrite(index, s"$root/flat")
     ParquetStore.writeDayPartitioned(index, "time", s"$root/day")
-    ParquetStore.writeCellPartitioned(index, "latitude", "longitude", s"$root/cell")
-    Seq("flat", "day", "cell").map(l => l -> s"$root/$l")
+    Seq("flat", "day").map(l => l -> s"$root/$l")
   }
 
   private def jobs(tag: String)(body: => Any): Long = {
@@ -69,14 +45,10 @@ class ParquetStoreSpec extends SparkSpec {
     for ((layout, path) <- layouts) {
       val tag = s"ParquetStoreSpec read $layout"
       val read = jobs(s"$tag store")(ParquetStore.read(spark, path).queryExecution.analyzed)
+      // spark.read.parquet infers the schema in a job of its own
       val inferred = jobs(s"$tag inferred")(spark.read.parquet(path))
-      // Spark lists a directory with more than 32 subdirectories in a job
-      // (parallel partition discovery): the cell store's busy latitude bands
-      val schema = spark.read.parquet(path).schema
-      val listing = jobs(s"$tag listing")(spark.read.schema(schema).parquet(path))
-      assert(read == listing && inferred == listing + 1,
-        s"$layout store: read $read, inferred $inferred, listing $listing jobs")
-      if (layout != "cell") assert(read == 0, s"$layout store: read ran $read job(s)")
+      assert(read == 0 && inferred == 1,
+        s"$layout store: read $read, inferred $inferred jobs")
     }
   }
 
