@@ -44,9 +44,8 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val aRef = ctx.addReferenceObj("minhashA", as, "long[]")
     val bRef = ctx.addReferenceObj("minhashB", bs, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.plans.MinHashSig.compute($c, $aRef, $bRef);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+    nullSafeCodeGen(ctx, ev, c => NullableResult.assign(ev, dataType,
+      s"graft.plans.MinHashSig.compute($c, $aRef, $bRef)"))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -3,9 +3,10 @@ package graft.plans
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, ExprCode}
 import org.apache.spark.sql.types.DataType
 
-/** Generated code storing a kernel's `compute` call whose primitive SQL
-  * result comes back boxed: a null reference is SQL NULL (a dot kernel's
-  * null element, an empty `graft_argmin_sqdist` codebook). For nullable
+/** Generated code storing a kernel's `compute` call whose result can be
+  * SQL NULL, returned as a null reference (a primitive result comes back
+  * boxed): a dot kernel's null element, an empty `graft_argmin_sqdist`
+  * codebook, `graft_minhash16` on text under 3 chars. For nullable
   * expressions only, where `ev.isNull` is a declared variable. The block
   * scopes its one local, so several kernels can share a generated method.
   */

@@ -34,12 +34,14 @@ case class ShingleHashes(child: Expression, n: Int, base: Long, mod: Long)
 
   override def checkInputDataTypes(): TypeCheckResult =
     // overflow-safe form of base*(mod-1)+255 < 2^63 (the naive product
-    // can itself wrap positive and wave bad params through)
+    // can itself wrap positive and wave bad params through); a
+    // power-of-two mod lets `compute` reduce with a mask
     if (child.dataType == StringType && n > 0 && base > 0 && mod > 0 &&
-        mod - 1 <= (Long.MaxValue - 255) / base)
+        (mod & (mod - 1)) == 0 && mod - 1 <= (Long.MaxValue - 255) / base)
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"graft_shingles expects (string) with n > 0 and base*(mod-1)+255 < 2^63, " +
+      s"graft_shingles expects (string) with n > 0, mod a power of two and " +
+        s"base*(mod-1)+255 < 2^63, " +
         s"got ${child.dataType.simpleString}, n=$n, base=$base, mod=$mod")
 
   override def nullSafeEval(input: Any): Any =
@@ -54,18 +56,21 @@ case class ShingleHashes(child: Expression, n: Int, base: Long, mod: Long)
 }
 
 object ShingleHashes {
-  /** Shared by interpreted eval and codegen. */
+  /** Shared by interpreted eval and codegen. `mod` is a power of two
+    * (checked at analysis), so `x mod m` is the mask `x & (m-1)`: the JIT
+    * folds only a literal divisor, and `%` by this argument would cost a
+    * hardware divide per byte. */
   def compute(text: UTF8String, n: Int, base: Long, mod: Long): GenericArrayData = {
     val b = AsciiBytes.of(text, "graft_shingles")
     val count = b.length - n + 1
     if (count <= 0) return new GenericArrayData(Array.emptyLongArray)
     val h = new Array[Long](count)
-    val mask = NonNegMod.maskOf(mod)
+    val mask = mod - 1
     var i = 0
     while (i < count) {
       var acc = 0L
       var j = 0
-      while (j < n) { acc = NonNegMod((b(i + j) & 0xff) + base * acc, mod, mask); j += 1 }
+      while (j < n) { acc = ((b(i + j) & 0xff) + base * acc) & mask; j += 1 }
       h(i) = acc
       i += 1
     }

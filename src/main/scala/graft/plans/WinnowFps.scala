@@ -44,12 +44,13 @@ case class WinnowFps(child: Expression, n: Int, base: Long, mod: Long,
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType && n > 0 && base > 0 && mod > 0 &&
         w > 0 && hmod > 0 && c > 1 &&
+        (mod & (mod - 1)) == 0 && (hmod & (hmod - 1)) == 0 && // mask-reducible
         mod - 1 <= (Long.MaxValue - 255) / base && // Horner can't wrap
         hmod - 1 <= (Long.MaxValue / c))           // packed key can't wrap
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"graft_winnow expects (string) with positive params, " +
-        s"base*(mod-1)+255 < 2^63 and hmod*c < 2^63; got " +
+      s"graft_winnow expects (string) with positive params, mod and hmod " +
+        s"powers of two, base*(mod-1)+255 < 2^63 and hmod*c < 2^63; got " +
         s"${child.dataType.simpleString}, n=$n, base=$base, mod=$mod, " +
         s"w=$w, hmod=$hmod, c=$c")
 
@@ -66,7 +67,9 @@ case class WinnowFps(child: Expression, n: Int, base: Long, mod: Long,
 }
 
 object WinnowFps {
-  /** Shared by interpreted eval and codegen. */
+  /** Shared by interpreted eval and codegen. `mod` and `hmod` are powers
+    * of two (checked at analysis), reduced by mask as in
+    * [[ShingleHashes.compute]]. */
   def compute(text: UTF8String, n: Int, base: Long, mod: Long,
       w: Int, hmod: Long, c: Long, keepPos: Boolean): GenericArrayData = {
     val b = AsciiBytes.of(text, "graft_winnow")
@@ -82,14 +85,14 @@ object WinnowFps {
     val wins = cnt - w + 1
     if (wins <= 0) return new GenericArrayData(Array.emptyLongArray)
     val k = new Array[Long](cnt)
-    val mask = NonNegMod.maskOf(mod)
-    val hmask = NonNegMod.maskOf(hmod)
+    val mask = mod - 1
+    val hmask = hmod - 1
     var i = 0
     while (i < cnt) {
       var acc = 0L
       var j = 0
-      while (j < n) { acc = NonNegMod((b(i + j) & 0xff) + base * acc, mod, mask); j += 1 }
-      k(i) = NonNegMod(acc, hmod, hmask) * c + (c - 1 - (i + 1))
+      while (j < n) { acc = ((b(i + j) & 0xff) + base * acc) & mask; j += 1 }
+      k(i) = (acc & hmask) * c + (c - 1 - (i + 1))
       i += 1
     }
     val f = new Array[Long](wins)

@@ -9,7 +9,7 @@ import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.Prop.propBoolean
 
 import graft.operators.Dedup
-import graft.plans.{GraftFunctions, WinnowFps}
+import graft.plans.{GraftFunctions, ShingleHashes, WinnowFps}
 import graft.queries.TextQueries
 
 /** Generators and both eval paths shared by the byte-walking text kernels'
@@ -152,5 +152,17 @@ class TextKernelsPropSpec extends TextKernelProps {
       accepted.isEmpty :|
         s"${accepted.mkString(", ")} accepted ${t.map(c => f"${c.toInt}%04x").mkString(" ")}"
     }, minSuccessful = 6)
+  }
+
+  test("shingle and winnow kernels reject a modulus that is not a power of two") {
+    // compute reduces by mask, so analysis must refuse any other modulus
+    val t = Literal("abc")
+    val ok = Seq(ShingleHashes(t, 3, 256L, 1L << 32),
+      WinnowFps(t, 13, 31L, 1L << 56, 8, 1L << 40, 1L << 20))
+    val bad = Seq(ShingleHashes(t, 3, 256L, (1L << 32) - 1),
+      WinnowFps(t, 13, 31L, 3L << 50, 8, 1L << 40, 1L << 20),
+      WinnowFps(t, 13, 31L, 1L << 56, 8, 1000000007L, 1L << 20))
+    assert(ok.forall(_.checkInputDataTypes().isSuccess))
+    assert(bad.forall(_.checkInputDataTypes().isFailure))
   }
 }
