@@ -15,9 +15,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * q))` lambdas per vector (measured 1.3 s of d08's 3.8 s at sf0.1 for
   * 2000 vectors); here the weight `((plane+1)·(dim+7)·2654435761) mod 1997
   * − 998` is computed inline in a primitive loop — no weight arrays, no
-  * allocation. Bit-equality with bucketSql is spec-proven (CodegenOnlySpec)
-  * and the generated DuckDB oracles replay the same weights, so results
-  * are unchanged.
+  * allocation. Bit-equality with bucketSql is spec-proven (CodegenOnlySpec,
+  * HyperplaneBucketsPropSpec) and the generated DuckDB oracles replay the
+  * same weights, so results are unchanged.
+  *
+  * Contract: a null element and a long overflow throw. bucketSql reads a
+  * null element as a NULL projection, hence bit 0, and throws on overflow
+  * under ANSI. A null array returns NULL, where bucketSql yields bucket 0
+  * in every table; no caller passes one.
   */
 case class HyperplaneBuckets(child: Expression, tables: Int, planes: Int)
     extends UnaryExpression {
@@ -59,8 +64,10 @@ object HyperplaneBuckets {
         var proj = 0L
         var d = 0
         while (d < dims) {
+          if (q.isNullAt(d))
+            throw new IllegalArgumentException(s"graft_hyperplanes: null element at $d")
           val w = ((plane + 1).toLong * (d + 7).toLong * 2654435761L) % 1997L - 998L
-          proj += w * q.getLong(d)
+          proj = Math.addExact(proj, Math.multiplyExact(w, q.getLong(d)))
           d += 1
         }
         if (proj >= 0) bkt += 1L << p

@@ -20,8 +20,9 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * corpus). The [[ArrayDot]] contract: NULL if either side or any element
   * is null, and unequal lengths THROW (the fold returns NULL there, and a
   * silent min-length prefix sum would hash-flake engine-vs-oracle with no
-  * error). The sum wraps where the fold's ANSI arithmetic throws; callers
-  * keep to the milli-unit embedding bounds, far inside 2^63.
+  * error). Overflow throws, as the fold's ANSI arithmetic does; like the
+  * fold, every difference and square is taken (an overflow after a null
+  * element still throws) but the sum stops at the first null.
   */
 case class SqDistI64(left: Expression, right: Expression) extends ArrayDot {
 
@@ -46,13 +47,17 @@ object SqDistI64 {
   def compute(x: ArrayData, y: ArrayData): java.lang.Long = {
     val n = ArrayDot.length("graft_sqdist_i64", x, y)
     var s = 0L
+    var sawNull = false
     var i = 0
     while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val d = x.getLong(i) - y.getLong(i)
-      s += d * d
+      if (x.isNullAt(i) || y.isNullAt(i)) sawNull = true
+      else {
+        val d = Math.subtractExact(x.getLong(i), y.getLong(i))
+        val sq = Math.multiplyExact(d, d)
+        if (!sawNull) s = Math.addExact(s, sq)
+      }
       i += 1
     }
-    s
+    if (sawNull) null else s
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -28,14 +28,15 @@ import org.apache.spark.sql.functions._
   *     sibling (two concurrent publishers never share scratch);
   *  1. move aside — `path` → `path.old`;
   *  1. install — `path.install-<id>` → `path`, then `.old` is deleted;
-  *  1. sweep — stale `.install-` siblings are reclaimed
-  *     ([[sweepInstallScratch]]).
-  * At every instant `path` or `path.old` holds a complete store. A
-  * failure before the move-aside deletes the scratch dir. Kept-copy rule:
-  * a failure AFTER the move-aside (no `path`, a fully written scratch dir)
-  * keeps the scratch dir — it is the freshest complete copy — and records
-  * its name in the `path.install-kept` marker, so the next successful
-  * publish (or a valid-marker serve) reclaims exactly that copy.
+  *  1. sweep — `.install-` siblings over an hour old are deleted
+  *     ([[sweepScratch]], also run by [[buildIfStale]]).
+  * At every instant `path` or `path.old` holds a complete store. The one
+  * failure rule: on any failure publish deletes its scratch dir and
+  * rethrows. A failure after the move-aside leaves the prior generation
+  * in `path.old`, which the next publish heals. The only scratch that
+  * outlives a publish is an orphan of a crashed JVM, which the sweep
+  * reclaims once it is an hour old (a younger one may be a concurrent
+  * writer's).
   */
 object ParquetStore {
 
@@ -188,108 +189,29 @@ object ParquetStore {
     val fs = p.getFileSystem(hadoopConf(spark))
     val tmp = new Path(s"$path.install-${java.util.UUID.randomUUID().toString.take(8)}")
     val old = new Path(s"$path.old")
-    // tmp is deleted on ANY failure path (r13 ADVICE: a write that
-    // throws before the swap must not leak .install-<uuid> scratch
-    // dirs under /tmp/graft_stores); after a successful swap the
-    // rename has consumed tmp and the finally is a no-op. The cleanup
-    // itself is guarded so a delete failure (file still held by a
-    // terminating task) can never REPLACE the primary exception.
-    // EXCEPT (r14, the r13 ADVICE): if the failure happened AFTER the
-    // live store was renamed aside — `path` absent, fully-written tmp
-    // present — tmp is the freshest complete copy and deleting it would
-    // leave only `.old`; keep it and log its path so recovery doesn't
-    // depend solely on the heal rule or a rebuild.
-    var written = false // tmp is COMPLETE only once write returned
     try {
       val out = write(tmp.toString)
-      written = true
       if (fs.exists(old)) fs.delete(old, true)
       if (fs.exists(p) && !fs.rename(p, old))
         throw new java.io.IOException(s"publish: cannot move $path aside")
       if (!fs.rename(tmp, p))
         throw new java.io.IOException(s"publish: cannot install $tmp at $path")
       fs.delete(old, true)
-      // the new generation is live: reclaim stale install scratch (a
-      // prior failed swap's kept recovery copy, age-expired siblings)
-      sweepInstallScratch(fs, p)
+      sweepScratch(fs, p)
       out
     } finally {
-      try if (fs.exists(tmp)) {
-        if (!written || fs.exists(p)) fs.delete(tmp, true)
-        else {
-          System.err.println(
-            s"install: swap failed after move-aside; keeping fresh build at " +
-              s"$tmp (prior generation at $old)")
-          // record WHICH sibling is the kept recovery copy (r15 ADVICE):
-          // a later successful install (or a valid-marker serve) can
-          // then reclaim exactly this dir REGARDLESS of age — within
-          // the 1 h gate the common failed-swap-then-quick-rebuild
-          // sequence otherwise leaks the full-store copy forever once
-          // the store's staleness marker validates. The marker is
-          // written only for a COMPLETE tmp (written = true), so the
-          // recorded dir can never be an in-flight write. A SECOND
-          // consecutive failed swap must not orphan the first kept
-          // copy by overwriting its record (r15 review): this newer
-          // complete tmp supersedes it, so the previously recorded
-          // copy is reclaimed before the marker is rewritten.
-          try {
-            val marker = keptMarker(p)
-            if (fs.exists(marker)) {
-              val prev = readKeptMarker(fs, marker)
-              if (prev.startsWith(s"${p.getName}.install-") &&
-                  prev != tmp.getName) {
-                val dir = new org.apache.hadoop.fs.Path(p.getParent, prev)
-                if (fs.exists(dir)) fs.delete(dir, true)
-              }
-            }
-            val out = fs.create(marker, true)
-            try out.write(tmp.getName.getBytes("UTF-8")) finally out.close()
-          } catch { case e: Throwable =>
-            System.err.println(s"install kept-copy marker ($tmp): $e") }
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"install cleanup ($tmp): $e") }
+      // a no-op once the install consumed tmp; a failed delete is logged
+      // so that it never replaces the primary exception
+      try if (fs.exists(tmp)) fs.delete(tmp, true)
+      catch { case e: Throwable => System.err.println(s"publish cleanup ($tmp): $e") }
     }
   }
 
-  /** `$path.install-kept` — names the recovery copy a failed swap kept. */
-  private def keptMarker(p: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(p.getParent, s"${p.getName}.install-kept")
-
-  /** The dir name a kept-copy marker records ("" when unreadable).
-    * Reads until EOF (r16, the r15 ADVICE): the single-read contract is
-    * not guaranteed by FSDataInputStream — a short read would truncate
-    * the recorded name, the prefix check would reject it, and the
-    * marker would be consumed as corrupt, leaking the kept copy until
-    * the age sweep. Names are tiny; 256 bytes bounds any real marker.
+  /** Newest modification time at or under `p`. A long Spark write lands
+    * its task output under `_temporary/` while the scratch dir keeps its
+    * creation mtime, so the age gate keys off the recursive max.
     */
-  private def readKeptMarker(fs: org.apache.hadoop.fs.FileSystem,
-      kept: org.apache.hadoop.fs.Path): String = {
-    val in = fs.open(kept)
-    try {
-      val buf = new Array[Byte](256)
-      var off = 0
-      var n = in.read(buf, off, buf.length - off)
-      while (n > 0 && off + n < buf.length) {
-        off += n
-        n = in.read(buf, off, buf.length - off)
-      }
-      if (n > 0) off += n
-      new String(buf, 0, off, "UTF-8").trim
-    } finally in.close()
-  }
-
-  /** Newest modification time at or under `p` (r15 ADVICE): the stale-
-    * scratch age gate keys off the RECURSIVE max, not the top-level dir
-    * mtime — during a long Spark write the task output lands under
-    * `_temporary/` while the `.install-` dir keeps its creation mtime,
-    * so a legitimately slow (>1 h) concurrent write would otherwise
-    * look age-expired and get swept mid-write. Cost is bounded: scratch
-    * trees are one store's part files, and the sweep only recurses into
-    * `.install-` siblings (normally none exist).
-    */
-  private def newestMtime(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Long = {
+  private def newestMtime(fs: FileSystem, p: Path): Long = {
     val st = fs.getFileStatus(p)
     var mx = st.getModificationTime
     if (st.isDirectory)
@@ -299,178 +221,27 @@ object ParquetStore {
     mx
   }
 
-  /** Reclaim stale install scratch next to store path `p`. Two classes:
-    * (a) the recovery copy a prior run's failed swap KEPT — its name is
-    * recorded in the `.install-kept` marker, and since the caller holds
-    * a complete live store at `p`, that copy is provably stale and is
-    * reclaimed regardless of age (the r15 ADVICE leak: a quick rebuild
-    * after the failure left the copy younger than the age gate, and the
-    * now-valid staleness marker meant no later install ever swept it);
-    * (b) any other `.install-` sibling older than 1 h by NEWEST
-    * RECURSIVE mtime (see [[newestMtime]]) — an unrecorded leak from a
-    * crashed JVM. A sibling younger than the gate could be another
-    * JVM's in-flight write for the same path (Verify and Bench can race
-    * on a shared store) and is never touched. When NO live store exists
-    * at `p` a second-tier 24 h cutoff applies instead (r16, the r15
-    * ADVICE: orphans of a never-served store otherwise leaked forever).
-    * The marker-recorded kept copy is spared in BOTH tiers (r17, the
-    * r16 ADVICE: a concurrent installer failing its swap between the
-    * liveness sample and the deletes leaves a kept copy that can
-    * already be age-expired by preserved mtimes) — the marker is read
-    * at sweep start AND re-validated immediately before each delete,
-    * shrinking the race to the single read-vs-delete instant; a racy
-    * re-read failure skips that one delete instead of aborting the
-    * remaining orphans (r18, the r17 ADVICE). Store-less only, a third
-    * class: (c) a DANGLING kept marker — recorded dir gone, marker
-    * older than the 24 h gate — is consumed (r18, the r17 ADVICE: it
-    * was excluded from sweeping by name and only the live-store branch
-    * ever consumed markers, so it leaked forever). Never throws:
-    * scratch reclamation must not fail an install or a serve.
+  /** Delete every `<name>.install-*` sibling of store path `p` whose
+    * [[newestMtime]] is over an hour old: an orphan of a crashed JVM. A
+    * younger sibling may be another JVM's in-flight write for the same
+    * path (Verify and Bench can share a store) and is left alone. A
+    * sibling that a concurrent sweep removes first is skipped. Never
+    * throws: reclaiming scratch must not fail a publish or a serve.
     */
-  private[sources] def sweepInstallScratch(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Unit = {
-    try {
-      val kept = keptMarker(p)
-      if (fs.exists(kept)) {
-        val name = readKeptMarker(fs, kept)
-        // the recorded name is installer-generated (`<store>.install-<8
-        // hex>`); the prefix check keeps a corrupt marker from ever
-        // deleting something that is not this store's install scratch.
-        // The live store is re-checked IMMEDIATELY before the delete
-        // (r15 review): between the caller's staleness check and this
-        // sweep, a concurrent installer can move the live store aside
-        // and fail ITS swap — at which point the recorded copy may be
-        // the freshest complete data again and must survive (marker
-        // kept too, so a later healthy serve retries the reclaim).
-        if (name.startsWith(s"${p.getName}.install-")) {
-          if (fs.exists(p)) {
-            val dir = new org.apache.hadoop.fs.Path(p.getParent, name)
-            if (fs.exists(dir)) fs.delete(dir, true)
-            fs.delete(kept, false)
-          }
-        } else fs.delete(kept, false) // corrupt marker: consume, touch nothing
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"install kept-copy sweep ($p): $e") }
-    sweepAgedSiblings(fs, p)
-  }
-
-  /** The age-tier half of [[sweepInstallScratch]], split out (r17) so
-    * the mid-race state — live store present AND a kept marker written
-    * by a concurrent installer AFTER the kept-copy branch above ran —
-    * is directly constructible in a spec. Never throws.
-    */
-  private[graft] def sweepAgedSiblings(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Unit = {
+  private def sweepScratch(fs: FileSystem, p: Path): Unit =
     try {
       val parent = p.getParent
       if (parent != null && fs.exists(parent)) {
-        val live = fs.exists(p)
-        // like the kept-copy branch, the 1 h sweep only runs beside a
-        // LIVE store (r15 review): in the mid-recovery state (store
-        // moved aside by a failed concurrent swap) an aged sibling can
-        // be the freshest complete copy, and reclamation can always
-        // wait for the next healthy serve/install. Second tier (r16,
-        // the r15 ADVICE): without a live store the sweep previously
-        // never ran, so scratch from a crashed build of a store that
-        // is never served again leaked under /tmp forever. A DAY-old
-        // sibling cannot be an in-flight write (the recovery window is
-        // minutes), so it sweeps even store-less — EXCEPT the
-        // marker-recorded kept copy, which in that state may be the
-        // freshest complete data and keeps waiting for the next
-        // healthy serve/install (the marker survives with it).
-        val cutoff = System.currentTimeMillis() -
-          (if (live) 3600L * 1000 else 24L * 3600 * 1000)
-        // marker re-read UNCONDITIONALLY, live or not (r17, the r16
-        // ADVICE): `live` was sampled above, and a concurrent
-        // installer's swap can fail between that sample and the deletes
-        // below — its just-kept recovery copy can already exceed the 1 h
-        // gate by recursive mtime (rename preserves file mtimes), so the
-        // live tier would sweep it and leave a dangling marker. The
-        // kept-copy branch of sweepInstallScratch normally consumed
-        // marker + copy when live, so a marker existing HERE is exactly
-        // the race window; excluding its recorded name costs one
-        // exists+read per sweep.
-        val km = keptMarker(p)
-        def recordedKept(): Option[String] =
-          if (fs.exists(km)) Some(readKeptMarker(fs, km)).filter(_.nonEmpty)
-          else None
-        val keptName = recordedKept()
-        // dangling-marker reclamation (r18, the r17 ADVICE): a marker
-        // whose recorded directory no longer exists is excluded from the
-        // sibling sweep by name forever and is only consumed by the
-        // kept-copy branch when a LIVE store exists — in the store-less
-        // tier a stale marker file would persist indefinitely. A DAY-old
-        // marker with no recorded dir cannot belong to an in-flight
-        // install (the same argument as the store-less sibling tier), so
-        // consume it here; a younger one may be mid-race (its dir moving
-        // or another sweep consuming) and waits. Failure-isolated: a
-        // racy marker/dir read must not abort the sibling sweep below.
-        // Residual race (r19, the r18 ADVICE inventory note): the
-        // mtime read → fs.delete pair is non-atomic — a concurrent
-        // installer rewriting THIS marker between the two loses its
-        // fresh marker, leaving its kept copy unprotected until the
-        // 24 h store-less sweep. Same single read-vs-delete instant
-        // the per-delete re-validation below already accepts, and only
-        // a diagnosis marker is at stake; accepted, not closed.
-        if (!live) keptName.foreach { n =>
-          try {
-            val dir = new org.apache.hadoop.fs.Path(parent, n)
-            if (!fs.exists(dir) &&
-                fs.getFileStatus(km).getModificationTime < cutoff) {
-              fs.delete(km, false); ()
-            }
-          } catch { case e: Throwable =>
-            System.err.println(s"dangling kept-marker sweep ($km): $e") }
-        }
+        val cutoff = System.currentTimeMillis() - 3600L * 1000
         fs.listStatus(parent)
-          .filter { st =>
-            val n = st.getPath.getName
-            n.startsWith(s"${p.getName}.install-") &&
-              n != km.getName && !keptName.contains(n)
-          }
-          // per-sibling guard (r16 review): a sibling another JVM
-          // consumes between listStatus and the recursive stat throws
-          // FileNotFound — already-reclaimed, skip it rather than
-          // aborting the sweep of the remaining aged orphans
+          .filter(_.getPath.getName.startsWith(s"${p.getName}.install-"))
           .filter(st =>
             try newestMtime(fs, st.getPath) < cutoff
             catch { case _: java.io.FileNotFoundException => false })
-          // marker re-validated at the LAST instant (r17 review): the
-          // recursive mtime walk above can take seconds on a large
-          // scratch tree, and a swap failing INSIDE that window records
-          // a kept copy the sweep-start read missed. Deletes are rare
-          // (normally zero), so the extra exists+read per delete is
-          // free; the residual window is the single read-vs-delete
-          // instant, not the whole walk.
-          .foreach { st =>
-            // a read failure here is treated as "marker present" for
-            // THIS sibling only (r18, the r17 ADVICE): a concurrent
-            // sweep can consume the marker between fs.exists and the
-            // read, and letting the throw reach the outer catch would
-            // abort deletion of all remaining aged orphans — the same
-            // mid-iteration failure mode the r16 per-sibling mtime
-            // guard closed. Skipping one delete is always safe (the
-            // next sweep retries); the loop continues.
-            val keptNow =
-              try recordedKept()
-              catch { case e: Throwable =>
-                // logged (r18 review): a DURABLE read failure (perms,
-                // corruption) skips every delete on every sweep — that
-                // must stay diagnosable from stderr, not silent
-                System.err.println(
-                  s"aged-orphan marker re-read (${st.getPath}): $e")
-                Some(st.getPath.getName)
-              }
-            if (!keptNow.contains(st.getPath.getName))
-              fs.delete(st.getPath, true)
-          }
+          .foreach(st => fs.delete(st.getPath, true))
       }
     } catch { case e: Throwable =>
-      System.err.println(s"install stale-scratch sweep ($p): $e") }
-  }
+      System.err.println(s"publish scratch sweep ($p): $e") }
 
   /** Source-content stamp for store-staleness markers: a digest of the
     * (name, length, mtime) of every file under the source table —
@@ -510,25 +281,15 @@ object ParquetStore {
     val valid = java.nio.file.Files.exists(meta) &&
       new String(java.nio.file.Files.readAllBytes(meta), "UTF-8") == want &&
       storePaths.forall(p => new java.io.File(p).exists)
-    // Scratch sweep on BOTH branches, before any build (r16, the r15
-    // ADVICE): the valid-branch-only sweep meant a store whose build
-    // keeps crashing — never valid, never successfully installed —
-    // accumulated orphan `.install-` scratch forever. The sweep's
-    // store-less second-tier 24 h gate makes the pre-build call safe:
-    // a failed prior build's day-old orphans reclaim here, while any
-    // fresh sibling (or the marker-recorded kept copy) survives. On
-    // the valid path this is the serve-time sweep that closes the r15
-    // kept-copy leak. Guarded + metadata-only (one listStatus per
-    // store path, recursion only into `.install-` siblings, which
-    // normally don't exist).
+    // sweep on both branches, before any build: a store whose build
+    // keeps failing is never installed, so no publish would sweep it
     try {
-      val conf = org.apache.spark.sql.SparkSession.getActiveSession
+      val conf = SparkSession.getActiveSession
         .map(_.sparkContext.hadoopConfiguration)
         .getOrElse(new org.apache.hadoop.conf.Configuration())
       storePaths.foreach { sp =>
-        val p = new org.apache.hadoop.fs.Path(
-          new java.io.File(sp).getAbsolutePath)
-        sweepInstallScratch(p.getFileSystem(conf), p)
+        val p = new Path(new java.io.File(sp).getAbsolutePath)
+        sweepScratch(p.getFileSystem(conf), p)
       }
     } catch { case e: Throwable =>
       System.err.println(s"buildIfStale scratch sweep ($metaPath): $e") }

@@ -60,10 +60,7 @@ class ArgMinSqDistPropSpec extends SparkSpec {
   // CODEGEN_ONLY so a broken doGenCode cannot fall back silently
   private def codegen(cases: Seq[Case]): Seq[Option[Long]] = {
     GraftFunctions.register(spark)
-    val key = "spark.sql.codegen.factoryMode"
-    val prev = spark.conf.get(key, "FALLBACK")
-    spark.conf.set(key, "CODEGEN_ONLY")
-    try {
+    withCodegenOnly {
       val schema = StructType(Seq(StructField("i", IntegerType),
         StructField("q", VecT), StructField("cbs", CbT)))
       val rows = cases.zipWithIndex.map { case (c, i) => Row(i, c.q.orNull, c.cbs) }
@@ -71,7 +68,7 @@ class ArgMinSqDistPropSpec extends SparkSpec {
         .selectExpr("i", "graft_argmin_sqdist(q, cbs) AS p")
         .collect().sortBy(_.getInt(0))
         .map(r => if (r.isNullAt(1)) None else Some(r.getLong(1))).toSeq
-    } finally spark.conf.set(key, prev)
+    }
   }
 
   /** Whether `body` throws with an IllegalArgumentException anywhere in

@@ -9,13 +9,6 @@ import graft.plans.GraftFunctions
   */
 class CodegenOnlySpec extends SparkSpec {
 
-  private def withCodegenOnly[T](body: => T): T = {
-    val key = "spark.sql.codegen.factoryMode"
-    val prev = spark.conf.get(key, "FALLBACK")
-    spark.conf.set(key, "CODEGEN_ONLY")
-    try body finally spark.conf.set(key, prev)
-  }
-
   test("every graft expression evaluates under CODEGEN_ONLY") {
     GraftFunctions.register(spark)
     withCodegenOnly {

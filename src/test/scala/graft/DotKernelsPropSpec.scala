@@ -72,11 +72,12 @@ class DotKernelsPropSpec extends SparkSpec {
       "aggregate(zip_with(a, b, (x, y) -> x * y), 0L, (acc, v) -> acc + v)",
       Gen.choose(-1000000L, 1000000L), Seq(Long.MaxValue, Long.MinValue,
         1L << 32, -(1L << 31), 3037000500L)),
-    // extremes at the largest magnitude whose 8-term sum of squared
-    // differences stays below 2^63 (the kernel wraps where the twin throws)
+    // the extremes overflow a difference, a square or the sum, which
+    // throws under ANSI; 2^31 squares to 2^62, so two of them overflow the sum
     arrayDot("graft_sqdist_i64", LongType,
       "aggregate(zip_with(a, b, (x, y) -> (x - y) * (x - y)), 0L, (acc, v) -> acc + v)",
-      Gen.choose(-1000000L, 1000000L), Seq(1L << 28, -(1L << 28))),
+      Gen.choose(-1000000L, 1000000L), Seq(Long.MaxValue, Long.MinValue,
+        1L << 31, -(1L << 31), 3037000500L)),
     Kernel("graft_isect_sorted_i64", LongType, "size(array_intersect)",
       "CAST(size(array_intersect(a, b)) AS BIGINT)", sortedPairs,
       Seq(Long.MinValue, Long.MaxValue),
@@ -123,12 +124,8 @@ class DotKernelsPropSpec extends SparkSpec {
     val t = arrayType(k, a, b)
     val schema = StructType(Seq(StructField("a", t), StructField("b", t)))
     val row = Row(a.map(_.map(_.orNull)).orNull, b.map(_.map(_.orNull)).orNull)
-    val key = "spark.sql.codegen.factoryMode"
-    val prev = spark.conf.get(key, "FALLBACK")
-    spark.conf.set(key, "CODEGEN_ONLY")
-    try outcome(spark.createDataFrame(spark.sparkContext.parallelize(Seq(row), 1), schema)
-      .selectExpr(sql).collect().head)
-    finally spark.conf.set(key, prev)
+    withCodegenOnly(outcome(spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(row), 1), schema).selectExpr(sql).collect().head))
   }
 
   for (k <- kernels)

@@ -3,8 +3,8 @@ package graft
 /** Driver-contract smoke: entry returns rows; every query key has either an
   * oracle or is intentionally rows-only; all queries run at sf0.001; the
   * library packages read no environment knobs; one session factory; one
-  * engine listener; one parquet reader; one implementation per codegen
-  * kernel.
+  * engine listener; one parquet reader; one store-publish swap; one
+  * implementation per codegen kernel.
   */
 class EntrySpec extends SparkSpec {
 
@@ -59,9 +59,10 @@ class EntrySpec extends SparkSpec {
   }
 
   // one conf for every main and spec (the plans Explain prints are the
-  // plans Bench times and Verify checks), one tagged engine listener, and
-  // one parquet reader (no schema-inference job per read); each pattern is
-  // assembled at run time so this file does not match it
+  // plans Bench times and Verify checks), one tagged engine listener, one
+  // parquet reader (no schema-inference job per read) and one rename-aside
+  // swap (heal, move aside, install: the publish protocol); each pattern
+  // is assembled at run time so this file does not match it
   private val mainAndTest = Seq("src/main/scala", "src/test/scala")
   for ((name, needle, owner, dirs) <- Seq(
       ("graft.Session is the only SparkSession builder",
@@ -69,7 +70,9 @@ class EntrySpec extends SparkSpec {
       ("graft.JobStats is the only SparkListener registration",
         Seq("add", "SparkListener").mkString, "JobStats", mainAndTest),
       ("graft.sources.ParquetStore is the only parquet reader in the library",
-        Seq("read", "parquet(").mkString("."), "sources/ParquetStore", Seq("src/main/scala"))))
+        Seq("read", "parquet(").mkString("."), "sources/ParquetStore", Seq("src/main/scala")),
+      ("graft.sources.ParquetStore is the only file-system rename in the library",
+        Seq("", "rename(").mkString("."), "sources/ParquetStore", Seq("src/main/scala"))))
     test(name) {
       val roots = dirs.map(new java.io.File(_))
       assert(roots.forall(_.isDirectory),

@@ -224,41 +224,26 @@ class ParquetStoreSpec extends SparkSpec {
     assert(!leftovers.exists(_.contains(".install-")), s"leftovers: $leftovers")
   }
 
-  test("a successful install sweeps a prior run's kept recovery copy (r14)") {
-    // publish keeps a FULLY-WRITTEN tmp when the swap failed after
-    // the live store was moved aside (the r13 ADVICE: the fresh build
-    // must not be the copy that's deleted) — but once a LATER install
-    // succeeds, that recovery copy is stale and must be reclaimed, or
-    // a full store copy leaks under /tmp/graft_stores forever.
+  test("a successful install sweeps aged install scratch; fresh and slow-write siblings survive") {
+    // an install-<id> sibling outlives its publish only when a JVM died
+    // mid-write; the next successful install reclaims it
     val parent = Files.createTempDirectory("graft_sweepinst").toString
     val path = parent + "/store"
-    val stale = new java.io.File(path + ".install-deadbeef")
-    assert(stale.mkdirs())
-    Files.write(stale.toPath.resolve("part-junk"), "x".getBytes("UTF-8"))
-    // the sweep is AGE-GATED (1 h) so it can never race another JVM's
-    // in-flight install of the same path — age the fake copy past it.
-    // The gate keys off the NEWEST RECURSIVE mtime (r15 ADVICE), so
-    // every entry must be aged, not just the top-level dir
     val aged = System.currentTimeMillis() - 2 * 3600L * 1000
-    assert(stale.toPath.resolve("part-junk").toFile.setLastModified(aged))
-    assert(stale.setLastModified(aged))
+    val stale = agedScratch(path, "deadbeef", aged)
     // a FRESH sibling (another installer's live tmp) must survive
     val live = new java.io.File(path + ".install-cafebabe")
     assert(live.mkdirs())
     // ... and so must an old-looking dir whose CONTENTS are fresh — the
     // long-write shape (top-level .install- mtime is set at creation,
-    // task output lands under _temporary/ later), which the r14
-    // top-level-mtime gate would have deleted mid-write (r15 ADVICE)
-    val slow = new java.io.File(path + ".install-0badc0de")
-    assert(new java.io.File(slow, "_temporary").mkdirs())
-    Files.write(slow.toPath.resolve("_temporary").resolve("task-part"),
-      "y".getBytes("UTF-8")) // fresh mtime
-    assert(slow.setLastModified(aged)) // top level looks age-expired
+    // task output lands under _temporary/ later): the age gate keys off
+    // the newest recursive mtime
+    val slow = slowWrite(path, "0badc0de", aged)
     ParquetStore.installOverwrite(
       Tables.documents(spark, sfDir).select("doc_id"), path)
     assert(spark.read.parquet(path).count() ==
       Tables.documents(spark, sfDir).count())
-    assert(!stale.exists(), "stale recovery copy must be swept")
+    assert(!stale.exists(), "aged scratch must be swept")
     assert(live.exists(), "a fresh sibling tmp must never be touched")
     assert(slow.exists(),
       "an in-flight write (fresh contents under an old dir) must survive")
@@ -267,80 +252,16 @@ class ParquetStoreSpec extends SparkSpec {
     assert(!new java.io.File(path + ".old").exists())
   }
 
-  test("a recorded kept recovery copy is reclaimed regardless of age (r15 ADVICE)") {
-    // the r14 leak: swap fails (copy kept), the next run rebuilds WITHIN
-    // the 1 h gate — the copy is younger than the gate, survives the
-    // install-time sweep, and buildIfStale's now-valid marker means no
-    // further install ever runs, so the full-store copy leaks forever.
-    // The fix records the kept copy's name in a `.install-kept` marker;
-    // a later SUCCESS proves it stale and reclaims it regardless of age.
-    val parent = Files.createTempDirectory("graft_keptinst").toString
-    val path = parent + "/store"
-    val kept = new java.io.File(path + ".install-12ab34cd")
-    assert(kept.mkdirs())
-    Files.write(kept.toPath.resolve("part-junk"), "x".getBytes("UTF-8"))
-    Files.write(java.nio.file.Paths.get(path + ".install-kept"),
-      "store.install-12ab34cd".getBytes("UTF-8"))
-    // fresh mtime on purpose: the age gate must NOT protect it
-    ParquetStore.installOverwrite(
-      Tables.documents(spark, sfDir).select("doc_id"), path)
-    assert(!kept.exists(), "recorded kept copy must be reclaimed on success")
-    assert(!new java.io.File(path + ".install-kept").exists(),
-      "the kept-copy marker must be consumed")
-
-    // ... and on buildIfStale's VALID-marker (no-rebuild) path too: the
-    // serve-time sweep is what closes the leak once the marker validates
-    val kept2 = new java.io.File(path + ".install-56ef78ab")
-    assert(kept2.mkdirs())
-    Files.write(kept2.toPath.resolve("part-junk"), "x".getBytes("UTF-8"))
-    Files.write(java.nio.file.Paths.get(path + ".install-kept"),
-      "store.install-56ef78ab".getBytes("UTF-8"))
-    val meta = parent + "/store.meta"
-    Files.write(java.nio.file.Paths.get(meta), "v1".getBytes("UTF-8"))
-    var built = false
-    ParquetStore.buildIfStale(meta, "v1", Seq(path)) { built = true }
-    assert(!built, "valid marker + existing store must not rebuild")
-    assert(!kept2.exists(),
-      "valid-marker serve must reclaim the recorded kept copy")
-    assert(!new java.io.File(path + ".install-kept").exists())
-
-    // a corrupt marker naming something that is NOT this store's
-    // install scratch must never delete it
-    val bystander = new java.io.File(parent + "/other-dir")
-    assert(bystander.mkdirs())
-    Files.write(java.nio.file.Paths.get(path + ".install-kept"),
-      "other-dir".getBytes("UTF-8"))
-    ParquetStore.buildIfStale(meta, "v1", Seq(path)) { built = true }
-    assert(!built)
-    assert(bystander.exists(), "a corrupt marker must not delete bystanders")
-    assert(!new java.io.File(path + ".install-kept").exists(),
-      "a corrupt marker is still consumed")
-  }
-
-  test("day-old orphans of a NEVER-built store are swept; fresh + kept survive (r16)") {
-    // the r15 ADVICE leak: a store whose build keeps crashing is never
-    // valid and never successfully installed, so the (valid-branch-only)
-    // sweep never ran and its scratch leaked under /tmp forever. The
-    // sweep now runs on BOTH buildIfStale branches with a store-less
-    // second-tier 24 h gate: a day-old orphan cannot be an in-flight
-    // write, while the marker-recorded kept copy (possibly the freshest
-    // complete data in the mid-recovery state) always survives store-less.
+  test("aged orphans of a never-built store are swept on both buildIfStale branches; " +
+      "fresh and in-flight siblings survive") {
+    // a store whose build keeps failing is never installed, so only
+    // buildIfStale's own sweep reclaims the orphans its crashed builds left
     val parent = Files.createTempDirectory("graft_orphan").toString
     val path = parent + "/store" // never created: the build always throws
-    def scratch(suffix: String, ageMs: Long): java.io.File = {
-      val d = new java.io.File(path + ".install-" + suffix)
-      assert(d.mkdirs())
-      Files.write(d.toPath.resolve("part-junk"), "x".getBytes("UTF-8"))
-      val t = System.currentTimeMillis() - ageMs
-      assert(d.toPath.resolve("part-junk").toFile.setLastModified(t))
-      assert(d.setLastModified(t))
-      d
-    }
-    val dayOld = scratch("aaaa1111", 25 * 3600L * 1000)
-    val hoursOld = scratch("bbbb2222", 2 * 3600L * 1000) // inside the 24 h tier
-    val keptOld = scratch("cccc3333", 25 * 3600L * 1000) // recorded → protected
-    Files.write(java.nio.file.Paths.get(path + ".install-kept"),
-      "store.install-cccc3333".getBytes("UTF-8"))
+    val aged = System.currentTimeMillis() - 2 * 3600L * 1000
+    val orphan = agedScratch(path, "aaaa1111", aged)
+    val fresh = agedScratch(path, "bbbb2222", System.currentTimeMillis())
+    val slow = slowWrite(path, "cccc3333", aged)
     val meta = parent + "/store.meta"
     intercept[RuntimeException] {
       ParquetStore.buildIfStale(meta, "v1", Seq(path)) {
@@ -348,141 +269,39 @@ class ParquetStoreSpec extends SparkSpec {
       }
     }
     assert(!new java.io.File(path).exists())
-    assert(!dayOld.exists(), "a day-old store-less orphan must be swept")
-    assert(hoursOld.exists(),
-      "a sibling inside the 24 h store-less tier must survive")
-    assert(keptOld.exists(),
-      "the marker-recorded kept copy must survive store-less at ANY age")
-    assert(new java.io.File(path + ".install-kept").exists(),
-      "the marker must survive with its kept copy (store-less)")
+    assert(!new java.io.File(meta).exists(), "a failed build must not validate")
+    assert(!orphan.exists(), "an aged store-less orphan must be swept")
+    assert(fresh.exists() && slow.exists(), "fresh and in-flight siblings must survive")
+
+    // the valid branch sweeps too: a store and marker that no publish
+    // wrote (so no install-time sweep ran) and a new aged orphan
+    assert(new java.io.File(path).mkdirs())
+    Files.write(java.nio.file.Paths.get(meta), "v1".getBytes("UTF-8"))
+    val orphan2 = agedScratch(path, "dddd4444", aged)
+    var built = false
+    ParquetStore.buildIfStale(meta, "v1", Seq(path)) { built = true }
+    assert(!built, "valid marker + existing store must not rebuild")
+    assert(!orphan2.exists(), "the valid-marker serve must sweep an aged orphan")
+    assert(fresh.exists() && slow.exists(), "fresh and in-flight siblings must survive")
   }
 
-  test("the live-tier age sweep spares a marker-recorded kept copy (r17)") {
-    // the r16 ADVICE race: sweepInstallScratch's kept-copy branch runs,
-    // finds no marker, then a CONCURRENT installer's swap fails — it
-    // moves the live store back, writes the marker, and keeps its
-    // recovery copy, whose recursive mtimes can already exceed the 1 h
-    // gate (rename preserves file mtimes). The age tier (sampled
-    // live=true) would then sweep the just-kept copy and leave a
-    // dangling marker. The fix re-reads the marker inside the age tier:
-    // the recorded name is excluded in BOTH tiers. Constructed here by
-    // driving the extracted age tier directly with the post-race state.
-    val parent = Files.createTempDirectory("graft_livekept").toString
-    val path = parent + "/store"
-    val store = new java.io.File(path)
-    assert(store.mkdirs()) // live store present → the 1 h tier applies
-    Files.write(store.toPath.resolve("part-0"), "d".getBytes("UTF-8"))
-    val aged = System.currentTimeMillis() - 2 * 3600L * 1000
-    def agedScratch(suffix: String): java.io.File = {
-      val d = new java.io.File(path + ".install-" + suffix)
-      assert(d.mkdirs())
-      Files.write(d.toPath.resolve("part-junk"), "x".getBytes("UTF-8"))
-      assert(d.toPath.resolve("part-junk").toFile.setLastModified(aged))
-      assert(d.setLastModified(aged))
-      d
-    }
-    val keptAged = agedScratch("12ab34cd") // recorded → must survive
-    val orphanAged = agedScratch("ee44ff55") // unrecorded → swept
-    Files.write(java.nio.file.Paths.get(path + ".install-kept"),
-      "store.install-12ab34cd".getBytes("UTF-8"))
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    ParquetStore.sweepAgedSiblings(fs, new org.apache.hadoop.fs.Path(path))
-    assert(!orphanAged.exists(), "an unrecorded aged orphan still sweeps")
-    assert(keptAged.exists(),
-      "the marker-recorded kept copy must survive the LIVE 1 h tier")
-    assert(new java.io.File(path + ".install-kept").exists(),
-      "its marker must survive with it (no dangling marker)")
-    assert(store.exists(), "the live store is never touched")
+  /** A `path.install-<suffix>` dir holding one file, every entry's mtime at `t`. */
+  private def agedScratch(path: String, suffix: String, t: Long): java.io.File = {
+    val d = new java.io.File(path + ".install-" + suffix)
+    assert(d.mkdirs())
+    Files.write(d.toPath.resolve("part-junk"), "x".getBytes("UTF-8"))
+    assert(d.toPath.resolve("part-junk").toFile.setLastModified(t))
+    assert(d.setLastModified(t))
+    d
   }
 
-  test("a store-less DANGLING kept marker is consumed once day-old (r18)") {
-    // the r17 ADVICE: a marker whose recorded dir no longer exists is
-    // excluded from the sibling sweep by name and only the kept-copy
-    // branch (live store required) ever consumes markers — so in the
-    // store-less tier a stale marker file persisted indefinitely. A
-    // day-old dangling marker cannot belong to an in-flight install;
-    // a young one may be mid-race and must wait.
-    val parent = Files.createTempDirectory("graft_dangling").toString
-    val path = parent + "/store" // never created: store-less tier
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    val marker = java.nio.file.Paths.get(path + ".install-kept")
-    Files.write(marker, "store.install-deadbeef".getBytes("UTF-8"))
-    // young dangling marker: survives (could be mid-race)
-    ParquetStore.sweepAgedSiblings(fs, new org.apache.hadoop.fs.Path(path))
-    assert(marker.toFile.exists(),
-      "a YOUNG dangling marker must survive (possible mid-race state)")
-    // day-old dangling marker: consumed
-    assert(marker.toFile.setLastModified(
-      System.currentTimeMillis() - 25 * 3600L * 1000))
-    ParquetStore.sweepAgedSiblings(fs, new org.apache.hadoop.fs.Path(path))
-    assert(!marker.toFile.exists(),
-      "a day-old dangling marker must be consumed in the store-less tier")
-    // a day-old marker whose recorded dir EXISTS keeps protecting it
-    val keptDir = new java.io.File(path + ".install-deadbeef")
-    assert(keptDir.mkdirs())
-    Files.write(keptDir.toPath.resolve("part-0"), "x".getBytes("UTF-8"))
-    Files.write(marker, "store.install-deadbeef".getBytes("UTF-8"))
-    assert(marker.toFile.setLastModified(
-      System.currentTimeMillis() - 25 * 3600L * 1000))
-    ParquetStore.sweepAgedSiblings(fs, new org.apache.hadoop.fs.Path(path))
-    assert(marker.toFile.exists() && keptDir.exists(),
-      "a marker with a live recorded dir is NOT dangling — both survive")
-  }
-
-  test("a racy per-delete marker read skips ONE delete, not the sweep (r18)") {
-    // the r17 ADVICE: recordedKept() re-reads the marker immediately
-    // before each delete; a concurrent sweep consuming the marker
-    // between fs.exists and the read throws, and that throw previously
-    // reached the outer catch — aborting deletion of ALL remaining aged
-    // orphans (the same mid-iteration failure mode the r16 per-sibling
-    // mtime guard closed). Now a failed re-read is treated as "marker
-    // present" for that sibling only and the loop continues.
-    val parent = Files.createTempDirectory("graft_flaky").toString
-    val path = parent + "/store"
-    val store = new java.io.File(path)
-    assert(store.mkdirs()) // live store → 1 h tier
-    Files.write(store.toPath.resolve("part-0"), "d".getBytes("UTF-8"))
-    val aged = System.currentTimeMillis() - 2 * 3600L * 1000
-    def agedScratch(suffix: String): java.io.File = {
-      val d = new java.io.File(path + ".install-" + suffix)
-      assert(d.mkdirs())
-      Files.write(d.toPath.resolve("part-junk"), "x".getBytes("UTF-8"))
-      assert(d.toPath.resolve("part-junk").toFile.setLastModified(aged))
-      assert(d.setLastModified(aged))
-      d
-    }
-    val orphanA = agedScratch("aaaa0001")
-    val orphanB = agedScratch("bbbb0002")
-    Files.write(java.nio.file.Paths.get(path + ".install-kept"),
-      "store.install-cccc0003".getBytes("UTF-8"))
-    // wrap the local fs: the SECOND open of the marker (= the first
-    // per-delete re-read; the sweep-start read is the first) throws,
-    // simulating a concurrent sweep consuming the marker mid-iteration
-    val base = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    var markerOpens = 0
-    val flaky = new org.apache.hadoop.fs.FilterFileSystem(base) {
-      override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
-          : org.apache.hadoop.fs.FSDataInputStream = {
-        if (f.getName.endsWith(".install-kept")) {
-          markerOpens += 1
-          if (markerOpens == 2)
-            throw new java.io.FileNotFoundException(s"racy marker read: $f")
-        }
-        super.open(f, bufferSize)
-      }
-    }
-    // the wrapping constructor does not carry the conf, and the
-    // single-arg open(Path) the marker reader uses reads it
-    flaky.setConf(spark.sparkContext.hadoopConfiguration)
-    ParquetStore.sweepAgedSiblings(flaky, new org.apache.hadoop.fs.Path(path))
-    assert(markerOpens >= 2, s"the racy read must have been exercised: $markerOpens")
-    val survivors = Seq(orphanA, orphanB).count(_.exists())
-    assert(survivors == 1,
-      s"exactly one orphan skips (its re-read threw) and the OTHER still sweeps " +
-        s"— the old behavior aborted the whole loop and left both ($survivors left)")
-    assert(store.exists(), "the live store is never touched")
+  /** A `path.install-<suffix>` dir aged `t` whose `_temporary/` task output is fresh. */
+  private def slowWrite(path: String, suffix: String, t: Long): java.io.File = {
+    val d = new java.io.File(path + ".install-" + suffix)
+    assert(new java.io.File(d, "_temporary").mkdirs())
+    Files.write(d.toPath.resolve("_temporary").resolve("task-part"),
+      "y".getBytes("UTF-8"))
+    assert(d.setLastModified(t))
+    d
   }
 }

@@ -27,10 +27,11 @@ object FaultyFs {
 }
 
 /** Every store writer publishes through one protocol (heal → unique
-  * scratch dir → move aside → install → sweep). A rename failure injected
-  * at the move-aside or at the install must leave a complete store at
-  * `path` or `path.old`, no scratch beyond the marker-recorded kept copy,
-  * and a state the next successful call heals and cleans up.
+  * scratch dir → move aside → install → sweep) with one failure rule: the
+  * scratch dir is deleted. A rename failure injected at the move-aside or
+  * at the install must leave a complete store at `path` or `path.old`, no
+  * `.install-` dir at all, and a state the next successful call heals and
+  * leaves as the one store dir.
   */
 class PublishFaultSpec extends SparkSpec {
 
@@ -90,11 +91,6 @@ class PublishFaultSpec extends SparkSpec {
       val local = s"${parent.getPath}/store"
       val path = s"faulty://$local"
       def siblings = parent.list().toSet
-      def kept: Option[String] = {
-        val marker = new java.io.File(s"$local.install-kept")
-        if (marker.exists()) Some(new String(Files.readAllBytes(marker.toPath), "UTF-8").trim)
-        else None
-      }
       w.setup(path)
       assert(rows(path) == w.want(1))
 
@@ -106,17 +102,10 @@ class PublishFaultSpec extends SparkSpec {
       val live = Seq(local, s"$local.old").find(new java.io.File(_).exists())
       assert(live.nonEmpty, s"no complete store left: $siblings")
       assert(Set(w.want(1), w.want(2)).contains(rows(s"faulty://${live.get}")))
-      // no scratch beyond the marker-recorded kept copy
-      val allowed = Set("store", "store.old", "store.install-kept") ++ kept
-      assert(siblings.subsetOf(allowed), s"scratch leaked: $siblings (kept: $kept)")
-      if (point == "install") {
-        // the move-aside happened, so the fully written scratch dir is the
-        // freshest complete copy: it must be kept and recorded, not deleted
-        assert(kept.exists(k => siblings.contains(k)), s"fresh copy lost: $siblings")
-        assert(rows(s"faulty://${parent.getPath}/${kept.get}") == w.want(2))
-      } else assert(kept.isEmpty, s"nothing to keep after a failed move-aside: $kept")
+      // the scratch dir is gone on either failure; nothing else is left
+      assert(siblings.subsetOf(Set("store", "store.old")), s"scratch leaked: $siblings")
 
-      // the next successful call heals, publishes and reclaims the kept copy
+      // the next successful call heals and publishes generation 2
       w.run(path, 2)
       assert(rows(path) == w.want(2))
       assert(siblings == Set("store"), s"left after recovery: $siblings")

@@ -44,11 +44,7 @@ trait TextKernelProps extends SparkSpec {
   // RDD-backed rows, so the projection runs in generated code, and
   // CODEGEN_ONLY so a broken doGenCode cannot fall back silently
   protected def codegenRows(texts: Seq[Option[String]], exprs: String*): Seq[Row] = {
-    val key = "spark.sql.codegen.factoryMode"
-    val prev = spark.conf.get(key, "FALLBACK")
-    spark.conf.set(key, "CODEGEN_ONLY")
-    try frame(texts).selectExpr("i" +: exprs: _*).collect().sortBy(_.getInt(0)).toSeq
-    finally spark.conf.set(key, prev)
+    withCodegenOnly(frame(texts).selectExpr("i" +: exprs: _*).collect().sortBy(_.getInt(0)).toSeq)
   }
 
   /** Whether `body` throws with an IllegalArgumentException anywhere in
